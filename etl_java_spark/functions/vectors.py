@@ -104,10 +104,3 @@ def seeded_band_hashes_udf(seed: int, num_planes: int, bands: int):
         return pd.Series(list(hashes))
 
     return band_hashes
-
-
-def l2_distance(a, b) -> Column:
-    diffsq = F.zip_with(
-        _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))
-    )
-    return F.sqrt(F.aggregate(diffsq, F.lit(0.0), lambda acc, v: acc + v))

@@ -234,13 +234,6 @@ def two_phase_agg(
     )
 
 
-def grouping_sets(df: DataFrame, view_name: str, sets_sql: str, agg_sql: str, spark=None) -> DataFrame:
-    """GROUPING SETS via SQL (no DataFrame API for arbitrary sets)."""
-    spark = spark or df.sparkSession
-    df.createOrReplaceTempView(view_name)
-    return spark.sql(f"SELECT {agg_sql} FROM {view_name} GROUP BY GROUPING SETS {sets_sql}")
-
-
 def skew_report(df: DataFrame, key_cols: Sequence[str], top: int = 20) -> DataFrame:
     """Skew diagnosis for a prospective join/agg key: the ``top`` hottest
     keys with their row counts and fraction of the table.

@@ -4,13 +4,10 @@ Reference parity (``/root/reference/src/etl/ETLProcess.java``):
 
 - #13/#15 upsert-by-PK (``:388-427`` live UPDATE-then-INSERT; ``:429-526``
   dead MERGE builders confirm MERGE semantics were intended)
-  -> ``merge_by_pk``: dataframe-level MERGE. When delta-spark is
-  detected on the classpath the call routes through a native Delta
-  ``MERGE INTO``; otherwise (this container ships no Delta jar) the
-  same semantics run as join + union + atomic rewrite (left-anti
-  existing vs updates ∪ new) — the standard emulation (pyspark_guide
-  "CDC / SCD2"). The physical plan is one shuffle on the PK, broadcast
-  when the update side is small.
+  -> ``merge_by_pk``: dataframe-level MERGE as join + union + rewrite
+  (left-anti existing vs updates ∪ new) — the standard emulation
+  (pyspark_guide "CDC / SCD2"). The physical plan is one shuffle on the
+  PK, broadcast when the update side is small.
 - #14 insert-if-absent on ALL columns (``:444-466``)
   -> ``insert_if_absent``: left-anti join on every column + append. The
   incoming batch is deduplicated first — the reference's behavior was
@@ -20,14 +17,23 @@ Reference parity (``/root/reference/src/etl/ETLProcess.java``):
   ``:210``) -> JDBC writer ``batchsize`` option honors the same default;
   atomicity comes from Spark's all-or-nothing job commit protocol rather
   than manual commit/rollback.
+
+Cost model: on a hive-partitioned table ``merge_by_pk`` lists, reads
+and rewrites only the partitions a batch touches — O(touched
+partitions) — and needs no eager checkpoint, because dynamic partition
+overwrite swaps the touched directories in only at job commit (details
+in its docstring). Full rewrites are static overwrites, which delete the
+table before their job runs: ``_rewrite_table`` checkpoints their input
+first and releases it after.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 REFERENCE_BATCH_SIZE = 1000  # ETLProcess.java:210
 
@@ -76,9 +82,10 @@ def merge_dataframes(
     """MERGE semantics as a pure DataFrame op (reference #13/#15).
 
     WHEN MATCHED -> take the update row; WHEN NOT MATCHED -> insert.
-    Updates are deduplicated per PK first (last-wins is undefined in the
-    reference's row loop; we take an arbitrary-but-deterministic row via
-    dropDuplicates) so the anti-join is well-defined.
+    Updates are deduplicated per PK first (dropDuplicates) so the
+    anti-join is well-defined. Which row wins among in-batch duplicate
+    PKs is UNDEFINED — it can change with partitioning and run to run;
+    callers that need last-wins must reduce the batch themselves.
 
     Scale: one shuffle on the PK columns for the anti-join; when
     ``updates`` is small relative to ``existing`` Spark broadcasts it
@@ -90,68 +97,145 @@ def merge_dataframes(
     return kept.unionByName(updates.select(*existing.columns))
 
 
-#: Above this many touched partitions the pruned MERGE falls back to a
-#: full rewrite: the IN-filter expression and the per-partition file
+#: Above this many touched partitions the partition-scoped MERGE falls
+#: back to a full rewrite: the per-partition existence checks and file
 #: churn stop paying for themselves once most of the table is touched.
 MAX_PRUNED_PARTITIONS = 10_000
 
 
-def _touched_partition_filter(updates: DataFrame, partition_by: Sequence[str]):
-    """(filter Column, n_partitions) selecting the partitions present in
-    ``updates``. Returns (None, n) past MAX_PRUNED_PARTITIONS.
+def _touched_partition_dirs(
+    spark: SparkSession, updates: DataFrame, partition_by: Sequence[str]
+) -> list[str] | None:
+    """Sorted relative directories (``c1=v1/c2=v2``) of the partitions
+    ``updates`` touches; None past MAX_PRUNED_PARTITIONS.
 
-    The distinct partition tuples are collected driver-side — bounded by
-    the update batch's partition spread, the same contract as Delta's
-    ``replaceWhere``; this is metadata-sized, not data-sized.
+    The distinct partition tuples are collected driver-side as strings —
+    bounded by the batch's partition spread, the same contract as Delta's
+    ``replaceWhere``; metadata-sized, not data-sized. Directory names come
+    from the writer's own rule (``ExternalCatalogUtils.
+    getPartitionPathString``, applied to ``cast(col AS string)`` in the
+    session time zone): escaping, and ``__HIVE_DEFAULT_PARTITION__`` for
+    NULL, match the directories a partitioned write creates.
     """
-    vals = updates.select(*partition_by).distinct().limit(MAX_PRUNED_PARTITIONS + 1).collect()
-    if len(vals) > MAX_PRUNED_PARTITIONS:
-        return None, len(vals)
-    cond = None
-    for row in vals:
-        term = None
-        for c in partition_by:
-            v = row[c]
-            t = F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-            term = t if term is None else term & t
-        cond = term if cond is None else cond | term
-    return cond, len(vals)
-
-
-def _delta_merge_target(spark: SparkSession, path: str, fmt: str):
-    """DeltaTable handle for ``path`` when the native MERGE backend is
-    usable, else None (→ caller falls back to the parquet emulation).
-
-    Usable means: delta-spark is importable AND its SQL extensions are
-    live on this session's classpath AND (``path`` already holds a Delta
-    table, or the caller asked for ``fmt="delta"``). Detection only —
-    never forces a format change on an existing parquet table.
-    """
-    if fmt not in ("delta", "parquet"):
+    rows = (
+        updates.select(*[F.col(c).cast("string").alias(c) for c in partition_by])
+        .distinct()
+        .limit(MAX_PRUNED_PARTITIONS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_PRUNED_PARTITIONS:
         return None
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return sorted(
+        "/".join(utils.getPartitionPathString(c, row[c]) for c in partition_by)
+        for row in rows
+    )
+
+
+def _some_partition_dir(spark: SparkSession, fs, root, partition_by: Sequence[str]) -> str | None:
+    """Relative path of any existing leaf partition directory under
+    ``root`` — one ``listStatus`` per partition level, never a recursive
+    listing — or None when there is none (including a missing root)."""
+    if not fs.exists(root):
+        return None
+    jvm = spark._jvm
+    utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    rel, cur = [], root
+    for c in partition_by:
+        prefix = utils.escapePathName(c) + "="
+        names = sorted(
+            st.getPath().getName() for st in fs.listStatus(cur) if st.isDirectory()
+        )
+        hit = next((n for n in names if n.startswith(prefix)), None)
+        if hit is None:
+            return None
+        rel.append(hit)
+        cur = jvm.org.apache.hadoop.fs.Path(cur, hit)
+    return "/".join(rel)
+
+
+def _table_schema(
+    data: StructType, updates: DataFrame, partition_by: Sequence[str]
+) -> StructType:
+    """Read schema of a partitioned table: the data columns of ``data``,
+    then the partition columns typed as in ``updates``. Types are never
+    inferred from directory names — inference reads ``part=007`` back as
+    the int 7, and the rewrite would then store the PK a second time
+    under ``part=7``."""
+    return StructType(
+        [f for f in data.fields if f.name not in partition_by]
+        + [StructField(c, updates.schema[c].dataType, True) for c in partition_by]
+    )
+
+
+def _merge_touched_partitions(
+    spark: SparkSession,
+    updates: DataFrame,
+    path: str,
+    pks: list[str],
+    fmt: str,
+    partition_by: list[str],
+    touched: list[str],
+) -> bool:
+    """Partition-scoped MERGE: read only the ``touched`` directories that
+    exist, rewrite exactly those (plus the new ones) by dynamic partition
+    overwrite. Returns False, having done nothing, when ``path`` holds no
+    partition directory to take the table's columns from — a cold start,
+    or a root that only the full-rewrite path can judge."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    root = Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    dirs = [p.toString() for p in (Path(root, rel) for rel in touched) if fs.exists(p)]
+    if dirs:
+        sample = dirs[0]
+    else:
+        rel = _some_partition_dir(spark, fs, root, partition_by)
+        if rel is None:
+            return False
+        sample = Path(root, rel).toString()
+    # Loading a leaf directory as its own root infers no partition
+    # columns: this is the data schema, from one footer.
+    schema = _table_schema(spark.read.format(fmt).load(sample).schema, updates, partition_by)
+    if dirs:
+        existing = (
+            spark.read.format(fmt).schema(schema).option("basePath", path).load(dirs)
+        )
+    else:
+        existing = spark.createDataFrame([], schema)
+    # No checkpoint: dynamic overwrite stages its output under
+    # .spark-staging-* and swaps the touched directories in only at job
+    # commit, after every task has read its source files. A failed job
+    # leaves the table as it was.
+    merge_dataframes(existing, updates, pks).write.format(fmt).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_by).save(path)
+    spark.catalog.refreshByPath(path)
+    return True
+
+
+def _rewrite_table(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    partition_by: Sequence[str] | None = None,
+) -> None:
+    """Overwrite ``path`` with ``df``, which may read ``path`` itself.
+
+    A static overwrite deletes ``path`` before its job runs, so ``df`` is
+    materialised first (eager local checkpoint). Its blocks are released
+    once the write is over, and the stale file listings of ``path`` are
+    dropped from the shared FileStatusCache."""
+    local = df.localCheckpoint(eager=True)
     try:
-        from delta.tables import DeltaTable
-    except ImportError:
-        if fmt == "delta":
-            raise RuntimeError(
-                "merge_by_pk(fmt='delta') requires the delta-spark package "
-                "and Delta jars on the classpath (configure the session via "
-                "delta.configure_spark_with_delta_pip); falling back to "
-                "parquet would silently change the table format"
-            )
-        return None
-    try:
-        if DeltaTable.isDeltaTable(spark, path):
-            return DeltaTable.forPath(spark, path)
-    except Exception:
-        # jar mismatch / extensions not configured — the import alone
-        # doesn't prove the JVM side works
-        if fmt == "delta":
-            raise
-        return None
-    if fmt == "delta":
-        return "create"  # caller creates the table with the first batch
-    return None
+        w = local.write.format(fmt).mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.save(path)
+    finally:
+        local._jdf.queryExecution().logical().rdd().unpersist(False)
+    spark.catalog.refreshByPath(path)
 
 
 def merge_by_pk(
@@ -164,83 +248,69 @@ def merge_by_pk(
 ) -> None:
     """Upsert ``updates`` into the table stored at ``path`` keyed on pks.
 
-    Emulated Delta MERGE. With ``partition_by`` (a hive-partitioned sink
-    table), the merge is PARTITION-PRUNED: only partitions containing
-    updated rows are read (static literal pruning at the parquet scan)
-    and only those are rewritten (dynamic partition overwrite) — cost is
-    O(touched partitions), not O(table), which is the difference between
-    a usable and an unusable upsert at 100 TB. Untouched partitions'
-    files are not rewritten (byte-identical; see test_sinks).
+    Emulated MERGE (merge_dataframes + rewrite). With ``partition_by`` (a
+    hive-partitioned table) the merge is PARTITION-SCOPED, and listing,
+    reading and writing are all O(touched partitions), not O(table):
+
+    1. one collect of the batch's distinct partition values, turned into
+       directory names by Spark's own writer rule;
+    2. one existence check per touched directory — the table root is
+       never listed, so no whole-table listing job runs;
+    3. the existing touched directories are read with ``basePath`` set
+       to the root and an explicit schema (data columns from one footer,
+       partition columns typed as in ``updates``, never inferred);
+    4. the merged frame is written straight through dynamic partition
+       overwrite. No checkpoint is needed: dynamic overwrite stages its
+       output and replaces the touched directories only at job commit,
+       after every task has read its inputs, so a failed job leaves the
+       table unchanged. Untouched partitions' files are not rewritten
+       (byte-identical; see test_sinks).
+
+    A batch that touches only new partitions writes them and rewrites
+    nothing. Past MAX_PRUNED_PARTITIONS touched partitions, and without
+    ``partition_by``, the call is a full read-modify-atomic-rewrite
+    (_rewrite_table); a missing ``path`` is a cold start.
 
     Constraint (shared with every partition-pruned MERGE, incl. Delta's
     replaceWhere): an update must not move a PK across partitions — the
     stale row in the old partition would survive. Partition columns
     should be PK-derived or immutable per PK.
 
-    Without ``partition_by`` this is a full read-modify-atomic-rewrite.
-    When delta-spark is on the classpath (detected, never assumed) and
-    the target is — or is asked to be (``fmt="delta"``) — a Delta table,
-    the same call routes through a native ``MERGE INTO`` instead:
-    file-level conflict detection, no manual localCheckpoint, and
-    Delta's own data-skipping replaces the literal partition filter.
-    The API is stable either way; SURVEY §1.2's "Delta preferred"
-    mapping is closed by this backend selection.
+    ``fmt="delta"`` raises: delta-spark is not a dependency of this
+    engine, and writing parquet instead would silently change the
+    table's format.
     """
     pks = list(pks)
     _check_idents(*pks)
-    dt = _delta_merge_target(spark, path, fmt)
-    if dt == "create":
-        w = updates.dropDuplicates(pks).write.format("delta").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*list(partition_by))
-        w.save(path)
-        return
-    if dt is not None:
-        # null-safe PK equality mirrors merge_dataframes' join-on-pks
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in pks)
-        (
-            dt.alias("t")
-            .merge(updates.dropDuplicates(pks).alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
+    if fmt == "delta":
+        raise RuntimeError(
+            "merge_by_pk(fmt='delta') is not supported: delta-spark is not a "
+            "dependency of this engine, and writing parquet instead would "
+            "silently change the table format"
         )
-        return
+    partition_by = list(partition_by or [])
+    if partition_by:
+        touched = _touched_partition_dirs(spark, updates, partition_by)
+        if touched is not None and _merge_touched_partitions(
+            spark, updates, path, pks, fmt, partition_by, touched
+        ):
+            return
+
     existing = _read_state_or_cold_start(spark, path, fmt)
     if existing is None:
         w = updates.dropDuplicates(pks).write.format(fmt).mode("overwrite")
         if partition_by:
-            w = w.partitionBy(*list(partition_by))
+            w = w.partitionBy(*partition_by)
         w.save(path)
         return
-
     if partition_by:
-        cond, _n = _touched_partition_filter(updates, partition_by)
-        if cond is not None:
-            merged = merge_dataframes(existing.filter(cond), updates, pks)
-            merged_local = merged.localCheckpoint(eager=True)
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                merged_local.write.format(fmt).mode("overwrite").partitionBy(
-                    *list(partition_by)
-                ).save(path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            spark.catalog.refreshByPath(path)
-            return
-        # fall through: touched-partition list too large to prune
-
-    merged = merge_dataframes(existing, updates, pks)
-    # Materialize before overwriting the files we are reading from.
-    merged_local = merged.localCheckpoint(eager=True)
-    w = merged_local.write.format(fmt).mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*list(partition_by))
-    w.save(path)
-    # Drop stale file listings from the shared FileStatusCache so later
-    # reads of this path don't reference the overwritten part files.
-    spark.catalog.refreshByPath(path)
+        # re-read with typed partition columns (see _table_schema)
+        existing = (
+            spark.read.format(fmt)
+            .schema(_table_schema(existing.schema, updates, partition_by))
+            .load(path)
+        )
+    _rewrite_table(spark, merge_dataframes(existing, updates, pks), path, fmt, partition_by)
 
 
 def insert_if_absent_dataframes(existing: DataFrame, new: DataFrame) -> DataFrame:
@@ -264,8 +334,10 @@ def insert_if_absent(
     if existing is None:
         new.dropDuplicates().write.format(fmt).mode("overwrite").save(path)
         return
-    to_add = insert_if_absent_dataframes(existing, new).localCheckpoint(eager=True)
-    to_add.write.format(fmt).mode("append").save(path)
+    # An append deletes nothing, so the rows to add need no checkpoint:
+    # the job reads the existing files it listed at planning time and
+    # its new files appear only at job commit.
+    insert_if_absent_dataframes(existing, new).write.format(fmt).mode("append").save(path)
 
 
 def write_jdbc(
@@ -406,12 +478,6 @@ def jdbc_execute(
         conn.close()
 
 
-def checked_columns(existing_cols: Iterable[str], incoming: DataFrame) -> None:
-    missing = [c for c in existing_cols if c not in incoming.columns]
-    if missing:
-        raise ValueError(f"incoming frame missing destination columns: {missing}")
-
-
 def apply_cdc_dataframes(
     state: DataFrame | None,
     changes: DataFrame,
@@ -497,17 +563,14 @@ def apply_cdc_by_pk(
     fmt: str = "parquet",
 ) -> None:
     """Apply a CDC batch to the table at ``path`` (apply_cdc_dataframes
-    + read-modify-atomic-rewrite, merge_by_pk's storage discipline).
-    At warehouse scale the same reconcile runs partition-pruned or as a
-    native Delta MERGE with whenMatchedDelete — this keeps the parquet
-    emulation exact."""
+    + read-modify-atomic-rewrite through _rewrite_table). At warehouse
+    scale the same reconcile runs partition-scoped like merge_by_pk, or
+    as a native Delta MERGE with whenMatchedDelete — this keeps the
+    parquet emulation exact."""
     pks = list(pks)
     _check_idents(*pks)
     state = _read_state_or_cold_start(spark, path, fmt)
-    merged = apply_cdc_dataframes(state, changes, pks, op_col, seq_col)
-    merged_local = merged.localCheckpoint(eager=True)
-    merged_local.write.format(fmt).mode("overwrite").save(path)
-    spark.catalog.refreshByPath(path)
+    _rewrite_table(spark, apply_cdc_dataframes(state, changes, pks, op_col, seq_col), path, fmt)
 
 
 def read_cdc_state(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
@@ -608,8 +671,8 @@ def merge_by_pk_evolve(
     ``mergeSchema``/autoMerge contract, emulated on parquet. Same-name
     type conflicts raise rather than cast silently.
 
-    The evolving half is align_schemas_evolve; storage discipline
-    (read-modify-atomic-rewrite + cache refresh) is merge_by_pk's.
+    The evolving half is align_schemas_evolve; storage discipline is
+    _rewrite_table's (read-modify-atomic-rewrite + cache refresh).
     """
     pks = list(pks)
     _check_idents(*pks)
@@ -620,7 +683,4 @@ def merge_by_pk_evolve(
         ).save(path)
         return
     ex_w, up_w = align_schemas_evolve(existing, updates)
-    merged = merge_dataframes(ex_w, up_w, pks)
-    merged_local = merged.localCheckpoint(eager=True)
-    merged_local.write.format(fmt).mode("overwrite").save(path)
-    spark.catalog.refreshByPath(path)
+    _rewrite_table(spark, merge_dataframes(ex_w, up_w, pks), path, fmt)

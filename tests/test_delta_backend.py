@@ -1,10 +1,8 @@
-"""Backend selection for merge_by_pk (VERDICT r5 #8 / SURVEY §1.2).
+"""merge_by_pk's format handling (VERDICT r5 #8 / SURVEY §1.2).
 
-The container ships no delta-spark, so the native-MERGE leg auto-skips;
-what MUST hold everywhere is the selection logic itself: parquet targets
-keep using the emulated rewrite with identical results, and asking for
-fmt="delta" without the jar fails loudly instead of silently writing
-parquet.
+delta-spark is not a dependency of this engine: parquet targets use the
+emulated rewrite, and asking for fmt="delta" fails loudly instead of
+silently writing parquet.
 """
 
 from __future__ import annotations
@@ -13,45 +11,23 @@ import os
 
 import pytest
 
-from etl_java_spark.sinks.writers import _delta_merge_target, merge_by_pk
-
-try:
-    import delta  # noqa: F401
-
-    HAVE_DELTA = True
-except ImportError:
-    HAVE_DELTA = False
+from etl_java_spark.sinks.writers import merge_by_pk
 
 
 def test_parquet_target_selects_emulation(spark, tmp_path):
-    """Without delta-spark, detection returns None and the emulated
-    rewrite produces the merged table."""
+    """The emulated rewrite produces the merged parquet table."""
     p = os.path.join(str(tmp_path), "t")
     base = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
     merge_by_pk(spark, base, p, ["id"])
-    if not HAVE_DELTA:
-        assert _delta_merge_target(spark, p, "parquet") is None
     upd = spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"])
     merge_by_pk(spark, upd, p, ["id"])
     got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
-@pytest.mark.skipif(HAVE_DELTA, reason="delta-spark present: the request is honored natively")
 def test_delta_fmt_without_jar_fails_loudly(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], ["id", "v"])
+    d = os.path.join(str(tmp_path), "d")
     with pytest.raises(RuntimeError, match="delta-spark"):
-        merge_by_pk(spark, df, os.path.join(str(tmp_path), "d"), ["id"], fmt="delta")
-
-
-@pytest.mark.skipif(not HAVE_DELTA, reason="delta-spark not on classpath")
-def test_native_delta_merge_roundtrip(spark, tmp_path):
-    """With the jar present: create-on-first-batch, then MERGE INTO
-    upserts (same semantics the emulated path guarantees)."""
-    p = os.path.join(str(tmp_path), "d")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
-    merge_by_pk(spark, base, p, ["id"], fmt="delta")
-    upd = spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"])
-    merge_by_pk(spark, upd, p, ["id"], fmt="delta")
-    got = {(r["id"], r["v"]) for r in spark.read.format("delta").load(p).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
+        merge_by_pk(spark, df, d, ["id"], fmt="delta")
+    assert not os.path.exists(d)

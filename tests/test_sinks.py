@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
 from etl_java_spark.sinks.writers import (
     insert_if_absent,
     insert_if_absent_dataframes,
@@ -153,3 +158,179 @@ def test_stateful_writers_cold_start_bootstrap(spark, tmp_path):
     path = str(tmp_path / "cdc_cold")
     apply_cdc_by_pk(spark, cdc, path, ["id"])
     assert _rows(read_cdc_state(spark, path)) == [(1, 1, "a")]
+
+
+# ---------------------------------------------------------------------------
+# Partition-scoped merge_by_pk: checked on stored rows and directory names,
+# read directory by directory, never through a partition-inferring read.
+
+
+def _stored(path):
+    """{partition directory: sorted data rows} of a table partitioned on
+    one column, read with pyarrow directory by directory (so no partition
+    value is parsed or inferred)."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for d in sorted(os.listdir(path)):
+        full = os.path.join(path, d)
+        if os.path.isdir(full) and not d.startswith((".", "_")):
+            out[d] = sorted(tuple(r.values()) for r in pq.read_table(full).to_pylist())
+    return out
+
+
+def _files_under(path, part_dir):
+    return {k: v for k, v in _partition_files(path).items() if k.startswith(part_dir + "/")}
+
+
+_PARTITION_CASES = {
+    # leading-zero strings: an inferring read turns both into ints
+    "leading_zero": ("string", "007", "010", "part=007", "part=010"),
+    "null": ("string", None, "x", "part=__HIVE_DEFAULT_PARTITION__", "part=x"),
+    "escaped": ("string", "a b:c/d", "plain", "part=a b%3Ac%2Fd", "part=plain"),
+    "date": ("date", "2024-01-01", "2024-01-02", "part=2024-01-01", "part=2024-01-02"),
+}
+
+
+@pytest.mark.parametrize(
+    "case,scoped",
+    # the full rewrite shares the typed read; its one regression case
+    [(c, True) for c in sorted(_PARTITION_CASES)] + [("leading_zero", False)],
+    ids=[f"{c}-scoped" for c in sorted(_PARTITION_CASES)] + ["leading_zero-full_rewrite"],
+)
+def test_merge_by_pk_partition_values_roundtrip(spark, tmp_path, monkeypatch, case, scoped):
+    """Touched partition values that are easy to get wrong (numeric-looking
+    strings, NULL, characters the writer escapes, dates) are matched to
+    their own directories: the PK is stored once, under the directory
+    Spark's writer names, and the untouched partition is not rewritten."""
+    from etl_java_spark.sinks import writers
+
+    typ, hot, cold, hot_dir, cold_dir = _PARTITION_CASES[case]
+    path = str(tmp_path / "t")
+
+    def frame(rows):
+        df = spark.createDataFrame(rows, "id int, part string, v string")
+        return df.withColumn("part", F.col("part").cast(typ))
+
+    base = frame([(1, hot, "a"), (2, hot, "b"), (3, cold, "c")])
+    merge_by_pk(spark, base, path, ["id"], partition_by=["part"])
+    assert _stored(path) == {hot_dir: [(1, "a"), (2, "b")], cold_dir: [(3, "c")]}
+    cold_files = _files_under(path, cold_dir)
+
+    if not scoped:
+        monkeypatch.setattr(writers, "MAX_PRUNED_PARTITIONS", 0)
+    merge_by_pk(spark, frame([(1, hot, "A"), (4, hot, "D")]), path, ["id"], partition_by=["part"])
+    assert _stored(path) == {
+        hot_dir: [(1, "A"), (2, "b"), (4, "D")],
+        cold_dir: [(3, "c")],
+    }
+    if scoped:
+        assert _files_under(path, cold_dir) == cold_files
+
+
+def test_merge_by_pk_nested_and_all_new_partitions(spark, tmp_path):
+    """Two partition columns: a touched leaf is rewritten and its siblings
+    are not; a batch of only new partitions (found without listing the
+    table) writes them and rewrites no existing partition."""
+    path = str(tmp_path / "t")
+    schema = "id int, v string, y int, m string"
+
+    def merge(rows):
+        merge_by_pk(spark, spark.createDataFrame(rows, schema), path, ["id"], partition_by=["y", "m"])
+
+    merge([(1, "a", 2024, "007"), (2, "b", 2024, "010"), (3, "c", 2023, "007")])
+    before = _partition_files(path)
+    merge([(1, "A", 2024, "007")])
+    after = _partition_files(path)
+    untouched = {k: v for k, v in before.items() if not k.startswith("y=2024/m=007/")}
+    assert {k: v for k, v in after.items() if k in before} == untouched
+    merge([(4, "d", 2025, "007"), (5, "e", 2024, None)])
+    assert {k: v for k, v in _partition_files(path).items() if k in after} == after
+    assert sorted(
+        os.path.relpath(d, path) for d, _, files in os.walk(path)
+        if any(f.endswith(".parquet") for f in files)
+    ) == [
+        "y=2023/m=007", "y=2024/m=007", "y=2024/m=010",
+        "y=2024/m=__HIVE_DEFAULT_PARTITION__", "y=2025/m=007",
+    ]
+    assert _rows(spark.read.schema(schema).parquet(path)) == [
+        (1, "A", 2024, "007"), (2, "b", 2024, "010"), (3, "c", 2023, "007"),
+        (4, "d", 2025, "007"), (5, "e", 2024, None),
+    ]
+
+
+@pytest.mark.parametrize("damage", ["garbage_file", "empty_dir"])
+def test_merge_by_pk_unreadable_touched_partition_raises(spark, tmp_path, damage):
+    """A touched partition directory that exists but cannot be read raises
+    and leaves the table as it was — it is never taken for a cold start."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "y")], "id int, part string, v string"
+    )
+    merge_by_pk(spark, base, path, ["id"], partition_by=["part"])
+    if damage == "garbage_file":
+        with open(os.path.join(path, "part=a", "part-99999-damaged.parquet"), "wb") as f:
+            f.write(b"not a parquet file")
+        touched = "a"
+    else:
+        os.makedirs(os.path.join(path, "part=c"))
+        touched = "c"
+    before = _partition_files(path)
+    upd = spark.createDataFrame([(1, touched, "X")], "id int, part string, v string")
+    with pytest.raises((PySparkException, Py4JJavaError)):
+        merge_by_pk(spark, upd, path, ["id"], partition_by=["part"])
+    assert _partition_files(path) == before
+    assert sorted(d for d in os.listdir(path) if not d.startswith(".")) == sorted(
+        ["_SUCCESS", "part=a", "part=b"] + (["part=c"] if damage == "empty_dir" else [])
+    )
+
+
+def test_writers_release_blocks_and_restore_conf(spark, tmp_path, monkeypatch):
+    """No rewriting writer leaves a persisted RDD behind, and none leaves
+    a session conf key changed — also when merge_by_pk's write raises."""
+    from pyspark.sql import DataFrameWriter
+
+    from etl_java_spark.sinks import writers
+
+    rows = spark.createDataFrame(
+        [(1, "p", "a"), (2, "q", "b")], "id int, part string, v string"
+    )
+    cdc = spark.createDataFrame([(1, "U", 1, "a")], "id int, op string, seq long, v string")
+
+    def fallback(p):
+        with monkeypatch.context() as m:
+            m.setattr(writers, "MAX_PRUNED_PARTITIONS", 0)
+            merge_by_pk(spark, rows, p, ["id"], partition_by=["part"])
+
+    calls = [
+        ("merge_scoped", lambda p: merge_by_pk(spark, rows, p, ["id"], partition_by=["part"])),
+        ("merge_fallback", fallback),
+        ("merge_unpartitioned", lambda p: merge_by_pk(spark, rows, p, ["id"])),
+        ("evolve", lambda p: writers.merge_by_pk_evolve(spark, rows, p, ["id"])),
+        ("cdc", lambda p: writers.apply_cdc_by_pk(spark, cdc, p, ["id"])),
+        ("absent", lambda p: insert_if_absent(spark, rows, p)),
+    ]
+    jsc = spark.sparkContext._jsc
+    conf = dict(spark.conf.getAll)
+
+    def check(name, call):
+        n = jsc.getPersistentRDDs().size()
+        call(str(tmp_path / name))
+        assert jsc.getPersistentRDDs().size() == n, name
+        assert dict(spark.conf.getAll) == conf, name
+
+    for name, call in calls:
+        check(name, call)  # cold start
+        check(name, call)  # rewrite of the existing table
+
+    def boom(self, *a, **k):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "save", boom)
+    for name, call in calls[:2]:  # partition-scoped, then _rewrite_table
+        with pytest.raises(RuntimeError, match="write failed"):
+            check(name, call)
+        assert dict(spark.conf.getAll) == conf, name
