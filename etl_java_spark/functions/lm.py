@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import make_checkpointer, materialize, release
+
 
 def token_array(col, pattern: str = "[^a-z0-9]+") -> Column:
     """Lowercased, empty-filtered token array (ASCII fixture tokenizer)."""
@@ -102,7 +104,7 @@ def bigram_fluency(
     doc_bg = (
         pairs.groupBy(id_col, "w1", "w2")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     c_bigram = doc_bg.groupBy("w1", "w2").agg(F.sum("n").alias("c12"))
     toks = docs.select(F.explode(toks_col).alias("w"))
@@ -256,7 +258,7 @@ def trigram_fluency(
     doc_tri = (
         tri.groupBy(id_col, "w1", "w2", "w3")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     c_tri = doc_tri.groupBy("w1", "w2", "w3").agg(F.sum("n").alias("c123"))
     c_ctx2 = c_tri.groupBy("w1", "w2").agg(F.sum("c123").alias("c12"))
@@ -413,11 +415,11 @@ def kneser_ney_fluency(
     doc_bg = (
         pairs.groupBy(id_col, "w1", "w2")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # bigram TYPE table: c12 per type; every model stat derives from it
     bi = doc_bg.groupBy("w1", "w2").agg(F.sum("n").alias("c12"))
-    bi = bi.localCheckpoint(eager=True)
+    bi = materialize(bi)
     hist = bi.groupBy("w1").agg(
         F.sum("c12").alias("c1h"),            # c(w1 .)
         F.count("*").alias("n1f"),            # N1+(w1 .)
@@ -480,10 +482,12 @@ def bpe_merge_discovery(
     """
     from ..functions.text import tokens as _tokens
 
+    seqs: list[DataFrame] = []
+    ckpt = make_checkpointer(seqs)
     seq = docs.select(
         F.col(id_col),
         F.array_join(_tokens(text_col, pattern), "  ").alias("__seq"),
-    ).localCheckpoint(eager=True)
+    ).transform(ckpt)
     out = None
     for r in range(1, rounds + 1):
         toks = F.split(F.col("__seq"), "  ")
@@ -501,7 +505,7 @@ def bpe_merge_discovery(
             .orderBy(F.col("pair_count").desc(), F.col("w1").asc(), F.col("w2").asc())
             .limit(1)
             .select(F.lit(r).alias("round"), "w1", "w2", "pair_count")
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         out = top if out is None else out.unionByName(top)
         seq = (
@@ -514,6 +518,7 @@ def bpe_merge_discovery(
                            " concat(' ', w1, chr(31), w2, ' '))")
                 ).alias("__seq"),
             )
-            .localCheckpoint(eager=True)
+            .transform(ckpt)
         )
+    release(*seqs)  # the merge table reads no sequence round
     return out

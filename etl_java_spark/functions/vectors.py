@@ -37,49 +37,23 @@ def cosine(a, b) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
 
 
-def plane_band_hashes_udf(planes: list[list[float]], bands: int):
+def seeded_band_hashes_udf(seed: int, num_planes: int, bands: int):
     """Arrow-vectorized random-hyperplane band hashes.
 
     Returns a pandas_udf: array<float> -> array<long> of ``bands`` band
     hashes, where each band hash packs the sign bits of dot(vec, plane)
-    for its slice of planes (first plane = MSB).
+    for its slice of ``num_planes`` planes (first plane = MSB). The plane
+    matrix is derived lazily from the FIRST Arrow batch's vector
+    dimension (deterministic ``RandomState(seed)``), so callers don't
+    need a driver-side ``.first()`` job just to learn the embedding dim —
+    one fewer job per query, and no driver/executor dim mismatch at
+    scale.
 
     Dense projections are linear algebra — a numpy matmul over the whole
     Arrow batch beats per-row Catalyst higher-order lambdas by ~10x
     (measured at sf0.1); this is the documented exception to the
     JVM-only rule (pyspark_guide: vectorized pandas UDFs for custom
     numeric kernels).
-    """
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    num_planes = len(planes)
-    if num_planes % bands:
-        raise ValueError("num_planes must be divisible by bands")
-    per_band = num_planes // bands
-    P = np.asarray(planes, dtype=np.float64).T  # dim x planes
-    pw = (1 << np.arange(per_band - 1, -1, -1)).astype(np.int64)
-
-    @pandas_udf("array<bigint>")
-    def band_hashes(s: pd.Series) -> pd.Series:
-        M = np.stack(s.to_numpy()).astype(np.float64)  # batch x dim
-        bits = (M @ P) >= 0.0  # batch x planes
-        hashes = np.stack(
-            [bits[:, b * per_band : (b + 1) * per_band].astype(np.int64) @ pw for b in range(bands)],
-            axis=1,
-        )
-        return pd.Series(list(hashes))
-
-    return band_hashes
-
-
-def seeded_band_hashes_udf(seed: int, num_planes: int, bands: int):
-    """Like :func:`plane_band_hashes_udf`, but derives the plane matrix
-    lazily from the FIRST Arrow batch's vector dimension (deterministic
-    ``RandomState(seed)``), so callers don't need a driver-side
-    ``.first()`` job just to learn the embedding dim — one fewer job per
-    query, and no driver/executor dim mismatch at scale.
     """
     import numpy as np
 

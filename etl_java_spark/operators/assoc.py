@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import make_checkpointer, materialize, release
+
 
 def copurchase_lift(
     facts: DataFrame,
@@ -214,7 +216,7 @@ def markov_attribution(
         # swap measured q340 7.4 -> 15.1s with persist here — the
         # attribution loop's plans re-embed this subtree every round
         # without the checkpoint's lineage truncation.
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     # successor via lead() over the SAME (user, rn) partitioning — a
     # (u, rn) self-join here was the hot spot (a full shuffle join of
     # the path table with itself; measured ~2x the whole query)
@@ -238,7 +240,7 @@ def markov_attribution(
     trans = counts.join(tot, "__s").select(
         "__s", "__to",
         (F.col("__n").cast("double") / F.col("__tot").cast("double")).alias("__p"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     channels = [
         r["__s"] for r in trans.select("__s").distinct().collect()
         if r["__s"] not in ("START", "CONV", "NULL")
@@ -250,7 +252,7 @@ def markov_attribution(
     vtrans = (
         trans.crossJoin(F.broadcast(variants))
         .filter((F.col("__var") == "full") | (F.col("__s") != F.col("__var")))
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     v = variants.select("__var", F.lit("CONV").alias("__st"), F.lit(1.0).alias("__val"))
     for _ in range(steps):
@@ -395,7 +397,7 @@ def shapley_attribution(
     # v is <= 2^c rows but every per-channel phi branch references it
     # twice — pin it so the events scan and user aggregate run ONCE,
     # not 2c times (plan audit measured 16 scans without this)
-    v = v.localCheckpoint(eager=True)
+    v = materialize(v)
 
     def phi_for(ch: str, b: int) -> DataFrame:
         # weight |S|! (c-|S|-1)! selected by popcount of the S mask
@@ -460,16 +462,18 @@ def markov_stationary(
     alphabet don't have them). Returns (state, prob) after ``sweeps``
     sweeps, one row per state that appears in either column.
     """
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     t = transitions.select(
         F.col(prev_col).alias("pv"),
         F.col(next_col).alias("nx"),
         F.col(p_col).cast("double").alias("p"),
-    ).localCheckpoint(eager=True)
+    ).transform(ckpt)
     states = (
         t.select(F.col("pv").alias("state"))
         .unionByName(t.select(F.col("nx").alias("state")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(ckpt)
     )
     k = states.count()
     v = states.withColumn("prob", F.lit(1.0 / k))
@@ -490,8 +494,10 @@ def markov_stationary(
             .select(
                 "state", F.coalesce("prob", F.lit(0.0)).alias("prob")
             )
-            .localCheckpoint(eager=True)
+            .transform(ckpt)
         )
+    # zero sweeps: the result is a projection of ``states``
+    release(*held, keep=[v if sweeps else states])
     return v
 
 
@@ -584,7 +590,7 @@ def theils_u(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
             F.col(y_col).cast("string").alias("y"),
         )
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     cx = cells.groupBy("x").agg(F.sum("c").cast("long").alias("c"))
     cy = cells.groupBy("y").agg(F.sum("c").cast("long").alias("c"))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import DEFAULT_TOKEN_PATTERN, word_shingles
 from ..functions.vectors import cosine
+from ..plans.checkpoints import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -502,7 +503,7 @@ def source_overlap(
     gs = df.select(F.col(group_col).alias("__g"), sh)
     if hash_shingles:
         gs = gs.select("__g", F.xxhash64("__sh").alias("__sh"))
-    gs = gs.distinct().localCheckpoint(eager=True)
+    gs = gs.distinct().transform(materialize)
     sizes = gs.groupBy("__g").agg(F.count("*").alias("sz"))
     inter = (
         gs.alias("a")
@@ -585,7 +586,7 @@ def dsir_importance(
     doc_tok = (
         toks.groupBy(id_col, "__t", "w")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     counts = doc_tok.groupBy("w").agg(
         F.sum(F.when(F.col("__t"), F.col("n")).otherwise(F.lit(0))).alias("ct"),
@@ -679,7 +680,6 @@ def dedup_cluster_profile(
     pairs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """What dedup will actually delete, BEFORE deleting it: resolve
     near-dup pairs into clusters (``dedup.dedup_clusters``), keep the
@@ -692,13 +692,13 @@ def dedup_cluster_profile(
     Docs in no pair are size-1 clusters (zero loss) so the histogram
     partitions the whole corpus. Returns (cluster_size, n_clusters,
     n_docs, tokens_lost) sorted by size. Cost on top of the pair list:
-    label propagation (O(log diameter) rounds of small joins) + one
-    token-count scan + two group-bys — nothing quadratic.
+    label propagation (one round of small joins per hop of the longest
+    chain) + one token-count scan + two group-bys — nothing quadratic.
     """
     from ..functions.text import token_count
     from . import dedup as DD
 
-    labels = DD.dedup_clusters(pairs, checkpoint_dir=checkpoint_dir)
+    labels = DD.dedup_clusters(pairs)
     toks = df.select(
         F.col(id_col), token_count(text_col).alias("__tok")
     )
@@ -1740,7 +1740,7 @@ def conditional_entropy(
     )
     big = pairs.groupBy("x", "y").agg(
         F.count("*").cast("long").alias("cxy")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     uni = big.groupBy("x").agg(F.sum("cxy").cast("long").alias("cx"))
     n = big.agg(F.sum("cxy").cast("long").alias("n"))
     ln2 = 0.6931471805599453

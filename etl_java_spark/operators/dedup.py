@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, tokens, word_shingles
 from ..functions.vectors import cosine
+from ..plans.checkpoints import materialize
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -227,7 +228,7 @@ def minhash_incremental_pairs(
     ).select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
     pairs = cross.unionByName(within).filter(F.col("id_a") != F.col("id_b")).distinct()
     # eager is load-bearing — see minhash_dedup_pairs (r13 A/B)
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs)
     corpus = (
         old_df.select(F.col(id_col), F.col(text_col))
         .unionByName(new_df.select(F.col(id_col), F.col(text_col)))
@@ -416,7 +417,7 @@ def minhash_dedup_pairs(
     # only the distinct's shuffle files, not materialized blocks, and
     # measured q73 4.2->5.2s / q627 6.5->9.0s; the extra eager job is
     # cheaper than the triple reduce-side re-read.
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs)
     return jaccard_verify(df, pairs, text_col, id_col, shingle_n, threshold)
 
 
@@ -636,24 +637,32 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Resolve near-dup pairs into clusters: (id, cluster_id) where
     cluster_id = min doc id reachable through the pair graph.
 
-    Iterative min-label propagation (the standard large-graph connected-
-    components recipe — alternating small joins, converging in
-    O(log(diameter)) rounds; near-dup clusters are tiny so this is
-    effectively 2-3 rounds). Each round is two shuffles on id; no driver-
-    side graph materialization, so it scales with the pair list.
+    Iterative min-label propagation: each round every id takes the
+    smallest label among itself and its neighbors, so a label travels
+    one hop per round and the round count grows with the LONGEST CHAIN
+    in the pair graph (a path of n docs needs about n rounds), not with
+    log(diameter). Near-dup clusters are usually small and dense, which
+    makes this 2-3 rounds in practice. ``max_iter`` caps the rounds and
+    the loop stops there SILENTLY: a chain longer than ``max_iter``
+    comes back split into several clusters, with no error. Each round
+    is two shuffles on id; no driver-side graph materialization, so it
+    scales with the pair list.
 
-    ``checkpoint_dir`` (HDFS/S3 path) switches the per-round
-    materialization to reliable checkpoints that survive executor loss —
-    the production setting on a real cluster (see plans/checkpoints).
+    Every round is materialized under the session's checkpoint policy
+    (plans/checkpoints: reliable when the session was started with
+    ``spark.checkpoint.dir``). The edge list and every superseded round
+    are released before returning; the result is the last round's
+    materialization.
     """
-    from ..plans.checkpoints import make_checkpointer
+    from ..plans import checkpoints
 
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    # looked up at call time, so a wrapped make_checkpointer sees the rounds
+    ckpt = checkpoints.make_checkpointer(held)
     edges = ckpt(  # re-read every iteration — never recompute
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -698,6 +707,8 @@ def dedup_clusters(
         if new_sum is None or (prev_sum is not None and new_sum == prev_sum):
             break
         prev_sum = new_sum
+    # zero rounds: the result is a projection of ``edges``
+    checkpoints.release(*held, keep=[labels if max_iter else edges])
     return labels
 
 
@@ -945,7 +956,6 @@ def cluster_golden_records(
     pairs: DataFrame,
     id_col: str,
     max_cols: list[str] | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Survivorship: resolve match pairs into clusters and emit ONE
     golden record per multi-member cluster — the MDM merge step after
@@ -963,7 +973,7 @@ def cluster_golden_records(
     dedup_clusters); the survivor join is an equi-join on the min id;
     the MAX aggregation is map-side combinable on cluster_id.
     """
-    labels = dedup_clusters(pairs, checkpoint_dir=checkpoint_dir)
+    labels = dedup_clusters(pairs)
     members = df.join(
         labels.withColumnRenamed("id", id_col), id_col, "inner"
     )

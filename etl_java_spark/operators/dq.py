@@ -25,6 +25,8 @@ from typing import Literal
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
+
 
 @dataclass(frozen=True)
 class Check:
@@ -252,7 +254,7 @@ def equidepth_histogram(
     NTILE's exact arithmetic (first n % k bins get one extra row), so
     any engine's NTILE reproduces the bins bitwise.
 
-    Returns one row per bin: (bin, n_rows, lo, hi).
+    Returns one row per bin: (bin, n_rows, lo, hi), ordered by ``bin``.
     """
     from .transforms import assign_global_ids
 
@@ -284,6 +286,7 @@ def equidepth_histogram(
             F.min(value_col).alias("lo"),
             F.max(value_col).alias("hi"),
         )
+        .orderBy("bin")
     )
 
 
@@ -1710,7 +1713,7 @@ def topk_stability(
         per.withColumn("__r", F.row_number().over(wr))
         .filter(F.col("__r") <= k)
         .select("p", "key")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     periods = (
         tk.select("p")
@@ -1899,7 +1902,7 @@ def bin_width_rules(
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = per.select(
         "v", "c", F.sum("c").over(w).cast("long").alias("cum")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     vd = F.col("v").cast(d38)
     mom = cum.agg(
         F.max("cum").cast("long").alias("n"),
@@ -2221,7 +2224,7 @@ def quantile_share_ratio(
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = per.select(
         "v", "c", F.sum("c").over(w).cast("long").alias("cum")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     tot = cum.agg(
         F.max("cum").cast("long").alias("n"),
         F.sum((F.col("c").cast(d38) * F.col("v")).cast(d38))

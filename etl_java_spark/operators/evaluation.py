@@ -32,6 +32,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
+
 
 def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -1610,7 +1612,7 @@ def _ordinal_pair_counts(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
         .groupBy("x", "y")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a, b = cells.alias("a"), cells.alias("b")
     prod = (F.col("a.c").cast(d38) * F.col("b.c")).cast(d38)
@@ -2197,7 +2199,7 @@ def weighted_kappa(
         df.filter(a.isNotNull() & b.isNotNull())
         .groupBy(a.alias("ca"), b.alias("cb"))
         .agg(F.count("*").cast("long").alias("o"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     cats = (
         cells.select(F.col("ca").alias("cat"))
@@ -2268,7 +2270,7 @@ def gwets_ac1(
         df.filter(a.isNotNull() & b.isNotNull())
         .groupBy(a.alias("ca"), b.alias("cb"))
         .agg(F.count("*").cast("long").alias("o"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     n = cells.agg(
         F.sum("o").cast("long").alias("n"),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
+
 from .sampling import key_bucket
 
 
@@ -2030,7 +2032,7 @@ def brown_forsythe(
         .filter(F.col("g").isNotNull() & F.col("v").isNotNull())
         .groupBy("g", "v")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     ng = cells.groupBy("g").agg(F.sum("c").cast("long").alias("n"))
     wcum = (
@@ -2330,7 +2332,7 @@ def quade_test(
     base = (
         df.select(b.alias("blk"), t.alias("trt"), v.alias("val"))
         .filter(F.col("val").isNotNull())
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a, c = base.alias("a"), base.alias("c")
     r2 = a.join(c, F.col("a.blk") == F.col("c.blk")).groupBy(
@@ -2371,7 +2373,7 @@ def quade_test(
                 * (F.col("r2") - (F.col("k") + 1)).cast(d38)
             ).cast(d38).alias("u"),
         )
-        .localCheckpoint(eager=True)  # feeds both A and B sums
+        .transform(materialize)  # feeds both A and B sums
     )
     a16 = u.agg(
         F.sum((F.col("u") * F.col("u")).cast(d38)).cast(d38).alias("a16"),
@@ -2897,7 +2899,7 @@ def dunn_posthoc(
             .cast("decimal(38,0)")
             .alias("rs2"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     tot = r2.agg(
         F.sum("t").cast("long").alias("nn"),
@@ -2978,7 +2980,7 @@ def stuart_maxwell_3(
         df.filter(a.isNotNull() & b.isNotNull())
         .groupBy(a.alias("ca"), b.alias("cb"))
         .agg(F.count("*").cast("long").alias("o"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     cats = (
         cells.select(F.col("ca").alias("cat"))
@@ -3072,7 +3074,7 @@ def kendalls_w(
     base = (
         df.select(b.alias("blk"), t.alias("trt"), v.alias("val"))
         .filter(F.col("val").isNotNull())
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a, c = base.alias("a"), base.alias("c")
     r2 = a.join(c, F.col("a.blk") == F.col("c.blk")).groupBy(
@@ -3284,7 +3286,7 @@ def yuen_t(
         w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
         cum = per.select(
             "v", "c", F.sum("c").over(w).cast("long").alias("cum")
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
         tot = cum.agg(F.max("cum").cast("long").alias("n"))
         # g = floor(trim * n); kept ranks (g, n - g]
         g = F.floor(F.lit(float(trim)) * F.col("n").cast("double")).cast(

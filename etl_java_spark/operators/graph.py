@@ -13,8 +13,12 @@ driver-side structure — and every iteration is one join + one
 map-side-combinable aggregate on the node key, i.e. two shuffles that
 reuse the same hash partitioning (AQE keeps them co-partitioned). Edge
 lists of any size stream through; a checkpoint per round caps lineage
-growth exactly as in ``dedup_clusters`` — reliable (``checkpoint_dir``)
-on a real cluster, executor-local in local mode (plans/checkpoints).
+growth exactly as in ``dedup_clusters``, under the session's policy
+(plans/checkpoints: reliable when the session was started with
+``spark.checkpoint.dir``, executor-local otherwise). An iterative
+operator releases everything it materialized that its result does not
+read — the edge list, pinned static sides, superseded rounds — before
+it returns.
 
 Determinism: per-edge contributions are correctly-rounded double
 divisions; per-node sums go through an exact decimal cast (order-
@@ -26,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..plans.checkpoints import make_checkpointer, materialize, release
 
 
 def out_degrees(edges: DataFrame, src: str = "src") -> DataFrame:
@@ -44,7 +50,7 @@ def _pin(df: DataFrame, *keys: str) -> DataFrame:
     the big side every round. Fault tolerance is lineage recompute
     (fine for a once-built static table; per-round STATE keeps its
     checkpoint treatment). Costs one extra build-time shuffle of the
-    table, repaid after the first round. Callers unpersist() when
+    table, repaid after the first round. Callers ``release()`` it when
     iteration ends — safe because every returned frame is
     checkpoint-materialized first.
 
@@ -97,7 +103,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -116,12 +121,8 @@ def pagerank(
     no in-edges. Returns (node, rank) for every node appearing as src
     or dst.
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    # Reliable checkpoints (checkpoint_dir=HDFS/S3 path) survive executor
-    # loss mid-iteration — the production setting on a real cluster;
-    # localCheckpoint is the local-mode fast default (see plans/checkpoints).
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     # Materialize the edge list ONCE — the caller's edge plan may be an
     # arbitrary join tree, and nodes/degrees/iterations all re-read it.
     e = ckpt(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")))
@@ -165,12 +166,12 @@ def pagerank(
         # estimates), but against pinned, known-partitioned inputs the
         # lazy chain wins (3.7s vs 4.6s pinned+per-round at sf0.1,
         # bit-identical). Checkpoint every 4th round to cap lineage on
-        # long runs, and always after the last round so the returned
-        # frame survives unpersist().
-        if (it + 1) % 4 == 0 or it == iterations - 1:
+        # long runs; the returned frame is checkpointed after the loop so
+        # it survives the release of the pinned sides.
+        if (it + 1) % 4 == 0 and it < iterations - 1:
             ranks = ckpt(ranks)
-    ed.unpersist()
-    nodes.unpersist()
+    ranks = ckpt(ranks)
+    release(*held, ed, nodes, keep=[ranks])
     return ranks
 
 
@@ -178,7 +179,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact triangle count of the undirected graph under ``edges``
     (direction and duplicates ignored, self-loops dropped) — the
@@ -201,14 +201,11 @@ def triangle_count(
     neighbor-pair join is oriented INTO, not out of. Returns one row:
     (n_vertices, n_edges, n_triangles).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
     # The canonical edge set feeds degrees (twice), the orientation join
     # AND the closing-edge probe — materialize it once instead of
     # re-running the caller's (possibly expensive) edge-derivation plan
     # four times.
-    und = ckpt(_canonical_und(edges, src, dst))
+    und = materialize(_canonical_und(edges, src, dst))
     deg = _und_degrees(und)
     du = deg.select(F.col("x").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("x").alias("v"), F.col("d").alias("dv"))
@@ -244,7 +241,6 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     seed_col: str = "node",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass returns to the SEED set
     instead of uniformly — rank becomes "relevance to these seeds",
@@ -260,9 +256,8 @@ def personalized_pagerank(
     indicator joins once onto the node set (broadcast when the seed
     set is small — the typical case) and is reused every round.
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     e = ckpt(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")))
     nodes = e.select(F.col("e_src").alias("node")).unionByName(
         e.select(F.col("e_dst").alias("node"))
@@ -306,6 +301,8 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
+    # zero rounds: the result is a projection of ``base``
+    release(*held, keep=[ranks if iterations else base])
     return ranks
 
 
@@ -315,7 +312,6 @@ def k_core(
     rounds: int = 8,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core extraction: repeatedly peel nodes of degree < k until the
     surviving subgraph has minimum degree >= k (or ``rounds`` fixed
@@ -335,9 +331,8 @@ def k_core(
     Returns the surviving (node, degree) table — degrees measured IN
     the core.
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     a, b = F.col(src), F.col(dst)
     und = ckpt(
         edges.filter(a != b)
@@ -357,6 +352,7 @@ def k_core(
                 bad.withColumnRenamed("x", "v"), "v", "left_anti"
             )
         )
+    release(*held, keep=[und])
     return (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -447,7 +443,6 @@ def bfs_layers(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Breadth-first hop distance from a seed set over an UNDIRECTED
     edge list, bounded at ``max_hops`` — the "blast radius" primitive
@@ -469,9 +464,6 @@ def bfs_layers(
     Returns (node, hops) for every node within ``max_hops`` of a seed
     (seeds included at 0).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
     # Materialize the doubled edge list ONCE (the pagerank discipline,
     # see `ed` above): without this, every frontier round re-derives
     # the caller's edge plan — for a fact-fact join input that is a
@@ -483,7 +475,7 @@ def bfs_layers(
     # 6.1s -> 11.2s, q640 4.8s -> 10.9s at sf0.1). Pinning pays only
     # where the per-round probe side outgrows a broadcast (the
     # pagerank-family rank vector over all nodes).
-    und = ckpt(
+    und = materialize(
         edges.select(
             F.col(src).alias("s"), F.col(dst).alias("d")
         ).unionByName(
@@ -509,9 +501,11 @@ def bfs_layers(
             .join(dist.select("n"), on="n", how="left_anti")
             .withColumn("hops", F.lit(k))
         )
-        nxt = ckpt(nxt)
+        nxt = materialize(nxt)
         dist = dist.unionByName(nxt)
         frontier = nxt
+    # the result reads every frontier, and no longer the edge list
+    release(und)
     return dist.select(F.col("n").alias(node), F.col("hops").cast("long"))
 
 
@@ -524,7 +518,6 @@ def temporal_bfs(
     ts_col: str = "ts",
     node: str = "node",
     seed_ts: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TIME-RESPECTING reachability ("taint spread"): a node is reached
     at hop k when an edge leaves a hop-(k-1) node with a timestamp
@@ -548,10 +541,7 @@ def temporal_bfs(
 
     Returns (node, hops, arrival_ts).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
-    ed = ckpt(
+    ed = materialize(
         edges.select(
             F.col(src).alias("s"), F.col(dst).alias("d"),
             F.col(ts_col).alias("t"),
@@ -591,9 +581,10 @@ def temporal_bfs(
                 F.col("__n").alias("n"), F.lit(k).alias("hops"), "arrival"
             )
         )
-        nxt = ckpt(nxt)
+        nxt = materialize(nxt)
         dist = dist.unionByName(nxt)
         frontier = nxt
+    release(ed)
     return dist.select(
         F.col("n").alias(node), F.col("hops").cast("long"), F.col("arrival").alias("arrival_ts")
     )
@@ -604,7 +595,6 @@ def hits(
     iterations: int = 2,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg hubs & authorities) over a
     directed edge list — the bipartite-flavored complement to
@@ -636,11 +626,10 @@ def hits(
     4.43s per-round-ckpt in the quiet-box A/B, and the twin pin
     doubled edge-cache storage — see _pin's scope note.
     """
-    from ..plans.checkpoints import make_checkpointer
-
     if iterations < 1:
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     e = ckpt(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")))
     nodes = ckpt(
         e.select(F.col("e_src").alias("node"))
@@ -668,6 +657,7 @@ def hits(
         # re-plans each round against the real vector size; lineage
         # stays O(1) (pagerank discipline).
         hub = ckpt(hub)
+    release(*held, keep=[nodes, hub, auth])
     h_tot = hub.agg(
         F.sum(F.col("h").cast("decimal(38,6)")).cast("double").alias("ht")
     )
@@ -694,7 +684,6 @@ def partition_modularity(
     dst: str = "dst",
     node: str = "node",
     community: str = "community",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Newman modularity of a GIVEN node partition over the undirected
     graph under ``edges`` — "did this community assignment actually
@@ -718,13 +707,10 @@ def partition_modularity(
     degree_sum, contribution, modularity) — ``modularity`` (the total
     Q) repeated on every row for one-table readout.
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
     # degrees, the within-edge join AND the edge total all re-read the
     # canonical edge set — materialize the caller's (possibly join-tree)
     # edge plan ONCE (triangle_count discipline)
-    und = ckpt(_canonical_und(edges, src, dst))
+    und = materialize(_canonical_und(edges, src, dst))
     comm = communities.select(
         F.col(node).alias("x"), F.col(community).alias("c")
     )
@@ -782,7 +768,6 @@ def degree_assortativity(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Degree assortativity coefficient of the undirected graph — the
     Pearson correlation of endpoint degrees over edges (Newman 2002).
@@ -803,12 +788,9 @@ def degree_assortativity(
     co-partitioned degree joins. Returns one row:
     (n_edges, n_vertices, assortativity).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
     # the edge set feeds degrees AND the pair join — materialize the
     # caller's edge plan once (triangle_count discipline)
-    und = ckpt(_canonical_und(edges, src, dst))
+    und = materialize(_canonical_und(edges, src, dst))
     deg = _und_degrees(und)
     du = deg.select(F.col("x").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("x").alias("v"), F.col("d").alias("dv"))
@@ -844,7 +826,6 @@ def local_clustering(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-node local clustering coefficient — triangles(v) / C(d(v),2),
     "how much of a clique is each node's neighborhood?" (community-core
@@ -863,10 +844,7 @@ def local_clustering(
     when degree < 2 (no possible wedge) — division is one correctly-
     rounded double op, SQL-replayable.
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
-    und = ckpt(_canonical_und(edges, src, dst))
+    und = materialize(_canonical_und(edges, src, dst))
     deg = _und_degrees(und)
     du = deg.select(F.col("x").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("x").alias("v"), F.col("d").alias("dv"))
@@ -911,7 +889,6 @@ def label_propagation(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection with a
     DETERMINISTIC update rule: every node starts labeled with its own
@@ -930,9 +907,8 @@ def label_propagation(
     keys; the edge list is materialized once. Nodes with no in-edges
     keep their current label. Returns (node, label).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     # The (large) edge list is hash-partitioned on the per-round join
     # key ONCE and persisted: InMemoryTableScan keeps the cached plan's
     # outputPartitioning, so every sweep's edge-vs-label sort-merge
@@ -961,7 +937,7 @@ def label_propagation(
                 "node", F.coalesce("__new", "label").alias("label")
             )
         )
-    ed.unpersist()  # final labels ckpt is eager; the cache is done
+    release(*held, ed, keep=[labels])
     return labels
 
 
@@ -988,7 +964,6 @@ def link_prediction(
     max_degree: int = 10_000,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Common-neighbor link prediction over the undirected graph:
     for node pairs NOT already connected, count shared neighbors and
@@ -1007,10 +982,7 @@ def link_prediction(
     division. Returns (node_u, node_v, cn, jaccard) top-k by
     (cn desc, jaccard desc, pair).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
-    und = ckpt(_canonical_und(edges, src, dst))
+    und = materialize(_canonical_und(edges, src, dst))
     deg = _und_degrees(und)
     ok_centers = deg.filter(F.col("d") <= max_degree).select(
         F.col("x").alias("c")
@@ -1054,7 +1026,6 @@ def adamic_adar(
     max_degree: int = 10_000,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Adamic-Adar link prediction — link_prediction's weighted
     sibling: each shared neighbor contributes 1/ln(deg) instead of 1,
@@ -1074,10 +1045,7 @@ def adamic_adar(
     knob), anti-join against existing edges. Returns
     (node_u, node_v, cn, aa) top-k by (aa desc, pair).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
-    und = ckpt(_canonical_und(edges, src, dst))
+    und = materialize(_canonical_und(edges, src, dst))
     deg = _und_degrees(und)
     # per-center weight computed ONCE on the degree table; the b-side
     # wedge input stays (c, l)-narrow via a semi join — carrying the
@@ -1133,7 +1101,6 @@ def katz_centrality(
     alpha: float = 0.05,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Katz centrality with a fixed iteration budget — influence that
     counts ALL incoming walks (attenuated by alpha per hop), the
@@ -1159,9 +1126,8 @@ def katz_centrality(
     full bench, flat warm (2.86s pinned vs 2.92s per-round-ckpt) —
     see _pin's scope note.
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     e = ckpt(
         edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
     )
@@ -1190,6 +1156,8 @@ def katz_centrality(
             ).alias("x"),
         )
         xs = ckpt(xs)
+    # zero rounds: the result is a projection of ``nodes``
+    release(*held, keep=[xs if iterations else nodes])
     return xs.select("node", F.col("x").alias("katz"))
 
 
@@ -1200,7 +1168,6 @@ def harmonic_centrality(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Harmonic centrality of a SEED set over the undirected graph,
     exact within a ``max_hops`` horizon:
@@ -1224,10 +1191,7 @@ def harmonic_centrality(
 
     Returns one row per seed: (seed, n_reached, harmonic).
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
-    und = ckpt(
+    und = materialize(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(
             edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
@@ -1253,9 +1217,10 @@ def harmonic_centrality(
             .join(dist.select("seed", "n"), ["seed", "n"], "left_anti")
             .withColumn("hops", F.lit(k))
         )
-        nxt = ckpt(nxt)
+        nxt = materialize(nxt)
         dist = dist.unionByName(nxt)
         frontier = nxt
+    release(und)
     counts = (
         dist.filter(F.col("hops") > 0)
         .groupBy("seed", "hops")
@@ -1281,7 +1246,6 @@ def eigenvector_centrality(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-sweep eigenvector centrality over the UNDIRECTED graph —
     prestige by association (your score is the sum of your neighbors'
@@ -1307,14 +1271,13 @@ def eigenvector_centrality(
     NOT pinned (r13 revert of the r12 family-wide pin): 5.26s pinned
     vs 3.93s per-sweep-ckpt in the quiet-box A/B — see _pin's note.
     """
-    from ..plans.checkpoints import make_checkpointer
-
     if iterations < 1:
         raise ValueError(
             f"eigenvector_centrality: iterations must be >= 1, got "
             f"{iterations}"
         )
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     und = ckpt(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(
@@ -1335,6 +1298,7 @@ def eigenvector_centrality(
             )
         )
         x = ckpt(x)
+    release(*held, keep=[nodes, x])
     tot = x.agg(
         F.sum(F.col("x").cast("decimal(38,6)")).cast("double").alias("t")
     )
@@ -1357,7 +1321,6 @@ def k_truss(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-round k-truss peeling over the undirected graph: keep
     only edges supported by at least k-2 triangles, re-count, repeat —
@@ -1378,11 +1341,10 @@ def k_truss(
     Returns the surviving edges with their LAST-round support:
     (u, v, support).
     """
-    from ..plans.checkpoints import make_checkpointer
-
     if k < 2:
         raise ValueError("k must be >= 2")
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     und = ckpt(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -1417,6 +1379,8 @@ def k_truss(
                 "left_semi",
             )
         )
+    # the result reads the last round and, through ``sup``, the one before
+    release(*held, keep=held[-2:])
     return cur.join(sup, ["u", "v"], "left").select(
         "u", "v",
         F.coalesce(F.col("support"), F.lit(0)).cast("long").alias(
@@ -1671,7 +1635,6 @@ def weighted_sssp(
     dst: str = "dst",
     weight: str = "w",
     node: str = "node",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Hop-bounded single-source shortest paths from a SEED set over
     the undirected weighted graph (positive integer weights; parallel
@@ -1690,9 +1653,8 @@ def weighted_sssp(
     closeness) with closeness = n_reached / total_dist and the seed
     itself excluded.
     """
-    from ..plans.checkpoints import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
     und = ckpt(
         edges.select(
             F.col(src).alias("s"),
@@ -1736,6 +1698,7 @@ def weighted_sssp(
             .groupBy("seed", "n")
             .agg(F.min("dist").alias("dist"))
         )
+    release(*held, keep=[dist])
     reached = dist.filter(F.col("dist") > 0)
     return reached.groupBy("seed").agg(
         F.count("*").cast("long").alias("n_reached"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from ..plans.checkpoints import make_checkpointer, materialize, release
 
 
 def brute_force_topk(
@@ -66,14 +67,6 @@ def brute_force_topk(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _sign_bands(vec_col, planes, bands: int):
-    """Band hashes from hyperplane sign bits — Arrow-vectorized numpy
-    matmul per batch (see functions.vectors.plane_band_hashes_udf)."""
-    from ..functions.vectors import plane_band_hashes_udf
-
-    return plane_band_hashes_udf(planes, bands)(vec_col)
 
 
 # Multipliers for the arithmetic plane hash (two classic spatial-hash
@@ -1177,7 +1170,7 @@ def product_quantize(
             f"transform(slice(__v, block * (size(__v) div {n_blocks}) + 1, "
             f"size(__v) div {n_blocks}), x -> cast(x as double))"
         ).alias("__sub"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
 
     seed_ids = df.select(F.col(id_col).alias("__id")).orderBy("__id").limit(n_codes)
     codebook = (
@@ -1362,7 +1355,7 @@ def mmr_topk(
     cand = (
         scored.orderBy(F.col("rel").desc(), F.col("id").asc())
         .limit(pool)
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = cand.select(F.col("id").alias("ia"), F.col("__c").alias("__ca"))
     b = cand.select(F.col("id").alias("ib"), F.col("__c").alias("__cb"))
@@ -1370,7 +1363,7 @@ def mmr_topk(
         a.crossJoin(b)
         .filter(F.col("ia") != F.col("ib"))
         .select("ia", "ib", dot(F.col("__ca"), F.col("__cb")).alias("sim"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     base = cand.select("id", "rel")
     penalty = F.lit(lam_den - lam_num)
@@ -1404,10 +1397,11 @@ def mmr_topk(
             )
             .orderBy(F.col("score").desc(), F.col("id").asc())
             .limit(1)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         picks.append(pick)
         selected = pick if selected is None else selected.unionByName(pick)
+    release(cand, sims)  # the result reads only the picks
     out = picks[0]
     for p in picks[1:]:
         out = out.unionByName(p)
@@ -1439,8 +1433,8 @@ def kcenter_coreset(
     round is one broadcast of the <= k selected vectors against the
     corpus — a map-side min + one global top-1, no quadratic pair
     table ever materializes. ``dist2`` folds per-dimension in array
-    order (engine-exact doubles). The selected set is localCheckpoint-
-    pinned per round so round r+1 does not replay rounds 1..r.
+    order (engine-exact doubles). The selected set is materialized per
+    round so round r+1 does not replay rounds 1..r.
 
     Returns k rows: (sel_round, id, dist2) — dist2 is the point's
     min squared distance to the earlier picks at selection time (the
@@ -1457,7 +1451,9 @@ def kcenter_coreset(
             F.lit(0.0).alias("dist2"),
         )
     )
-    selected = seed.localCheckpoint(eager=True)
+    held: list[DataFrame] = []
+    ckpt = make_checkpointer(held)
+    selected = ckpt(seed)
     for r in range(1, k):
         sel = selected.select(
             F.col("id").alias("sid"), F.col("v").alias("sv")
@@ -1484,7 +1480,8 @@ def kcenter_coreset(
             .limit(1)
             .select(F.lit(r).alias("sel_round"), "id", "v", "dist2")
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=True)
+        selected = ckpt(selected.unionByName(pick))
+    release(*held, keep=[selected])
     return selected.select("sel_round", "id", "dist2").orderBy("sel_round")
 
 
@@ -1519,6 +1516,8 @@ def lloyd_deterministic(
     """
     if k < 1 or iterations < 1:
         raise ValueError("k and iterations must be >= 1")
+    cents: list[DataFrame] = []
+    ckpt = make_checkpointer(cents)
     pts = df.select(
         F.col(id_col).alias("pid"),
         F.transform(
@@ -1526,7 +1525,7 @@ def lloyd_deterministic(
             lambda x: F.round(x.cast("double") * F.lit(float(quant)), 0)
             .cast("long"),
         ).alias("xq"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     w = Window.orderBy("pid")
     cent = (
         pts.orderBy("pid")
@@ -1593,8 +1592,11 @@ def lloyd_deterministic(
                 "cid",
                 F.transform(F.col("__arr"), lambda e: e["m"]).alias("c"),
             )
-            .localCheckpoint(eager=True)
+            .transform(ckpt)
         )
+    # the result reads the last centroids and, through ``assigned``, the
+    # ones before them
+    release(*cents, keep=cents[-2:])
     per = assigned.groupBy("cid").agg(
         F.count("*").cast("long").alias("n_points"),
         F.sum(F.col("d").cast("decimal(38,6)"))

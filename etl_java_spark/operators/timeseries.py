@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
+
 
 def resample_gapfill(
     df: DataFrame,
@@ -1497,7 +1499,7 @@ def log_rank_test(
         "t", "da", "d",
         F.sum("ca").over(w_risk).alias("na"),
         F.sum("call").over(w_risk).alias("n"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     per = per0.filter((F.col("d") > 0) & (F.col("n") > 1))
     frac = F.col("na").cast("double") / F.col("n").cast("double")
     ev = per.select(
@@ -2357,7 +2359,7 @@ def c_index(
         )
         .groupBy("t", "e", "r")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = cells.filter(F.col("e") == 1).alias("a")
     b = cells.alias("b")

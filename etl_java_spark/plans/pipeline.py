@@ -60,15 +60,6 @@ class JdbcSource:
 
 
 @dataclass
-class AppendSink:
-    path: str
-    fmt: str = "parquet"
-
-    def write(self, spark: SparkSession, df: DataFrame) -> None:
-        writers.append(df, self.path, self.fmt)
-
-
-@dataclass
 class MergeSink:
     """Upsert-by-PK (reference #13/#15). PK coverage is validated against
     the outgoing schema, reproducing ETLProcess.java:336-342."""
@@ -82,17 +73,6 @@ class MergeSink:
         if missing:
             raise ValueError(f"primary keys not present in pipeline output: {missing}")
         writers.merge_by_pk(spark, df, self.path, list(self.pks), self.fmt)
-
-
-@dataclass
-class InsertIfAbsentSink:
-    """All-column insert-if-absent (reference #14)."""
-
-    path: str
-    fmt: str = "parquet"
-
-    def write(self, spark: SparkSession, df: DataFrame) -> None:
-        writers.insert_if_absent(spark, df, self.path, self.fmt)
 
 
 @dataclass

@@ -23,7 +23,7 @@ and rewrites only the partitions a batch touches — O(touched
 partitions) — and needs no eager checkpoint, because dynamic partition
 overwrite swaps the touched directories in only at job commit (details
 in its docstring). Full rewrites are static overwrites, which delete the
-table before their job runs: ``_rewrite_table`` checkpoints their input
+table before their job runs: ``_rewrite_table`` materializes their input
 first and releases it after.
 """
 
@@ -34,6 +34,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from ..plans.checkpoints import materialize, release
 
 REFERENCE_BATCH_SIZE = 1000  # ETLProcess.java:210
 
@@ -224,17 +226,17 @@ def _rewrite_table(
     """Overwrite ``path`` with ``df``, which may read ``path`` itself.
 
     A static overwrite deletes ``path`` before its job runs, so ``df`` is
-    materialised first (eager local checkpoint). Its blocks are released
-    once the write is over, and the stale file listings of ``path`` are
+    materialized first (plans/checkpoints policy). It is released once
+    the write is over, and the stale file listings of ``path`` are
     dropped from the shared FileStatusCache."""
-    local = df.localCheckpoint(eager=True)
+    local = materialize(df)
     try:
         w = local.write.format(fmt).mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(path)
     finally:
-        local._jdf.queryExecution().logical().rdd().unpersist(False)
+        release(local)
     spark.catalog.refreshByPath(path)
 
 

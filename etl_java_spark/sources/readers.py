@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
+
 STAR_TABLES = (
     "region",
     "nation",
@@ -346,8 +348,8 @@ def read_incremental(
       idempotent/keyed sink such as merge_by_pk for exactly-once).
 
     One filter scan + one 1-row max aggregate; the returned frame is
-    localCheckpoint-pinned so callers can read it after the next
-    bookmark write.
+    materialized (plans/checkpoints) so callers can read it after the
+    next bookmark write.
     """
     from pyspark.errors import AnalysisException
 
@@ -364,7 +366,7 @@ def read_incremental(
             raise
         bm = None
     new = df.filter(F.col(ts_col) > F.lit(bm)) if bm is not None else df
-    new = new.localCheckpoint(eager=True)
+    new = materialize(new)
     if advance:
         advance_bookmark(spark, new, bookmark_dir, ts_col)
     return new

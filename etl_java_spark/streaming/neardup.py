@@ -58,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
+
 __all__ = ["foreach_batch_neardup_guard", "read_neardup_state"]
 
 
@@ -112,11 +114,11 @@ def foreach_batch_neardup_guard(
         batch = (
             batch_df.select(F.col(id_col), F.col(text_col))
             .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         banded = minhash_index(
             batch, text_col, id_col, num_hashes, bands, shingle_n
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
         seen = _read_or(spark, docs_path, batch)
         index = _read_or(spark, index_path, banded)
         dups = minhash_incremental_pairs(

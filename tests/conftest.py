@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -30,6 +31,39 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL
+
+
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """Context manager that selects reliable checkpoints the way a
+    session started with ``--conf spark.checkpoint.dir=DIR`` does: the
+    context's checkpoint directory plus the SparkConf key the policy in
+    plans/checkpoints reads. It yields DIR. On exit the key is removed,
+    so later tests run executor-local again; the directory itself
+    cannot be unset, and the policy never consults it."""
+
+    @contextlib.contextmanager
+    def on():
+        ckdir = str(tmp_path / "ck")
+        sc = spark.sparkContext
+        sc.setCheckpointDir(ckdir)
+        conf = sc._jsc.sc().conf()
+        conf.set("spark.checkpoint.dir", ckdir)
+        try:
+            yield ckdir
+        finally:
+            conf.remove("spark.checkpoint.dir")
+
+    return on
+
+
+@pytest.fixture
+def held_rdds(spark):
+    """Return a function giving the ids of the RDDs persisted since the
+    fixture was set up (local checkpoints and persisted frames)."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    return lambda: set(jsc.getPersistentRDDs().keySet()) - before
 
 
 # ---------------------------------------------------------------------------

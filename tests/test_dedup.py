@@ -5,12 +5,12 @@ operator tests live in test_dedup_similarity.py."""
 from __future__ import annotations
 
 
-def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir= switches the per-round materialization to
-    reliable df.checkpoint (survives executor loss on a cluster);
-    results must be identical to the localCheckpoint default, and
-    checkpoint files must appear."""
-    import os
+def test_dedup_clusters_reliable_checkpoint(spark, reliable_checkpoints):
+    """A session started with spark.checkpoint.dir materializes every
+    round with reliable df.checkpoint (survives executor loss on a
+    cluster); results must be identical to the localCheckpoint default,
+    and checkpoint files must appear."""
+    from pathlib import Path
 
     from etl_java_spark.operators.dedup import dedup_clusters
 
@@ -18,11 +18,25 @@ def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], "id_a long, id_b long"
     )
     local = sorted(dedup_clusters(pairs).collect())
-    ckdir = str(tmp_path / "ck")
-    reliable = sorted(dedup_clusters(pairs, checkpoint_dir=ckdir).collect())
+    with reliable_checkpoints() as ckdir:
+        reliable = sorted(dedup_clusters(pairs).collect())
     assert local == reliable
     assert {r.cluster_id for r in reliable} == {1, 10, 20}
-    assert any(os.scandir(ckdir)), "no reliable checkpoint files written"
+    assert any(Path(ckdir).rglob("rdd-*")), "no reliable checkpoint files written"
+
+
+def test_dedup_clusters_holds_only_its_result(spark, held_rdds):
+    """The edge list and every superseded round are released before
+    dedup_clusters returns: a chain takes one round per hop, and only
+    the result's blocks stay persisted."""
+    from etl_java_spark.operators.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)], "id_a long, id_b long"
+    )
+    labels = dedup_clusters(pairs)
+    assert held_rdds() == {labels._jdf.queryExecution().logical().rdd().id()}
+    assert {r.cluster_id for r in labels.collect()} == {1}
 
 
 def test_lsh_band_sizing_tracks_threshold():

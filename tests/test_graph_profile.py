@@ -66,18 +66,37 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(e, iterations=2).count() == 0
 
 
-def test_pagerank_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir= switches to reliable df.checkpoint (survives
-    executor loss on a cluster); results must be bitwise-identical to
-    the localCheckpoint default, and checkpoint files must appear."""
-    import os
+def test_pagerank_reliable_checkpoint(spark, reliable_checkpoints):
+    """A session started with spark.checkpoint.dir switches to reliable
+    df.checkpoint (survives executor loss on a cluster); results must be
+    bitwise-identical to the localCheckpoint default, and checkpoint
+    files must appear."""
+    from pathlib import Path
 
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")])
     local = sorted(pagerank(e, iterations=3).collect())
-    ckdir = str(tmp_path / "ck")
-    reliable = sorted(pagerank(e, iterations=3, checkpoint_dir=ckdir).collect())
+    with reliable_checkpoints() as ckdir:
+        reliable = sorted(pagerank(e, iterations=3).collect())
     assert local == reliable
-    assert any(os.scandir(ckdir)), "no reliable checkpoint files written"
+    assert any(Path(ckdir).rglob("rdd-*")), "no reliable checkpoint files written"
+
+
+def test_iterative_graph_operators_hold_only_their_result(spark, held_rdds):
+    """pagerank (pinned static sides, a mid-run checkpoint at round 4)
+    and personalized_pagerank (a checkpoint every round) release
+    everything but their result before returning."""
+    from etl_java_spark.operators.graph import personalized_pagerank
+    from etl_java_spark.plans.checkpoints import release
+
+    e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")])
+    seeds = spark.createDataFrame([("a",)], ["node"])
+    for run in (lambda: pagerank(e, iterations=5),
+                lambda: personalized_pagerank(e, seeds, 3)):
+        ranks = run()
+        rid = ranks._jdf.queryExecution().logical().rdd().id()
+        assert held_rdds() == {rid}
+        assert ranks.count() == 4
+        release(ranks)
 
 
 def test_personalized_pagerank_mass_concentrates_on_seeds(spark):
