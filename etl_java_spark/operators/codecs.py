@@ -435,7 +435,8 @@ def image_ahash(content: bytes, mime: str, grid: int = 8) -> int:
     compare), so the hash is bit-identical on any engine/platform —
     and invariant to small global brightness shifts away from the
     clip boundary, the property that makes it a near-dup key (pair
-    via dedup.simhash_near_pairs' pigeonhole chunk blocking).
+    via multimodal.phash_near_pairs, whose pigeonhole Hamming banding
+    is dedup._hamming_bands, shared with dedup.simhash_near_pairs).
     Returned as a SIGNED 64-bit value so it fits Spark's LongType.
     """
     arr = decode_any(content, mime)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.text import DEFAULT_TOKEN_PATTERN, word_shingles
 from ..functions.vectors import cosine
 from ..plans.checkpoints import materialize
+from .dedup import _drop_hot_keys, _pair_join
 
 
 # ---------------------------------------------------------------------------
@@ -254,30 +255,20 @@ def semantic_dup_pairs(
     # norm: same array -> same left-to-right sum), so each of the
     # O(cell^2) pairs pays one array pass (the dot) instead of three.
     assigned = assigned.withColumn("__norm", norm(F.col("__vec")))
-    a = assigned.select(
-        F.col(id_col).alias("id_a"), F.col("cell"),
-        F.col("__vec").alias("__va"), F.col("__norm").alias("__na"),
-    )
-    b = assigned.select(
-        F.col(id_col).alias("id_b"), F.col("cell"),
-        F.col("__vec").alias("__vb"), F.col("__norm").alias("__nb"),
-    )
     # The cell join has only n_cells distinct keys, so the scoring work
     # would land on n_cells tasks; hash-partition on the (id_a, id_b)
     # pair key — effectively unique, so the pairs spread across the full
     # shuffle width before the per-pair dot product (the expensive part)
     # and every core scores.
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .repartition(F.col("id_a"), F.col("id_b"))
-    )
+    pairs = _pair_join(
+        assigned, assigned, id_col, ["cell"], ["cell", "__vec", "__norm"]
+    ).repartition(F.col("id_a"), F.col("id_b"))
     cos = F.when(
-        (F.col("__na") > 0) & (F.col("__nb") > 0),
-        dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
+        (F.col("__norm_a") > 0) & (F.col("__norm_b") > 0),
+        dot(F.col("__vec_a"), F.col("__vec_b")) / (F.col("__norm_a") * F.col("__norm_b")),
     ).otherwise(F.lit(0.0))
     return pairs.select(
-        "id_a", "id_b", "cell", cos.alias("cos_sim")
+        "id_a", "id_b", F.col("cell_a").alias("cell"), cos.alias("cos_sim")
     ).filter(F.col("cos_sim") >= threshold)
 
 
@@ -396,9 +387,8 @@ def split_leakage(
     split_col: str = "split",
     shingle_n: int = 1,
     threshold: float = 0.5,
-    max_shingle_freq: int = 1000,
+    max_shingle_freq: int | None = 1000,
     token_pattern: str | None = None,
-    prefix_filter: bool = False,
     candidate_strategy: str = "exact",
     minhash_hashes: int = 32,
     minhash_bands: int = 16,
@@ -411,8 +401,10 @@ def split_leakage(
     ``candidate_strategy`` picks the pair-generation path:
 
     - ``"exact"`` (default, the oracle-checkable path): inverted-index
-      blocking from ``dedup.ngram_jaccard_pairs`` — recall 1.0 by
-      construction, but worst-case candidate volume is
+      blocking and exact shingle counts from
+      ``dedup.ngram_jaccard_pairs`` — recall 1.0 as long as no shingle
+      sits in more than ``max_shingle_freq`` docs (``None`` lifts the
+      cap), but worst-case candidate volume is
       O(max_shingle_freq x corpus-shingles). Right for audits that must
       certify "zero leaks" at benchmark scale.
     - ``"minhash"`` (the 100 TB path): LSH banding over MinHash
@@ -447,7 +439,7 @@ def split_leakage(
     elif candidate_strategy == "exact":
         pairs = DD.ngram_jaccard_pairs(
             df, text_col, id_col, shingle_n, threshold, max_shingle_freq,
-            token_pattern, prefix_filter=prefix_filter,
+            token_pattern,
         )
     else:
         raise ValueError(
@@ -953,27 +945,11 @@ def winnow_dup_pairs(
     fp = winnow_fingerprints(
         df, text_col, id_col, shingle_n, window, token_pattern
     )
-    # anti-join against the OVER-frequency blacklist: boilerplate
-    # fingerprints in >max_fp_freq docs are few (metadata-sized), so
-    # that side broadcasts safely; broadcasting the SURVIVING set would
-    # ship ~2/(window+1) of the corpus vocabulary to every executor.
-    hot = fp.groupBy("fp").agg(F.count("*").alias("__n")).filter(
-        F.col("__n") > max_fp_freq
-    )
-    fp = fp.join(F.broadcast(hot.select("fp")), "fp", "left_anti")
     par = df.sparkSession.sparkContext.defaultParallelism
-    fp = fp.repartition(par, "fp")
-    a, b = fp.alias("a"), fp.alias("b")
+    fp = _drop_hot_keys(fp, ["fp"], max_fp_freq).repartition(par, "fp")
     return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        _pair_join(fp, fp, id_col, ["fp"])
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -1072,23 +1048,10 @@ def dup_span_intervals(
         F.col("__p").cast("long").alias("p"),
         F.element_at("__hs", F.col("__p").cast("int")).alias("fp"),
     )
-    # hot-fingerprint cap: the blacklist side is metadata-sized, the
-    # surviving set is corpus-sized — broadcast the former, anti-join
-    hot = (
-        fp.groupBy("fp")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") > max_fp_freq)
-    )
-    kept = fp.join(F.broadcast(hot.select("fp")), "fp", "left_anti")
-    a = kept.select(F.col(id_col).alias("id_a"), F.col("p").alias("pa"), "fp")
-    b = kept.select(F.col(id_col).alias("id_b"), F.col("p").alias("pb"), "fp")
-    matches = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", "pa", "pb",
-            (F.col("pa") - F.col("pb")).alias("diag"),
-        )
+    kept = _drop_hot_keys(fp, ["fp"], max_fp_freq)
+    matches = _pair_join(kept, kept, id_col, ["fp"], ["p"]).select(
+        "id_a", "id_b", F.col("p_a").alias("pa"),
+        (F.col("p_a") - F.col("p_b")).alias("diag"),
     )
     w = Window.partitionBy("id_a", "id_b", "diag").orderBy("pa")
     isl = matches.withColumn(

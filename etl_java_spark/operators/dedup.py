@@ -17,6 +17,10 @@ Scale shape of each operator:
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Sequence
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,6 +59,114 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
+
+
+# ---------------------------------------------------------------------------
+# Blocking: every near-duplicate operator below (and the ones in corpus.py,
+# multimodal.py and relational.py) finds candidates the same way — rows
+# that share a blocking key are paired, quadratic only within a key. These
+# four pieces are that algorithm; callers keep their own repartition,
+# distinct/count and scoring.
+
+
+def _pair_join(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    keys: Sequence[str],
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """Pairs of rows, one from ``left`` and one from ``right``, that agree
+    on every column in ``keys`` and whose left id sorts below the right
+    id. Returns (id_a, id_b, <c>_a..., <c>_b...) for each column ``c`` in
+    ``carry``. No distinct: two rows sharing several keys pair once per
+    shared key, and the caller either dedups or counts them."""
+    a, b = left.alias("a"), right.alias("b")
+    conds = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    conds.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return a.join(b, reduce(operator.and_, conds)).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+        *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
+    )
+
+
+def _hot_keys(df: DataFrame, keys: Sequence[str], cap: int) -> DataFrame:
+    """Keys held by more than ``cap`` rows, with their row count ``__n``."""
+    return df.groupBy(*keys).agg(F.count("*").alias("__n")).filter(F.col("__n") > cap)
+
+
+def _drop_hot_keys(df: DataFrame, keys: Sequence[str], cap: int | None) -> DataFrame:
+    """Drop every row whose key is held by more than ``cap`` rows (a key
+    held by exactly ``cap`` rows stays); ``cap=None`` keeps every key.
+
+    The pair join is quadratic within a key, so one hot key (a stopword
+    run, a boilerplate band hash) would otherwise become a single
+    straggler task. The over-cap list is small, so it is broadcast into
+    an anti-join; broadcasting the surviving keys would ship the corpus
+    vocabulary to every executor. The count is map-side combinable."""
+    if cap is None:
+        return df
+    hot = _hot_keys(df, keys, cap).select(*keys)
+    return df.join(F.broadcast(hot), list(keys), "left_anti")
+
+
+def _hamming_bands(df: DataFrame, hash_col: str, max_hamming: int) -> DataFrame:
+    """Add ``__band``/``__key`` rows: ``hash_col`` (a 64-bit long) cut into
+    ``max_hamming + 1`` disjoint bit ranges that together cover all 64
+    bits. Two hashes within Hamming distance ``max_hamming`` differ in at
+    most that many ranges, so they agree on at least one (pigeonhole):
+    a pair join on (``__band``, ``__key``) finds every such pair."""
+    n = max_hamming + 1
+    bounds = [i * 64 // n for i in range(n + 1)]
+    keys = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        key = F.shiftrightunsigned(F.col(hash_col), lo)
+        keys.append(key.bitwiseAND(F.lit((1 << (hi - lo)) - 1)) if hi < 64 else key)
+    return df.select("*", F.posexplode(F.array(*keys)).alias("__band", "__key"))
+
+
+def _shared_shingle_counts(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    token_pattern: str,
+    max_shingle_freq: int | None,
+) -> DataFrame:
+    """(id_a, id_b, __common, sz_a, sz_b): for each pair of docs sharing
+    at least one kept shingle, the number of distinct shingles they
+    share and each doc's distinct-shingle count — the exact counts the
+    Jaccard and containment scores divide.
+
+    Shingles in more than ``max_shingle_freq`` docs are dropped from the
+    join (see :func:`_drop_hot_keys`); their contribution to
+    ``__common`` is lost, the sizes still count them."""
+    # Materialized once (inv + sizes both read it), and the inverted
+    # index is EXPLICITLY hash-partitioned on the shingle: the pair
+    # self-join's CPU cost is the fan-out of the equi-join output, far
+    # larger than its input bytes, so AQE's size-based coalesce would
+    # otherwise funnel the whole join through 1-2 tasks (measured 4x on
+    # a 5k-doc corpus). A user-specified repartition is exempt from
+    # coalescing and both join sides reuse it — no extra shuffle.
+    sets_df = df.select(
+        F.col(id_col),
+        F.array_distinct(word_shingles(text_col, shingle_n, token_pattern)).alias("__set"),
+    ).filter(F.size("__set") > 0).persist()
+    par = df.sparkSession.sparkContext.defaultParallelism
+    inv = sets_df.select(F.col(id_col), F.explode("__set").alias("__sh"))
+    inv = _drop_hot_keys(inv, ["__sh"], max_shingle_freq).repartition(par, "__sh")
+    common = (
+        _pair_join(inv, inv, id_col, ["__sh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("__common"))
+    )
+    sizes = sets_df.select(F.col(id_col), F.size("__set").alias("__sz"))
+    return (
+        common.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "sz_a"), "id_a")
+        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "sz_b"), "id_b")
+    )
 
 
 def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -201,6 +313,11 @@ def minhash_incremental_pairs(
     MinHash signatures are computed ONCE per micro-batch, not twice
     (r12: one full signature pass saved per batch; one explode + k min
     aggregates over the batch text).
+
+    No hot-bucket cap is applied, unlike :func:`minhash_candidate_pairs`
+    (``max_bucket_size``): every bucket of the index and the batch is
+    joined, so a degenerate bucket costs its full quadratic fan-out here
+    but never drops a pair.
     """
     if bands is None:
         bands, _ = lsh_band_sizing(threshold, num_hashes)
@@ -219,13 +336,7 @@ def minhash_incremental_pairs(
         F.least(F.col(f"o.{id_col}"), F.col(f"n.{id_col}")).alias("id_a"),
         F.greatest(F.col(f"o.{id_col}"), F.col(f"n.{id_col}")).alias("id_b"),
     )
-    a, b = new_banded.alias("a"), new_banded.alias("b")
-    within = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+    within = _pair_join(new_banded, new_banded, id_col, ["band", "band_hash"])
     pairs = cross.unionByName(within).filter(F.col("id_a") != F.col("id_b")).distinct()
     # eager is load-bearing — see minhash_dedup_pairs (r13 A/B)
     pairs = materialize(pairs)
@@ -285,38 +396,17 @@ def minhash_candidate_pairs(
     in production pipelines).
     """
     banded = _band_rows(sigs, id_col, bands, rows_per_band)
-    if max_bucket_size is not None:
-        # Hot-bucket list is tiny (only buckets > cap) -> broadcast anti-join;
-        # the count agg is map-side combinable so the extra pass is cheap
-        # relative to the quadratic join it prevents.
-        hot = (
-            banded.groupBy("band", "band_hash")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-        )
-        if log_dropped:
-            import logging
+    buckets = ["band", "band_hash"]
+    if log_dropped and max_bucket_size is not None:
+        import logging
 
-            for r in hot.collect():
-                logging.getLogger(__name__).warning(
-                    "minhash LSH: dropping bucket band=%d hash=%d size=%d (> cap %d)",
-                    r["band"], r["band_hash"], r["__n"], max_bucket_size,
-                )
-        banded = banded.join(
-            F.broadcast(hot.select("band", "band_hash")), ["band", "band_hash"], "left_anti"
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+        for r in _hot_keys(banded, buckets, max_bucket_size).collect():
+            logging.getLogger(__name__).warning(
+                "minhash LSH: dropping bucket band=%d hash=%d size=%d (> cap %d)",
+                r["band"], r["band_hash"], r["__n"], max_bucket_size,
+            )
+    banded = _drop_hot_keys(banded, buckets, max_bucket_size)
+    return _pair_join(banded, banded, id_col, buckets).distinct()
 
 
 def jaccard_verify(
@@ -516,40 +606,19 @@ def simhash(
 
 
 def simhash_near_pairs(sim_df: DataFrame, id_col: str, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance.
+    """Near-dup pairs by SimHash Hamming distance: (id_a, id_b, hamming)
+    with id_a < id_b and hamming <= ``max_hamming``.
 
-    Blocking: split the 64-bit hash into (max_hamming+1) chunks — two
-    hashes within distance d must agree on >=1 chunk (pigeonhole), so the
-    join is an equi-join on chunk value, never O(n^2).
+    Blocking: the 64-bit hash is cut into ``max_hamming + 1`` disjoint
+    bit bands covering all 64 bits (:func:`_hamming_bands`, shared with
+    ``multimodal.phash_near_pairs``) — two hashes within distance d must
+    agree on >=1 band (pigeonhole), so the join is an equi-join on band
+    value, never O(n^2). Every candidate is then checked exactly with
+    bit_count(xor), so the result is the complete all-pairs answer.
     """
-    n_chunks = max_hamming + 1
-    width = 64 // n_chunks
-    chunks = F.posexplode(
-        F.array(
-            *[
-                F.shiftright(F.col("simhash"), i * width).bitwiseAND(F.lit((1 << width) - 1))
-                for i in range(n_chunks)
-            ]
-        )
-    )
-    blocked = sim_df.select(id_col, "simhash", chunks.alias("chunk_idx", "chunk_val"))
-    a, b = blocked.alias("a"), blocked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("h_a"),
-            F.col("b.simhash").alias("h_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    blocked = _hamming_bands(sim_df.select(id_col, "simhash"), "simhash", max_hamming)
+    cand = _pair_join(blocked, blocked, id_col, ["__band", "__key"], ["simhash"]).distinct()
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.select("id_a", "id_b", ham.alias("hamming")).filter(F.col("hamming") <= max_hamming)
 
 
@@ -561,17 +630,16 @@ def embedding_near_dup_pairs(
     num_planes: int = 64,
     bands: int = 4,
     seed: int = 42,
-    multi_probe: bool = True,
 ) -> DataFrame:
     """Embedding near-dup: banded random-hyperplane LSH + exact cosine.
 
-    Candidate = pair agreeing on ANY band of sign bits (same banding
-    trick as MinHash-LSH). With ``multi_probe``, one side additionally
-    probes every single-bit-flipped band hash, so pairs within Hamming
-    distance 1 of a band also become candidates — at 16-bit bands and
-    cosine >= 0.99 that recovers per-band recall from 0.48 to 0.84, and
-    4 independent bands push pair-level recall to ~0.9993, vs ~40%
-    total for the single-bucket variant this replaced.
+    Candidate = pair whose band hashes agree, or differ in ONE bit, on
+    ANY band of sign bits (same banding trick as MinHash-LSH, multi-
+    probe): one side also probes every single-bit-flipped band hash.
+    At 16-bit bands and cosine >= 0.99 the flipped probes raise
+    per-band recall from 0.48 to 0.84, and 4 independent bands push
+    pair-level recall to ~0.9993, vs ~40% total for a single exact
+    bucket.
 
     SIZE the bands for the corpus: a band of ``b`` bits yields 2^b
     buckets and the candidate join emits ~n^2/2^b spurious pairs on
@@ -602,26 +670,13 @@ def embedding_near_dup_pairs(
         F.col(id_col),
         F.posexplode(hasher(F.col(vec_col))).alias("__band", "__h"),
     )
-    if multi_probe:
-        masks = F.array(*[F.lit(0)] + [F.lit(1 << j) for j in range(per_band)])
-        probe = bucketed.select(
-            F.col(id_col),
-            "__band",
-            F.explode(F.transform(masks, lambda m: F.col("__h").bitwiseXOR(m))).alias("__h"),
-        )
-    else:
-        probe = bucketed
-    a, b = probe.alias("a"), bucketed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.__band") == F.col("b.__band"))
-            & (F.col("a.__h") == F.col("b.__h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+    masks = F.array(*[F.lit(0)] + [F.lit(1 << j) for j in range(per_band)])
+    probe = bucketed.select(
+        F.col(id_col),
+        "__band",
+        F.explode(F.transform(masks, lambda m: F.col("__h").bitwiseXOR(m))).alias("__h"),
     )
+    cand = _pair_join(probe, bucketed, id_col, ["__band", "__h"]).distinct()
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     return (
@@ -657,9 +712,22 @@ def dedup_clusters(
     ``spark.checkpoint.dir``). The edge list and every superseded round
     are released before returning; the result is the last round's
     materialization.
+
+    The ids must be integral (byte, short, int, long, or decimal with
+    scale 0); any other type raises ``TypeError`` before any job runs,
+    because the convergence probe below sums labels exactly and a
+    fractional or string id would make it stop early with wrong labels.
     """
+    from pyspark.sql.types import DecimalType, IntegralType
+
     from ..plans import checkpoints
 
+    for c in (id_a, id_b):
+        t = pairs.schema[c].dataType
+        if not (isinstance(t, IntegralType) or (isinstance(t, DecimalType) and t.scale == 0)):
+            raise TypeError(
+                f"dedup_clusters needs integral ids; column {c!r} is {t.simpleString()}"
+            )
     held: list[DataFrame] = []
     # looked up at call time, so a wrapped make_checkpointer sees the rounds
     ckpt = checkpoints.make_checkpointer(held)
@@ -684,7 +752,9 @@ def dedup_clusters(
     # sum). A fully-lazy variant (ckpt(eager=False) materialized by
     # the probe) was measured and REVERTED: q219 4.28->4.99s,
     # q225 4.35->5.01s — the eager per-round ckpt is load-bearing.
-    label_sum = F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
+    # count(*) rides in the same aggregate: a NULL sum over a non-empty
+    # label set (NULL ids, decimal overflow) must raise, not converge
+    probe = (F.sum(F.col("cluster_id").cast("decimal(38,0)")), F.count("*"))
     prev_sum = None
     for _ in range(max_iter):
         # candidate labels: own label + min neighbor label
@@ -698,8 +768,14 @@ def dedup_clusters(
             .groupBy("id")
             .agg(F.min("cluster_id").alias("cluster_id"))
         )
-        new_sum = new_labels.agg(label_sum).collect()[0][0]
+        new_sum, n_labels = new_labels.agg(*probe).collect()[0]
         labels = new_labels
+        if new_sum is None and n_labels:
+            checkpoints.release(*held)
+            raise ValueError(
+                f"dedup_clusters: label sum is NULL over {n_labels} labels "
+                "(NULL ids or decimal overflow); convergence cannot be decided"
+            )
         # None = empty label set (no pairs): trivially converged. A
         # non-empty graph ALWAYS changes in round 1 (every edge's
         # greater endpoint takes the smaller id), so prev_sum=None
@@ -729,155 +805,30 @@ def ngram_jaccard_pairs(
     id_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_shingle_freq: int = 1000,
+    max_shingle_freq: int | None = 1000,
     token_pattern: str | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
-    """All-pairs n-gram Jaccard via shingle-inverted-index self-join.
+    """All-pairs n-gram Jaccard via shingle-inverted-index self-join:
+    (id_a, id_b, jaccard) with id_a < id_b and jaccard >= ``threshold``.
 
-    ``max_shingle_freq`` drops shingles appearing in more than N docs
-    (stopword runs) — at corpus scale a single hot shingle would
-    otherwise produce a quadratic candidate blowup.
-
-    ``prefix_filter=True`` switches candidate generation to the AllPairs
-    prefix filter (Bayardo et al.): under ANY fixed total order on
-    shingles (here: xxhash64 rank), two sets with J >= t MUST share an
-    element within their first |A| - ceil(t*|A|) + 1 elements — so only
-    that prefix is indexed and joined, shrinking the candidate join
-    quadratically in (1-t) while staying EXACT (the survivors are
-    re-scored on the full sets; hash collisions can only ADD candidates,
-    never lose one). Output is identical either way (asserted by
-    test_prefix_filter_jaccard_parity across thresholds). WHEN to use
-    it: high thresholds over Zipf-ish corpora, where prefixes prune
-    most of the candidate mass. On this repo's dense-uniform-vocab
-    fixture it measured 2.6x SLOWER than the count-join (8.1s vs 3.1s
-    warm at sf0.1) — random docs share prefix shingles anyway and the
-    full-set verify outweighs the pruning — so the default stays False
-    and the corpus queries use the count-join path.
+    Jaccard is one double division of exact counts — shared shingles
+    over |A| + |B| - shared (:func:`_shared_shingle_counts`, the core
+    shared with :func:`ngram_containment_pairs`). ``max_shingle_freq``
+    drops shingles appearing in more than N docs (stopword runs) — at
+    corpus scale a single hot shingle would otherwise produce a
+    quadratic candidate blowup; ``None`` keeps every shingle, which
+    makes the result exact. A capped shingle still counts in both set
+    sizes, so a pair that shares only hot shingles is missed and a
+    pair sharing some scores low.
     """
     from ..functions.text import DEFAULT_TOKEN_PATTERN
 
     pat = token_pattern or DEFAULT_TOKEN_PATTERN
-    if prefix_filter:
-        return _ngram_jaccard_prefix(
-            df, text_col, id_col, shingle_n, threshold, max_shingle_freq, pat
-        )
-    # Materialized once (inv + sizes both read it), and the inverted
-    # index is EXPLICITLY hash-partitioned on the shingle: the pair
-    # self-join's CPU cost is the fan-out of the equi-join output, far
-    # larger than its input bytes, so AQE's size-based coalesce would
-    # otherwise funnel the whole join through 1-2 tasks (measured 4x on
-    # a 5k-doc corpus). A user-specified repartition is exempt from
-    # coalescing and both join sides reuse it — no extra shuffle.
-    sets_df = df.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(text_col, shingle_n, pat)).alias("__set"),
-    ).filter(F.size("__set") > 0).persist()
-    par = df.sparkSession.sparkContext.defaultParallelism
-    inv = sets_df.select(F.col(id_col), F.explode("__set").alias("__sh"))
-    # drop hot shingles by anti-joining the OVER-frequency blacklist
-    # (few, broadcast-safe); broadcasting the surviving set would ship
-    # the corpus vocabulary to every executor
-    hot = inv.groupBy("__sh").agg(F.count("*").alias("__n")).filter(F.col("__n") > max_shingle_freq)
-    inv = inv.join(F.broadcast(hot.select("__sh")), "__sh", "left_anti").repartition(par, "__sh")
-    a, b = inv.alias("a"), inv.alias("b")
-    common = (
-        a.join(b, (F.col("a.__sh") == F.col("b.__sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("__common"))
-    )
-    sizes = sets_df.select(F.col(id_col), F.size("__set").alias("__sz"))
-    j = (
-        common.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "sz_b"), "id_b")
-    )
+    j = _shared_shingle_counts(df, text_col, id_col, shingle_n, pat, max_shingle_freq)
     jac = F.col("__common").cast("double") / (
         F.col("sz_a") + F.col("sz_b") - F.col("__common")
     ).cast("double")
     return j.select("id_a", "id_b", jac.alias("jaccard")).filter(F.col("jaccard") >= threshold)
-
-
-def _ngram_jaccard_prefix(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    threshold: float,
-    max_shingle_freq: int,
-    pat: str,
-) -> DataFrame:
-    """Prefix-filtered exact Jaccard pairs (see ngram_jaccard_pairs)."""
-    import math
-
-    sets_df = (
-        df.select(
-            F.col(id_col),
-            F.array_distinct(word_shingles(text_col, shingle_n, pat)).alias("__set"),
-        )
-        .filter(F.size("__set") > 0)
-        .withColumn(
-            # canonical order = sorted DISTINCT 64-bit hashes; the prefix
-            # property only needs a consistent total order, and hashing
-            # keeps the sort key 8 bytes instead of the shingle string.
-            # array_distinct matters for exactness: an in-document hash
-            # collision between two distinct shingles would otherwise
-            # shorten the effective distinct prefix and could drop a
-            # qualifying pair. On the distinct hash-set the lemma holds
-            # outright: J_hash >= J_string (collisions only merge
-            # elements), so every pair with string-Jaccard >= t shares a
-            # hash within the prefix, and the full-set re-score below is
-            # exact on the original strings.
-            "__hs",
-            F.array_distinct(
-                F.array_sort(F.transform("__set", lambda s: F.xxhash64(s)))
-            ),
-        )
-        .persist()
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    # prefix length |A| - ceil(t*|A|) + 1
-    plen = (
-        F.size("__hs")
-        - F.ceil(F.lit(float(threshold)) * F.size("__hs")).cast("int")
-        + 1
-    )
-    pref = sets_df.select(
-        F.col(id_col), F.explode(F.slice("__hs", F.lit(1), plen)).alias("__sh")
-    )
-    if max_shingle_freq < 2**62:
-        hot = (
-            pref.groupBy("__sh")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_shingle_freq)
-        )
-        pref = pref.join(F.broadcast(hot.select("__sh")), "__sh", "left_anti")
-    pref = pref.repartition(par, "__sh")
-    a, b = pref.alias("a"), pref.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.__sh") == F.col("b.__sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    sets_a = sets_df.select(
-        F.col(id_col).alias("id_a"), F.col("__set").alias("set_a")
-    )
-    sets_b = sets_df.select(
-        F.col(id_col).alias("id_b"), F.col("__set").alias("set_b")
-    )
-    j = cand.join(sets_a, "id_a").join(sets_b, "id_b")
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = F.size(F.array_union("set_a", "set_b")).cast("double")
-    return (
-        j.select(
-            "id_a", "id_b",
-            (inter / F.greatest(union, F.lit(1.0))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def ngram_containment_pairs(
@@ -886,7 +837,7 @@ def ngram_containment_pairs(
     id_col: str,
     shingle_n: int = 1,
     threshold: float = 0.8,
-    max_shingle_freq: int = 1000,
+    max_shingle_freq: int | None = 1000,
     token_pattern: str | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: containment(A in B) =
@@ -896,45 +847,16 @@ def ngram_containment_pairs(
     exactly what corpus dedup wants to catch (quote farms, wrapper
     boilerplate, partial mirrors).
 
-    Same inverted-index blocking as ngram_jaccard_pairs (hot-shingle
-    frequency cap kills the quadratic stopword bucket); emits the pair
-    when EITHER direction clears ``threshold``, with both directions
-    reported. Each containment is one double division of exact counts.
+    Same inverted-index blocking and exact counts as ngram_jaccard_pairs
+    (:func:`_shared_shingle_counts`; the hot-shingle frequency cap kills
+    the quadratic stopword bucket); emits the pair when EITHER direction
+    clears ``threshold``, with both directions reported. Each
+    containment is one double division of exact counts.
     """
     from ..functions.text import DEFAULT_TOKEN_PATTERN
 
     pat = token_pattern or DEFAULT_TOKEN_PATTERN
-    sets_df = df.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(text_col, shingle_n, pat)).alias("__set"),
-    ).filter(F.size("__set") > 0)
-    inv = sets_df.select(F.col(id_col), F.explode("__set").alias("__sh"))
-    hot = (
-        inv.groupBy("__sh")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") > max_shingle_freq)
-    )
-    inv = inv.join(F.broadcast(hot.select("__sh")), "__sh", "left_anti")
-    a, b = inv.alias("a"), inv.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.__sh") == F.col("b.__sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("__common"))
-    )
-    sizes = sets_df.select(F.col(id_col), F.size("__set").alias("__sz"))
-    j = common.join(
-        sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "sz_a"),
-        "id_a",
-    ).join(
-        sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "sz_b"),
-        "id_b",
-    )
+    j = _shared_shingle_counts(df, text_col, id_col, shingle_n, pat, max_shingle_freq)
     cab = F.col("__common").cast("double") / F.col("sz_a").cast("double")
     cba = F.col("__common").cast("double") / F.col("sz_b").cast("double")
     return (

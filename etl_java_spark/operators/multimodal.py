@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _hamming_bands, _pair_join
+
 MEDIA_META_TYPE = T.StructType(
     [
         T.StructField("uri", T.StringType()),
@@ -472,41 +474,21 @@ def phash_near_pairs(
 ) -> DataFrame:
     """Near-duplicate image pairs by perceptual-hash hamming distance,
     banded so no all-pairs join ever runs: the 64-bit hash splits into
-    ``max_hamming + 1`` bit-bands — two hashes within ``max_hamming``
-    MUST agree exactly on at least one band (pigeonhole), so the only
-    join is a band-key equi-join, verified by bit_count(xor) — the
-    simhash_near_pairs discipline on a perceptual key. Returns
-    (id_a, id_b, hamming) with id_a < id_b, deduped across bands.
+    ``max_hamming + 1`` disjoint bit-bands covering all 64 bits
+    (``dedup._hamming_bands``, shared with ``simhash_near_pairs``) — two
+    hashes within ``max_hamming`` MUST agree exactly on at least one
+    band (pigeonhole), so the only join is a band-key equi-join,
+    verified by bit_count(xor). Returns (id_a, id_b, hamming) with
+    id_a < id_b, deduped across bands.
     """
-    n_bands = max_hamming + 1
-    width = 64 // n_bands
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col(hash_col), b * width)
-            .bitwiseAND(F.lit((1 << width) - 1) if b < n_bands - 1 else F.lit((1 << (64 - b * width)) - 1))
-            .alias("key"),
-        )
-        for b in range(n_bands)
-    ]
-    banded = hashes.select(
-        F.col(id_col).alias("__id"), F.col(hash_col).alias("__h"),
-        F.explode(F.array(*bands)).alias("__b"),
-    ).select("__id", "__h", F.col("__b.band").alias("band"), F.col("__b.key").alias("key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
+    banded = _hamming_bands(
+        hashes.select(F.col(id_col).alias("__id"), F.col(hash_col).alias("__h")),
+        "__h", max_hamming,
+    )
+    ham = F.bit_count(F.col("__h_a").bitwiseXOR(F.col("__h_b")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            ham.cast("long").alias("hamming"),
-        )
+        _pair_join(banded, banded, "__id", ["__band", "__key"], ["__h"])
+        .select("id_a", "id_b", ham.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _pair_join
+
 
 def join_dim(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
     """Fact-to-dimension join with an explicit broadcast hint.
@@ -456,18 +458,10 @@ def blocked_match_pairs(
         F.col(c) for c in block_cols
     ]
     s = df.select(*cols)
-    a, b = s.alias("a"), s.alias("b")
-    cond = (F.col("a.__id") < F.col("b.__id"))
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    dist = F.levenshtein(F.col("a.__f"), F.col("b.__f"), max_dist)
+    dist = F.levenshtein(F.col("__f_a"), F.col("__f_b"), max_dist)
     return (
-        a.join(b, cond)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            dist.alias("dist"),
-        )
+        _pair_join(s, s, "__id", block_cols, ["__f"])
+        .select("id_a", "id_b", dist.alias("dist"))
         .filter(F.col("dist") >= 0)
     )
 

@@ -93,7 +93,6 @@ DEEP_TESTS = {
     ("test_streaming.py", "test_left_outer_join_sentinel_flush_matches_batch"),
     ("test_streaming.py", "test_update_mode_merge_batch_order_robust"),
     ("test_r5b_ops.py", "test_perceptual_hashes_roundtrip"),
-    ("test_r5b_ops.py", "test_prefix_filter_jaccard_parity"),
     ("test_r11_ops.py", "test_raking_weights_hits_both_margins"),
     ("test_r11_ops.py", "test_sinkhorn_plan_converges_to_margins"),
     ("test_properties_r6g.py", "test_theil_sen_matches_python_median_of_slopes"),

@@ -84,3 +84,104 @@ def test_spread_gates_on_plan_shape(spark):
     # (c) streaming input -> identity (no .rdd access, which would raise)
     stream = spark.readStream.format("rate").load()
     assert _spread(stream) is stream
+
+
+def test_dedup_clusters_rejects_non_integral_ids(spark):
+    """The label-sum probe is exact only for integral ids: a double
+    chain would round to equal sums and stop early with wrong labels,
+    so non-integral ids raise before any job runs; a NULL sum over a
+    non-empty label set raises instead of reading as converged."""
+    import pytest
+
+    from etl_java_spark.operators.dedup import dedup_clusters
+
+    doubles = spark.createDataFrame(
+        [(1.1, 1.2), (1.2, 1.3), (1.3, 1.4)], "id_a double, id_b double"
+    )
+    strings = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
+    for bad in (doubles, strings):
+        with pytest.raises(TypeError, match="integral"):
+            dedup_clusters(bad)
+    nulls = spark.createDataFrame([(None, None)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="NULL"):
+        dedup_clusters(nulls)
+    ints = spark.createDataFrame(
+        [(4, 3), (3, 2), (2, 1)], "id_a int, id_b int"
+    )
+    assert {r.cluster_id for r in dedup_clusters(ints).collect()} == {1}
+
+
+def test_hot_key_caps_keep_exactly_cap(spark):
+    """Every hot-key cap keeps a key held by exactly ``cap`` rows and
+    drops one held by ``cap + 1``; ``max_bucket_size=None`` keeps all."""
+    from etl_java_spark.operators.corpus import winnow_dup_pairs
+    from etl_java_spark.operators.dedup import (
+        minhash_candidate_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    cap = 3
+    kept_ids, hot_ids = [1, 2, 3], [11, 12, 13, 14]
+    kept_pairs = {(1, 2), (1, 3), (2, 3)}
+    hot_pairs = {(a, b) for a in hot_ids for b in hot_ids if a < b}
+
+    def pairs(df):
+        return {(r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect()}
+
+    # one-row bands: band 0 is shared within each group, band 1 unique
+    sigs = spark.createDataFrame(
+        [(i, [100, i]) for i in kept_ids] + [(i, [200, i]) for i in hot_ids],
+        "doc_id long, minhash_sig array<bigint>",
+    )
+    assert pairs(minhash_candidate_pairs(sigs, "doc_id", 2, 1, cap)) == kept_pairs
+    assert pairs(minhash_candidate_pairs(sigs, "doc_id", 2, 1, None)) == kept_pairs | hot_pairs
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha uniq{i}") for i in kept_ids]
+        + [(i, f"beta uniq{i}") for i in hot_ids],
+        "doc_id long, text string",
+    )
+    assert pairs(ngram_jaccard_pairs(docs, "text", "doc_id", 1, 0.1, cap)) == kept_pairs
+    assert pairs(winnow_dup_pairs(docs, "text", "doc_id", 1, 1, 1, cap)) == kept_pairs
+
+
+def test_hamming_banding_matches_brute_force(spark):
+    """simhash_near_pairs and phash_near_pairs share one pigeonhole
+    banding; both must return exactly the all-pairs set within
+    ``max_hamming`` bits, including negative longs and pairs that
+    differ only in the top bits 60-63."""
+    import random
+
+    from etl_java_spark.operators.dedup import simhash_near_pairs
+    from etl_java_spark.operators.multimodal import phash_near_pairs
+
+    rng = random.Random(7)
+    hashes = []
+    for _ in range(12):
+        base = rng.getrandbits(64)
+        hashes.append(base)
+        for k in range(1, 7):  # k random bit flips
+            h = base
+            for bit in rng.sample(range(64), k):
+                h ^= 1 << bit
+            hashes.append(h)
+        for bits in ((60,), (61, 63), (60, 61, 62, 63)):  # top bits only
+            hashes.append(base ^ sum(1 << b for b in bits))
+    signed = [h - (1 << 64) if h >> 63 else h for h in hashes]
+    assert any(h < 0 for h in signed)
+    df = spark.createDataFrame(list(enumerate(signed)), "id long, simhash long")
+    ph = df.select(df.id.cast("string").alias("path"), df.simhash.alias("phash"))
+    for d in (3, 4, 5):
+        want = {
+            (i, j): bin(hashes[i] ^ hashes[j]).count("1")
+            for i in range(len(hashes))
+            for j in range(i + 1, len(hashes))
+            if bin(hashes[i] ^ hashes[j]).count("1") <= d
+        }
+        got = {(r.id_a, r.id_b): r.hamming for r in simhash_near_pairs(df, "id", d).collect()}
+        assert got == want, d
+        got = {
+            tuple(sorted((int(r.id_a), int(r.id_b)))): r.hamming
+            for r in phash_near_pairs(ph, d).collect()
+        }
+        assert got == want, d

@@ -124,13 +124,10 @@ def test_ngram_jaccard_matches_python_reference(spark, docs, t):
                 jac = inter / uni if uni else 0.0
                 if jac >= t:
                     want[(i, j)] = jac
-    for pf in (False, True):
-        got = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                df, "text", "doc_id", 3, t, 10**9, prefix_filter=pf
-            ).collect()
-        }
-        assert got.keys() == want.keys(), (pf, got, want)
-        for k in want:
-            assert abs(got[k] - want[k]) < 1e-15
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(df, "text", "doc_id", 3, t, 10**9).collect()
+    }
+    assert got.keys() == want.keys(), (got, want)
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-15

@@ -210,40 +210,6 @@ def test_percent_of_parent_shares(spark):
 
 
 # ---------------------------------------------------------------------------
-# prefix-filtered jaccard pairs: exactness parity
-
-
-def test_prefix_filter_jaccard_parity(spark):
-    import random
-
-    from etl_java_spark.operators.dedup import ngram_jaccard_pairs
-
-    rng = random.Random(13)
-    vocab = [f"w{i}" for i in range(40)]
-    rows = []
-    for i in range(60):
-        rows.append((i, " ".join(rng.choices(vocab, k=rng.randint(5, 30)))))
-    # exact duplicates and near-duplicates to populate the >= t region
-    rows += [(1000 + i, rows[i][1]) for i in range(10)]
-    rows += [(2000 + i, rows[i][1] + " extra tail token") for i in range(10)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for t in (0.3, 0.5, 0.8):
-        base = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                df, "text", "doc_id", 3, t, 10**9
-            ).collect()
-        }
-        pref = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                df, "text", "doc_id", 3, t, 10**9, prefix_filter=True
-            ).collect()
-        }
-        assert base == pref, f"threshold {t}: {len(base)} vs {len(pref)}"
-
-
-# ---------------------------------------------------------------------------
 # ranking_metrics
 
 
