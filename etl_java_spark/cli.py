@@ -69,20 +69,21 @@ def main(argv: list[str] | None = None) -> int:
     # --- source (reference #1/#3/#6) ---
     if args.source_jdbc:
         if args.list_tables or args.list_columns:
-            jdbc_opts = {"driver": args.driver} if args.driver else {}
-            if args.list_tables:
-                meta = spark._jvm.java.sql.DriverManager.getConnection(args.source_jdbc).getMetaData()
-                rs = meta.getTables(None, None, "%", ["TABLE"])
+            conn = writers._jdbc_connect(spark, args.source_jdbc, driver=args.driver)
+            try:
+                meta = conn.getMetaData()
+                if args.list_tables:
+                    # getTables takes a String[]; py4j sends a list as an ArrayList
+                    types = spark.sparkContext._gateway.new_array(spark._jvm.java.lang.String, 1)
+                    types[0] = "TABLE"
+                    rs, name = meta.getTables(None, None, "%", types), "TABLE_NAME"
+                else:
+                    rs = meta.getColumns(None, None, args.list_columns.upper(), "%")
+                    name = "COLUMN_NAME"
                 while rs.next():
-                    print(rs.getString("TABLE_NAME"))
-                return 0
-            rs = (
-                spark._jvm.java.sql.DriverManager.getConnection(args.source_jdbc)
-                .getMetaData()
-                .getColumns(None, None, args.list_columns.upper(), "%")
-            )
-            while rs.next():
-                print(rs.getString("COLUMN_NAME"))
+                    print(rs.getString(name))
+            finally:
+                conn.close()
             return 0
         df = readers.read_jdbc(
             spark, args.source_jdbc, table=args.table, query=args.query,

@@ -92,11 +92,6 @@ def _pair_join(
     )
 
 
-def _hot_keys(df: DataFrame, keys: Sequence[str], cap: int) -> DataFrame:
-    """Keys held by more than ``cap`` rows, with their row count ``__n``."""
-    return df.groupBy(*keys).agg(F.count("*").alias("__n")).filter(F.col("__n") > cap)
-
-
 def _drop_hot_keys(df: DataFrame, keys: Sequence[str], cap: int | None) -> DataFrame:
     """Drop every row whose key is held by more than ``cap`` rows (a key
     held by exactly ``cap`` rows stays); ``cap=None`` keeps every key.
@@ -108,7 +103,12 @@ def _drop_hot_keys(df: DataFrame, keys: Sequence[str], cap: int | None) -> DataF
     vocabulary to every executor. The count is map-side combinable."""
     if cap is None:
         return df
-    hot = _hot_keys(df, keys, cap).select(*keys)
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("__n"))
+        .filter(F.col("__n") > cap)
+        .select(*keys)
+    )
     return df.join(F.broadcast(hot), list(keys), "left_anti")
 
 
@@ -167,11 +167,6 @@ def _shared_shingle_counts(
         common.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "sz_b"), "id_b")
     )
-
-
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact dedup: distinct on cols (or all columns). One shuffle."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
 
 
 def exact_dedup_keep_min(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -376,7 +371,6 @@ def minhash_candidate_pairs(
     bands: int = 8,
     rows_per_band: int = 4,
     max_bucket_size: int | None = 500,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """LSH banding: docs agreeing on ALL rows of >=1 band become a pair.
 
@@ -391,20 +385,11 @@ def minhash_candidate_pairs(
     Members of a pathological bucket overwhelmingly agree on their OTHER
     bands too, so recall loss is confined to pairs whose every shared
     band is hot; exact-dedup (which such docs usually are) catches the
-    identical ones first. ``log_dropped=True`` runs a small extra job to
-    report how many buckets were capped (costs one aggregate; keep off
-    in production pipelines).
+    identical ones first. Dropped buckets are not reported: counting
+    them would cost a Spark job of its own.
     """
     banded = _band_rows(sigs, id_col, bands, rows_per_band)
     buckets = ["band", "band_hash"]
-    if log_dropped and max_bucket_size is not None:
-        import logging
-
-        for r in _hot_keys(banded, buckets, max_bucket_size).collect():
-            logging.getLogger(__name__).warning(
-                "minhash LSH: dropping bucket band=%d hash=%d size=%d (> cap %d)",
-                r["band"], r["band_hash"], r["__n"], max_bucket_size,
-            )
     banded = _drop_hot_keys(banded, buckets, max_bucket_size)
     return _pair_join(banded, banded, id_col, buckets).distinct()
 
@@ -509,54 +494,6 @@ def minhash_dedup_pairs(
     # cheaper than the triple reduce-side re-read.
     pairs = materialize(pairs)
     return jaccard_verify(df, pairs, text_col, id_col, shingle_n, threshold)
-
-
-def minhash_pairs_ml(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.8,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """pyspark.ml-native MinHash near-dup pairs (SURVEY.md §2B's
-    suggested mapping): shingles -> HashingTF binary vectors ->
-    MinHashLSH.approxSimilarityJoin.
-
-    Alternative backend to ``minhash_dedup_pairs`` — same blocking idea
-    (OR-amplified hash tables), but candidate verification uses ml's
-    exact Jaccard DISTANCE on the hashed feature space, so scores can
-    differ from true shingle Jaccard under HashingTF collisions
-    (collision probability ~ n_shingles / num_features). The custom
-    pipeline remains the oracle-checked primary; this one exists for
-    interop with pyspark.ml pipelines. Returns (id_a, id_b, jaccard).
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = df.select(
-        F.col(id_col).alias("__id"), word_shingles(text_col, shingle_n).alias("__sh")
-    ).filter(F.size("__sh") > 0)
-    tf = HashingTF(
-        inputCol="__sh", outputCol="__features", numFeatures=num_features, binary=True
-    )
-    feat = tf.transform(sh)
-    lsh = MinHashLSH(
-        inputCol="__features", outputCol="__hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(feat)
-    joined = model.approxSimilarityJoin(
-        feat, feat, threshold=1.0 - threshold, distCol="__dist"
-    )
-    return (
-        joined.filter(F.col("datasetA.__id") < F.col("datasetB.__id"))
-        .select(
-            F.col("datasetA.__id").alias("id_a"),
-            F.col("datasetB.__id").alias("id_b"),
-            (1.0 - F.col("__dist")).alias("jaccard"),
-        )
-    )
 
 
 def md5_hash60(col) -> "F.Column":
@@ -701,11 +638,14 @@ def dedup_clusters(
     one hop per round and the round count grows with the LONGEST CHAIN
     in the pair graph (a path of n docs needs about n rounds), not with
     log(diameter). Near-dup clusters are usually small and dense, which
-    makes this 2-3 rounds in practice. ``max_iter`` caps the rounds and
-    the loop stops there SILENTLY: a chain longer than ``max_iter``
-    comes back split into several clusters, with no error. Each round
-    is two shuffles on id; no driver-side graph materialization, so it
-    scales with the pair list.
+    makes this 2-3 rounds in practice. Convergence is seen one round
+    after the last label change (the label sum stops falling), so a
+    graph whose longest chain needs r changing rounds needs
+    ``max_iter >= r + 1``. When ``max_iter`` rounds end with the labels
+    still changing, the call raises ``ValueError`` instead of returning
+    split clusters; ``max_iter < 1`` raises before any job runs. Each
+    round is two shuffles on id; no driver-side graph materialization,
+    so it scales with the pair list.
 
     Every round is materialized under the session's checkpoint policy
     (plans/checkpoints: reliable when the session was started with
@@ -728,6 +668,8 @@ def dedup_clusters(
             raise TypeError(
                 f"dedup_clusters needs integral ids; column {c!r} is {t.simpleString()}"
             )
+    if max_iter < 1:
+        raise ValueError(f"dedup_clusters: max_iter must be >= 1, got {max_iter}")
     held: list[DataFrame] = []
     # looked up at call time, so a wrapped make_checkpointer sees the rounds
     ckpt = checkpoints.make_checkpointer(held)
@@ -783,8 +725,13 @@ def dedup_clusters(
         if new_sum is None or (prev_sum is not None and new_sum == prev_sum):
             break
         prev_sum = new_sum
-    # zero rounds: the result is a projection of ``edges``
-    checkpoints.release(*held, keep=[labels if max_iter else edges])
+    else:
+        checkpoints.release(*held)
+        raise ValueError(
+            f"dedup_clusters: labels still changing after max_iter={max_iter} "
+            "rounds; a longer chain needs a larger max_iter"
+        )
+    checkpoints.release(*held, keep=[labels])
     return labels
 
 
@@ -1017,7 +964,7 @@ def chunk_hash_profile(
     into ``chunk_chars``-character chunks, MD5 each, and measure what
     share of chunks are bit-identical copies of a chunk seen in ANOTHER
     document. Catches templated boilerplate and partial mirrors that
-    whole-doc hashing (exact_dedup) misses, with zero tokenization cost
+    whole-doc hashing (exact_dedup_keep_min) misses, with zero tokenization cost
     — at 100 TB this is the first-pass scan that decides whether the
     expensive shingle pipelines are worth running per source.
 

@@ -121,65 +121,6 @@ def arithmetic_plane_bands(vec_col, num_planes: int, bands: int):
     return F.array(*bands_cols)
 
 
-def lsh_topk_ml(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 5,
-    bucket_length: float = 1.0,
-    num_hash_tables: int = 4,
-    seed: int = 42,
-    query_id_col: str | None = None,
-) -> DataFrame:
-    """pyspark.ml-native ANN (SURVEY.md §2B's suggested mapping):
-    BucketedRandomProjectionLSH.approxSimilarityJoin on L2-normalized
-    vectors, re-ranked to cosine.
-
-    On unit vectors Euclidean distance is monotone in cosine
-    (cos = 1 - d^2/2), so BRP-LSH buckets approximate cosine
-    neighborhoods. Alternative backend for pyspark.ml pipeline interop;
-    ``lsh_topk`` (banded sign-LSH, map-only corpus pass) remains the
-    oracle-checked primary. Result schema matches brute_force_topk.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    query_id_col = query_id_col or id_col
-
-    def unit(df, idc, alias):
-        v = F.col(vec_col)
-        nrm = F.sqrt(
-            F.aggregate(v, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double"))
-        )
-        arr = F.transform(v, lambda x: x.cast("double") / nrm)
-        return df.filter(nrm > 0).select(
-            F.col(idc).alias(alias), array_to_vector(arr).alias("__features")
-        )
-
-    c = unit(corpus, id_col, "__cid")
-    q = unit(queries, query_id_col, "__qid")
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="__features",
-        outputCol="__hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(c)
-    joined = model.approxSimilarityJoin(c, q, threshold=2.0, distCol="__dist")
-    scored = (
-        joined.select(
-            F.col("datasetB.__qid").alias("query_id"),
-            F.col("datasetA.__cid").alias("neighbor_id"),
-            (1.0 - F.col("__dist") * F.col("__dist") / 2.0).alias("cos_sim"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def fit_centroids_ml(
     corpus: DataFrame,
     vec_col: str,

@@ -61,18 +61,18 @@ class JdbcSource:
 
 @dataclass
 class MergeSink:
-    """Upsert-by-PK (reference #13/#15). PK coverage is validated against
-    the outgoing schema, reproducing ETLProcess.java:336-342."""
+    """Upsert-by-PK into a parquet table (reference #13/#15). PK coverage
+    is validated against the outgoing schema, reproducing
+    ETLProcess.java:336-342."""
 
     path: str
     pks: Sequence[str] = ()
-    fmt: str = "parquet"
 
     def write(self, spark: SparkSession, df: DataFrame) -> None:
         missing = [p for p in self.pks if p not in df.columns]
         if missing:
             raise ValueError(f"primary keys not present in pipeline output: {missing}")
-        writers.merge_by_pk(spark, df, self.path, list(self.pks), self.fmt)
+        writers.merge_by_pk(spark, df, self.path, list(self.pks))
 
 
 @dataclass

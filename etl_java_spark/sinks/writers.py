@@ -18,6 +18,12 @@ Reference parity (``/root/reference/src/etl/ETLProcess.java``):
   atomicity comes from Spark's all-or-nothing job commit protocol rather
   than manual commit/rollback.
 
+Table format: the table-state writers (``merge_by_pk``,
+``merge_by_pk_evolve``, ``insert_if_absent``, ``apply_cdc_by_pk``,
+``read_cdc_state``) read and write parquet only; ``append`` and
+``overwrite`` take any format Spark writes. There is no Delta backend:
+delta-spark is not a dependency of this engine.
+
 Cost model: on a hive-partitioned table ``merge_by_pk`` lists, reads
 and rewrites only the partitions a batch touches — O(touched
 partitions) — and needs no eager checkpoint, because dynamic partition
@@ -40,12 +46,10 @@ from ..plans.checkpoints import materialize, release
 REFERENCE_BATCH_SIZE = 1000  # ETLProcess.java:210
 
 
-def _read_state_or_cold_start(
-    spark: SparkSession, path: str, fmt: str = "parquet"
-) -> DataFrame | None:
-    """Read a writer's persisted state table; ``None`` ONLY on a true
-    cold start (PATH_NOT_FOUND error class). Any other read failure —
-    transient IO, permissions, corruption — re-raises: the caller is
+def _read_state_or_cold_start(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a writer's persisted parquet state table; ``None`` ONLY on a
+    true cold start (PATH_NOT_FOUND error class). Any other read failure
+    — transient IO, permissions, corruption — re-raises: the caller is
     about to ``mode("overwrite")`` the path, and misreading such an
     error as cold start would silently destroy all prior state
     (tombstones, merged history). Mirrors ``read_incremental``'s
@@ -54,7 +58,7 @@ def _read_state_or_cold_start(
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.format(fmt).load(path)
+        return spark.read.parquet(path)
     except AnalysisException as ex:
         getter = getattr(ex, "getCondition", None) or getattr(
             ex, "getErrorClass", None
@@ -175,7 +179,6 @@ def _merge_touched_partitions(
     updates: DataFrame,
     path: str,
     pks: list[str],
-    fmt: str,
     partition_by: list[str],
     touched: list[str],
 ) -> bool:
@@ -198,18 +201,16 @@ def _merge_touched_partitions(
         sample = Path(root, rel).toString()
     # Loading a leaf directory as its own root infers no partition
     # columns: this is the data schema, from one footer.
-    schema = _table_schema(spark.read.format(fmt).load(sample).schema, updates, partition_by)
+    schema = _table_schema(spark.read.parquet(sample).schema, updates, partition_by)
     if dirs:
-        existing = (
-            spark.read.format(fmt).schema(schema).option("basePath", path).load(dirs)
-        )
+        existing = spark.read.schema(schema).option("basePath", path).parquet(*dirs)
     else:
         existing = spark.createDataFrame([], schema)
     # No checkpoint: dynamic overwrite stages its output under
     # .spark-staging-* and swaps the touched directories in only at job
     # commit, after every task has read its source files. A failed job
     # leaves the table as it was.
-    merge_dataframes(existing, updates, pks).write.format(fmt).mode("overwrite").option(
+    merge_dataframes(existing, updates, pks).write.format("parquet").mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy(*partition_by).save(path)
     spark.catalog.refreshByPath(path)
@@ -220,10 +221,10 @@ def _rewrite_table(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    fmt: str,
     partition_by: Sequence[str] | None = None,
 ) -> None:
-    """Overwrite ``path`` with ``df``, which may read ``path`` itself.
+    """Overwrite the parquet table at ``path`` with ``df``, which may
+    read ``path`` itself.
 
     A static overwrite deletes ``path`` before its job runs, so ``df`` is
     materialized first (plans/checkpoints policy). It is released once
@@ -231,7 +232,7 @@ def _rewrite_table(
     dropped from the shared FileStatusCache."""
     local = materialize(df)
     try:
-        w = local.write.format(fmt).mode("overwrite")
+        w = local.write.format("parquet").mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(path)
@@ -245,10 +246,9 @@ def merge_by_pk(
     updates: DataFrame,
     path: str,
     pks: Sequence[str],
-    fmt: str = "parquet",
     partition_by: Sequence[str] | None = None,
 ) -> None:
-    """Upsert ``updates`` into the table stored at ``path`` keyed on pks.
+    """Upsert ``updates`` into the parquet table at ``path`` keyed on pks.
 
     Emulated MERGE (merge_dataframes + rewrite). With ``partition_by`` (a
     hive-partitioned table) the merge is PARTITION-SCOPED, and listing,
@@ -277,42 +277,29 @@ def merge_by_pk(
     replaceWhere): an update must not move a PK across partitions — the
     stale row in the old partition would survive. Partition columns
     should be PK-derived or immutable per PK.
-
-    ``fmt="delta"`` raises: delta-spark is not a dependency of this
-    engine, and writing parquet instead would silently change the
-    table's format.
     """
     pks = list(pks)
     _check_idents(*pks)
-    if fmt == "delta":
-        raise RuntimeError(
-            "merge_by_pk(fmt='delta') is not supported: delta-spark is not a "
-            "dependency of this engine, and writing parquet instead would "
-            "silently change the table format"
-        )
     partition_by = list(partition_by or [])
     if partition_by:
         touched = _touched_partition_dirs(spark, updates, partition_by)
         if touched is not None and _merge_touched_partitions(
-            spark, updates, path, pks, fmt, partition_by, touched
+            spark, updates, path, pks, partition_by, touched
         ):
             return
 
-    existing = _read_state_or_cold_start(spark, path, fmt)
+    existing = _read_state_or_cold_start(spark, path)
     if existing is None:
-        w = updates.dropDuplicates(pks).write.format(fmt).mode("overwrite")
+        w = updates.dropDuplicates(pks).write.format("parquet").mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(path)
         return
     if partition_by:
         # re-read with typed partition columns (see _table_schema)
-        existing = (
-            spark.read.format(fmt)
-            .schema(_table_schema(existing.schema, updates, partition_by))
-            .load(path)
-        )
-    _rewrite_table(spark, merge_dataframes(existing, updates, pks), path, fmt, partition_by)
+        schema = _table_schema(existing.schema, updates, partition_by)
+        existing = spark.read.schema(schema).parquet(path)
+    _rewrite_table(spark, merge_dataframes(existing, updates, pks), path, partition_by)
 
 
 def insert_if_absent_dataframes(existing: DataFrame, new: DataFrame) -> DataFrame:
@@ -329,17 +316,15 @@ def insert_if_absent_dataframes(existing: DataFrame, new: DataFrame) -> DataFram
     )
 
 
-def insert_if_absent(
-    spark: SparkSession, new: DataFrame, path: str, fmt: str = "parquet"
-) -> None:
-    existing = _read_state_or_cold_start(spark, path, fmt)
+def insert_if_absent(spark: SparkSession, new: DataFrame, path: str) -> None:
+    existing = _read_state_or_cold_start(spark, path)
     if existing is None:
-        new.dropDuplicates().write.format(fmt).mode("overwrite").save(path)
+        new.dropDuplicates().write.format("parquet").mode("overwrite").save(path)
         return
     # An append deletes nothing, so the rows to add need no checkpoint:
     # the job reads the existing files it listed at planning time and
     # its new files appear only at job commit.
-    insert_if_absent_dataframes(existing, new).write.format(fmt).mode("append").save(path)
+    insert_if_absent_dataframes(existing, new).write.format("parquet").mode("append").save(path)
 
 
 def write_jdbc(
@@ -562,22 +547,21 @@ def apply_cdc_by_pk(
     pks: Sequence[str],
     op_col: str = "op",
     seq_col: str = "seq",
-    fmt: str = "parquet",
 ) -> None:
-    """Apply a CDC batch to the table at ``path`` (apply_cdc_dataframes
-    + read-modify-atomic-rewrite through _rewrite_table). At warehouse
-    scale the same reconcile runs partition-scoped like merge_by_pk, or
-    as a native Delta MERGE with whenMatchedDelete — this keeps the
-    parquet emulation exact."""
+    """Apply a CDC batch to the parquet table at ``path``
+    (apply_cdc_dataframes + read-modify-atomic-rewrite through
+    _rewrite_table). At warehouse scale the same reconcile runs
+    partition-scoped like merge_by_pk, or as a native Delta MERGE with
+    whenMatchedDelete — this keeps the parquet emulation exact."""
     pks = list(pks)
     _check_idents(*pks)
-    state = _read_state_or_cold_start(spark, path, fmt)
-    _rewrite_table(spark, apply_cdc_dataframes(state, changes, pks, op_col, seq_col), path, fmt)
+    state = _read_state_or_cold_start(spark, path)
+    _rewrite_table(spark, apply_cdc_dataframes(state, changes, pks, op_col, seq_col), path)
 
 
-def read_cdc_state(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
+def read_cdc_state(spark: SparkSession, path: str) -> DataFrame:
     """Live rows of a CDC state table: tombstones filtered, flag dropped."""
-    df = spark.read.format(fmt).load(path)
+    df = spark.read.parquet(path)
     return df.filter(~F.col("__deleted")).drop("__deleted")
 
 
@@ -664,7 +648,6 @@ def merge_by_pk_evolve(
     updates: DataFrame,
     path: str,
     pks: Sequence[str],
-    fmt: str = "parquet",
 ) -> None:
     """Schema-EVOLVING upsert: like merge_by_pk, but an update batch
     may carry columns the stored table has never seen (and vice
@@ -678,11 +661,9 @@ def merge_by_pk_evolve(
     """
     pks = list(pks)
     _check_idents(*pks)
-    existing = _read_state_or_cold_start(spark, path, fmt)
+    existing = _read_state_or_cold_start(spark, path)
     if existing is None:
-        updates.dropDuplicates(pks).write.format(fmt).mode(
-            "overwrite"
-        ).save(path)
+        updates.dropDuplicates(pks).write.format("parquet").mode("overwrite").save(path)
         return
     ex_w, up_w = align_schemas_evolve(existing, updates)
-    _rewrite_table(spark, merge_dataframes(ex_w, up_w, pks), path, fmt)
+    _rewrite_table(spark, merge_dataframes(ex_w, up_w, pks), path)

@@ -6,8 +6,9 @@ Reference parity (SURVEY.md §2A):
   one single-threaded cursor; a 1000-executor cluster needs
   partitionColumn/lowerBound/upperBound/numPartitions).
 - #3 raw SQL passthrough   (``ETLProcess.java:84-86,163-164``)
-  -> ``sql_passthrough`` over registered temp views (Catalyst replaces the
-  source DB's optimizer) or JDBC ``query`` option for source-side pushdown.
+  -> ``spark.sql`` over the temp views ``register_views`` creates (Catalyst
+  replaces the source DB's optimizer) or JDBC ``query`` option for
+  source-side pushdown.
 - #4/#5 catalog listings    (``ETLProcess.java:142-159,302-311``)
   -> ``list_tables`` / ``list_columns`` over ``spark.catalog``.
 """
@@ -228,20 +229,11 @@ def load_star_schema(
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each fixture table as a temp view (enables sql_passthrough)."""
+    """Register each fixture table as a temp view, for ``spark.sql``."""
     dfs = load_star_schema(spark, sf_dir)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-def sql_passthrough(spark: SparkSession, query: str) -> DataFrame:
-    """Reference #3: arbitrary user SQL, executed verbatim.
-
-    The reference ships the string to SQL Server (ETLProcess.java:163-164);
-    here Spark's parser/analyzer/Catalyst run it over registered views.
-    """
-    return spark.sql(query)
 
 
 def list_tables(spark: SparkSession) -> list[str]:

@@ -82,51 +82,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Same running totals on the transformWithStateInPandas API
-    (Spark 4's successor to applyInPandasWithState: typed state
-    variables managed by a StatefulProcessor, RocksDB-ready, supports
-    timers/TTL). Kept semantically identical to running_user_totals so
-    the batch-equivalence test pins both implementations.
-
-    Runtime requirement: this API needs ``google.protobuf`` (the state
-    server speaks protobuf to the Python worker); environments without
-    it — like this container — must use ``running_user_totals``. The
-    equivalence test auto-skips when protobuf is absent.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", RUNNING_TOTALS_STATE)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            n, total, mx = (
-                self._state.get() if self._state.exists() else (0, 0.0, float("-inf"))
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                if len(pdf):
-                    mx = max(mx, float(pdf["value"].max()))
-            self._state.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType=RUNNING_TOTALS_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )

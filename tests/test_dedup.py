@@ -111,6 +111,27 @@ def test_dedup_clusters_rejects_non_integral_ids(spark):
     assert {r.cluster_id for r in dedup_clusters(ints).collect()} == {1}
 
 
+def test_dedup_clusters_raises_past_max_iter(spark, held_rdds):
+    """A chain that needs more rounds than ``max_iter`` raises instead of
+    coming back split, and releases its rounds; ``max_iter < 1`` is
+    rejected; the default bound resolves the same chain to one cluster."""
+    import pytest
+
+    from etl_java_spark.operators.dedup import dedup_clusters
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
+    )
+    with pytest.raises(ValueError, match="max_iter=3"):
+        dedup_clusters(chain, max_iter=3)
+    assert held_rdds() == set()
+    with pytest.raises(ValueError, match="max_iter must be >= 1"):
+        dedup_clusters(chain, max_iter=0)
+    assert sorted(tuple(r) for r in dedup_clusters(chain).collect()) == [
+        (i, 1) for i in range(1, 7)
+    ]
+
+
 def test_hot_key_caps_keep_exactly_cap(spark):
     """Every hot-key cap keeps a key held by exactly ``cap`` rows and
     drops one held by ``cap + 1``; ``max_bucket_size=None`` keeps all."""

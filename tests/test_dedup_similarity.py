@@ -169,36 +169,3 @@ def test_embedding_neardup(spark):
     out = DD.embedding_near_dup_pairs(df, "embedding", "vec_id", threshold=0.999, num_planes=8)
     got = {(r.id_a, r.id_b) for r in out.collect()}
     assert got == {(0, 1)}
-
-
-def test_minhash_pairs_ml_recall(spark, sf_small):
-    """pyspark.ml MinHashLSH backend finds the injected near-dups that
-    the custom pipeline (q50 oracle) defines as ground truth."""
-    d = spark.read.parquet(f"{sf_small}/documents.parquet").select("doc_id", "text")
-    mutated = d.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra tail token")).alias("text"),
-    )
-    corpus = d.unionByName(mutated)
-    truth = {
-        (r.id_a, r.id_b)
-        for r in DD.minhash_dedup_pairs(corpus, "text", "doc_id", threshold=0.5).collect()
-    }
-    got = {
-        (r.id_a, r.id_b)
-        for r in DD.minhash_pairs_ml(corpus, "text", "doc_id", threshold=0.5).collect()
-    }
-    assert truth, "fixture must contain near-dup pairs"
-    recall = len(truth & got) / len(truth)
-    assert recall >= 0.8, f"ml MinHashLSH recall too low: {recall}"
-
-
-def test_lsh_topk_ml_recall(spark, sf_small):
-    e = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 10)
-    exact = SIM.brute_force_topk(e, q, "embedding", "vec_id", k=5).collect()
-    approx = SIM.lsh_topk_ml(e, q, "embedding", "vec_id", k=5).collect()
-    exact_set = {(r.query_id, r.neighbor_id) for r in exact}
-    approx_set = {(r.query_id, r.neighbor_id) for r in approx}
-    recall = len(exact_set & approx_set) / len(exact_set)
-    assert recall >= 0.5, f"BRP-LSH recall too low: {recall}"

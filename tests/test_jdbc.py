@@ -91,6 +91,50 @@ def test_jdbc_upsert_varchar_staging_many_rows(spark, derby_url):
     assert {r[1] for r in got.collect()} == {f"NAME_{i}" for i in range(200)}
 
 
+def test_cli_lists_jdbc_catalog(spark, derby_url, capsys):
+    """--list-tables and --list-columns read the JDBC catalog through
+    the --driver the user names; a driver that does not exist fails."""
+    from etl_java_spark.cli import main
+
+    jdbc_execute(
+        spark, derby_url, "CREATE TABLE cli_cat (id INT PRIMARY KEY, name VARCHAR(20))"
+    )
+    capsys.readouterr()
+    assert main(["--source-jdbc", derby_url, "--driver", DRIVER, "--list-tables"]) == 0
+    assert "CLI_CAT" in capsys.readouterr().out.split()
+    assert main(["--source-jdbc", derby_url, "--driver", DRIVER, "--list-columns", "cli_cat"]) == 0
+    assert capsys.readouterr().out.split() == ["ID", "NAME"]
+    with pytest.raises(Exception, match="ClassNotFoundException"):
+        main(["--source-jdbc", derby_url, "--driver", "no.such.Driver", "--list-tables"])
+
+
+def test_pipeline_from_jdbc_source(spark, derby_url, tmp_path):
+    """The reference job from a JDBC source: Derby table -> select ->
+    rename -> transforms -> upsert into parquet. A second run of the
+    same job leaves the table unchanged."""
+    from etl_java_spark.plans.pipeline import JdbcSource, MergeSink, Pipeline
+
+    src = spark.createDataFrame(
+        [(1, "Ann", "RETAIL", 0.5), (2, "Bob", "Wholesale", 1.5), (3, "Cy", "retail", 2.5)],
+        "c_id int, c_name string, c_seg string, c_bal double",
+    )
+    write_jdbc(src, derby_url, "pipe_src", mode="overwrite", driver=DRIVER)
+    out = str(tmp_path / "dest")
+    job = Pipeline(
+        source=JdbcSource(derby_url, table="pipe_src", options={"driver": DRIVER}),
+        select=["c_id", "c_name", "c_seg"],
+        rename={"c_id": "id", "c_name": "name", "c_seg": "segment"},
+        transforms=[("segment", "lower"), ("name", "concat", "!")],
+        sink=MergeSink(out, pks=["id"]),
+    )
+    expected = [(1, "Ann!", "retail"), (2, "Bob!", "wholesale"), (3, "Cy!", "retail")]
+    for _ in range(2):
+        job.run(spark)
+        got = spark.read.parquet(out)
+        assert got.columns == ["id", "name", "segment"]
+        assert sorted(tuple(r) for r in got.collect()) == expected
+
+
 def test_q153_roundtrip_uses_live_derby(spark, capfd):
     """q153 must exercise the real JDBC path, not its parquet fallback."""
     from etl_java_spark.queries import QUERIES

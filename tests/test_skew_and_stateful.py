@@ -52,28 +52,3 @@ def test_stateful_running_totals_equals_batch(spark, sf_small):
     g = {r.user_id: (r.n_events, r.total_value, r.max_value) for r in got.collect()}
     e = {r.user_id: (r.n_events, r.total_value, r.max_value) for r in expected.collect()}
     assert g == e
-
-
-def test_transform_with_state_equals_batch(spark, sf_small):
-    """Spark 4 transformWithStateInPandas path produces the same running
-    totals as the applyInPandasWithState path and the batch aggregate."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas needs google.protobuf (not in container)")
-    from etl_java_spark.streaming.events import read_events_stream, run_to_memory
-    from etl_java_spark.streaming.stateful import running_user_totals_tws
-
-    stream = read_events_stream(spark, sf_small)
-    got = run_to_memory(running_user_totals_tws(stream), "t_tws", output_mode="update")
-    batch = normalize_nanos(spark.read.parquet(f"{sf_small}/events.parquet"))
-    expected = batch.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum("value").alias("total_value"),
-        F.max("value").alias("max_value"),
-    )
-    g = {r.user_id: (r.n_events, round(r.total_value, 6), r.max_value) for r in got.collect()}
-    e = {r.user_id: (r.n_events, round(r.total_value, 6), r.max_value) for r in expected.collect()}
-    assert g == e
