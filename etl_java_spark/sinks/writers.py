@@ -6,8 +6,10 @@ Reference parity (``/root/reference/src/etl/ETLProcess.java``):
   dead MERGE builders confirm MERGE semantics were intended)
   -> ``merge_by_pk``: dataframe-level MERGE as join + union + rewrite
   (left-anti existing vs updates ∪ new) — the standard emulation
-  (pyspark_guide "CDC / SCD2"). The physical plan is one shuffle on the
-  PK, broadcast when the update side is small.
+  (pyspark_guide "CDC / SCD2"). The batch is deduplicated by one
+  shuffle on the PK; the anti-join broadcasts the batch keys when the
+  batch is small; a partitioned write adds one rebalancing shuffle of
+  the written rows (``_write_table``).
 - #14 insert-if-absent on ALL columns (``:444-466``)
   -> ``insert_if_absent``: left-anti join on every column + append. The
   incoming batch is deduplicated first — the reference's behavior was
@@ -28,13 +30,16 @@ Cost model: on a hive-partitioned table ``merge_by_pk`` lists, reads
 and rewrites only the partitions a batch touches — O(touched
 partitions) — and needs no eager checkpoint, because dynamic partition
 overwrite swaps the touched directories in only at job commit (details
-in its docstring). Full rewrites are static overwrites, which delete the
-table before their job runs: ``_rewrite_table`` materializes their input
-first and releases it after.
+in its docstring). Every partitioned table-state write is an optimized
+write: one file per written partition. Full rewrites are static
+overwrites, which delete the table before their job runs:
+``_rewrite_table`` materializes their input first and releases it
+after.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,19 +93,21 @@ def merge_dataframes(
     """MERGE semantics as a pure DataFrame op (reference #13/#15).
 
     WHEN MATCHED -> take the update row; WHEN NOT MATCHED -> insert.
-    Updates are deduplicated per PK first (dropDuplicates) so the
-    anti-join is well-defined. Which row wins among in-batch duplicate
-    PKs is UNDEFINED — it can change with partitioning and run to run;
-    callers that need last-wins must reduce the batch themselves.
+    ``existing`` is anti-joined against the batch's raw keys: an
+    anti-join only tests existence, so duplicate keys change nothing
+    there. Only the inserted side is deduplicated per PK
+    (dropDuplicates), and which row wins among in-batch duplicate PKs is
+    UNDEFINED — it can change with partitioning and run to run; callers
+    that need last-wins must reduce the batch themselves.
 
-    Scale: one shuffle on the PK columns for the anti-join; when
-    ``updates`` is small relative to ``existing`` Spark broadcasts it
-    (AQE decides). No collect, no per-row work.
+    Scale: the batch is aggregated once, by one shuffle on the PK; the
+    anti-join's key side is broadcast when ``updates`` is small relative
+    to ``existing`` (AQE decides), else it shuffles on the PK too. No
+    collect, no per-row work.
     """
     pks = list(pks)
-    updates = updates.dropDuplicates(pks)
     kept = existing.join(updates.select(*pks), on=pks, how="left_anti")
-    return kept.unionByName(updates.select(*existing.columns))
+    return kept.unionByName(updates.dropDuplicates(pks).select(*existing.columns))
 
 
 #: Above this many touched partitions the partition-scoped MERGE falls
@@ -138,15 +145,15 @@ def _touched_partition_dirs(
     )
 
 
-def _some_partition_dir(spark: SparkSession, fs, root, partition_by: Sequence[str]) -> str | None:
-    """Relative path of any existing leaf partition directory under
-    ``root`` — one ``listStatus`` per partition level, never a recursive
+def _some_partition_dir(spark: SparkSession, fs, root, partition_by: Sequence[str]):
+    """Any existing leaf partition directory under ``root`` (a Hadoop
+    Path) — one ``listStatus`` per partition level, never a recursive
     listing — or None when there is none (including a missing root)."""
     if not fs.exists(root):
         return None
     jvm = spark._jvm
     utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    rel, cur = [], root
+    cur = root
     for c in partition_by:
         prefix = utils.escapePathName(c) + "="
         names = sorted(
@@ -155,9 +162,47 @@ def _some_partition_dir(spark: SparkSession, fs, root, partition_by: Sequence[st
         hit = next((n for n in names if n.startswith(prefix)), None)
         if hit is None:
             return None
-        rel.append(hit)
         cur = jvm.org.apache.hadoop.fs.Path(cur, hit)
-    return "/".join(rel)
+    return cur
+
+
+def _leaf_data_schema(spark: SparkSession, fs, leaf) -> StructType:
+    """Data schema of the parquet leaf directory ``leaf`` (a Hadoop
+    Path), read on the driver from one footer — no Spark job.
+
+    Spark's own rule, as its schema inference applies it to the same
+    directory: the first data file in path order (names starting with
+    ``_`` or ``.`` are not data), ``ParquetFileFormat.
+    readSchemaFromFooter`` (the writer's Spark row-metadata key when
+    there is one — pyarrow writes none — else the parquet schema
+    converted under the session's SQLConf, so ``nanosAsLong`` holds),
+    then ``asNullable`` as every file source's data schema is."""
+    first = min(
+        (
+            st for st in fs.listStatus(leaf)
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        ),
+        key=lambda st: st.getPath().toString(),
+        default=None,
+    )
+    if first is None:
+        # No footer to read: Spark's inference judges the directory, and
+        # raises UNABLE_TO_INFER_SCHEMA for an empty one.
+        return spark.read.parquet(leaf.toString()).schema
+    jvm = spark._jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    conf = spark._jsc.hadoopConfiguration()
+    meta = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    converter = parquet.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(first.getPath(), meta), converter
+    ).asNullable()
+    return StructType.fromJson(json.loads(schema.json()))
 
 
 def _table_schema(
@@ -172,6 +217,31 @@ def _table_schema(
         [f for f in data.fields if f.name not in partition_by]
         + [StructField(c, updates.schema[c].dataType, True) for c in partition_by]
     )
+
+
+def _write_table(
+    df: DataFrame,
+    path: str,
+    partition_by: Sequence[str] | None = None,
+    dynamic: bool = False,
+) -> None:
+    """Overwrite the parquet table at ``path`` with ``df`` — the whole
+    table, or with ``dynamic`` only the partitions ``df`` holds rows of.
+
+    A partitioned write is an optimized write: ``df`` is rebalanced on
+    the partition columns first, so each partition lands in one task
+    and one file. AQE sizes the tasks to ``advisoryPartitionSizeInBytes``:
+    small partitions share a task, and only a partition larger than that
+    is split over several files. The price is one shuffle of the written
+    rows; unpartitioned writes take no such shuffle."""
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
+    w = df.write.format("parquet").mode("overwrite")
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.save(path)
 
 
 def _merge_touched_partitions(
@@ -191,28 +261,22 @@ def _merge_touched_partitions(
     Path = jvm.org.apache.hadoop.fs.Path
     root = Path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    dirs = [p.toString() for p in (Path(root, rel) for rel in touched) if fs.exists(p)]
+    dirs = [p for p in (Path(root, rel) for rel in touched) if fs.exists(p)]
+    sample = dirs[0] if dirs else _some_partition_dir(spark, fs, root, partition_by)
+    if sample is None:
+        return False
+    schema = _table_schema(_leaf_data_schema(spark, fs, sample), updates, partition_by)
     if dirs:
-        sample = dirs[0]
-    else:
-        rel = _some_partition_dir(spark, fs, root, partition_by)
-        if rel is None:
-            return False
-        sample = Path(root, rel).toString()
-    # Loading a leaf directory as its own root infers no partition
-    # columns: this is the data schema, from one footer.
-    schema = _table_schema(spark.read.parquet(sample).schema, updates, partition_by)
-    if dirs:
-        existing = spark.read.schema(schema).option("basePath", path).parquet(*dirs)
+        existing = spark.read.schema(schema).option("basePath", path).parquet(
+            *[p.toString() for p in dirs]
+        )
     else:
         existing = spark.createDataFrame([], schema)
     # No checkpoint: dynamic overwrite stages its output under
     # .spark-staging-* and swaps the touched directories in only at job
     # commit, after every task has read its source files. A failed job
     # leaves the table as it was.
-    merge_dataframes(existing, updates, pks).write.format("parquet").mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(*partition_by).save(path)
+    _write_table(merge_dataframes(existing, updates, pks), path, partition_by, dynamic=True)
     spark.catalog.refreshByPath(path)
     return True
 
@@ -232,10 +296,7 @@ def _rewrite_table(
     dropped from the shared FileStatusCache."""
     local = materialize(df)
     try:
-        w = local.write.format("parquet").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(path)
+        _write_table(local, path, partition_by)
     finally:
         release(local)
     spark.catalog.refreshByPath(path)
@@ -259,13 +320,17 @@ def merge_by_pk(
     2. one existence check per touched directory — the table root is
        never listed, so no whole-table listing job runs;
     3. the existing touched directories are read with ``basePath`` set
-       to the root and an explicit schema (data columns from one footer,
-       partition columns typed as in ``updates``, never inferred);
-    4. the merged frame is written straight through dynamic partition
-       overwrite. No checkpoint is needed: dynamic overwrite stages its
-       output and replaces the touched directories only at job commit,
-       after every task has read its inputs, so a failed job leaves the
-       table unchanged. Untouched partitions' files are not rewritten
+       to the root and an explicit schema: data columns from one
+       footer, read on the driver by Spark's own rule (no schema
+       inference job; ``_leaf_data_schema``), partition columns typed
+       as in ``updates``, never inferred;
+    4. the merged frame is rebalanced on the partition columns and
+       written straight through dynamic partition overwrite, so each
+       touched partition is replaced by one file (``_write_table``). No
+       checkpoint is needed: dynamic overwrite stages its output and
+       replaces the touched directories only at job commit, after every
+       task has read its inputs, so a failed job leaves the table
+       unchanged. Untouched partitions' files are not rewritten
        (byte-identical; see test_sinks).
 
     A batch that touches only new partitions writes them and rewrites
@@ -290,10 +355,7 @@ def merge_by_pk(
 
     existing = _read_state_or_cold_start(spark, path)
     if existing is None:
-        w = updates.dropDuplicates(pks).write.format("parquet").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(path)
+        _write_table(updates.dropDuplicates(pks), path, partition_by)
         return
     if partition_by:
         # re-read with typed partition columns (see _table_schema)
@@ -319,7 +381,7 @@ def insert_if_absent_dataframes(existing: DataFrame, new: DataFrame) -> DataFram
 def insert_if_absent(spark: SparkSession, new: DataFrame, path: str) -> None:
     existing = _read_state_or_cold_start(spark, path)
     if existing is None:
-        new.dropDuplicates().write.format("parquet").mode("overwrite").save(path)
+        _write_table(new.dropDuplicates(), path)
         return
     # An append deletes nothing, so the rows to add need no checkpoint:
     # the job reads the existing files it listed at planning time and
@@ -550,9 +612,9 @@ def apply_cdc_by_pk(
 ) -> None:
     """Apply a CDC batch to the parquet table at ``path``
     (apply_cdc_dataframes + read-modify-atomic-rewrite through
-    _rewrite_table). At warehouse scale the same reconcile runs
-    partition-scoped like merge_by_pk, or as a native Delta MERGE with
-    whenMatchedDelete — this keeps the parquet emulation exact."""
+    _rewrite_table). The whole table is rewritten on every batch; the
+    same reconcile could run partition-scoped like merge_by_pk, which
+    this writer does not do yet."""
     pks = list(pks)
     _check_idents(*pks)
     state = _read_state_or_cold_start(spark, path)
@@ -663,7 +725,7 @@ def merge_by_pk_evolve(
     _check_idents(*pks)
     existing = _read_state_or_cold_start(spark, path)
     if existing is None:
-        updates.dropDuplicates(pks).write.format("parquet").mode("overwrite").save(path)
+        _write_table(updates.dropDuplicates(pks), path)
         return
     ex_w, up_w = align_schemas_evolve(existing, updates)
     _rewrite_table(spark, merge_dataframes(ex_w, up_w, pks), path)

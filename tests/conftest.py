@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import collections
 import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -57,6 +59,40 @@ def reliable_checkpoints(spark, tmp_path):
             conf.remove("spark.checkpoint.dir")
 
     return on
+
+
+JobCounts = collections.namedtuple("JobCounts", "jobs stages tasks")
+
+
+@pytest.fixture
+def job_counts(spark):
+    """Return a function that calls ``fn()`` under a job group of its own
+    and returns the Spark work it ran as ``JobCounts(jobs, stages,
+    tasks)``, read from ``statusTracker`` (which works with the UI off).
+    A stage that ran no task (its shuffle output was reused) is not
+    counted, the same rule as perfbench's traced runs."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job-counts-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job and stage events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        stages = [
+            si
+            for jid in jobs
+            for si in map(st.getStageInfo, st.getJobInfo(jid).stageIds)
+            if si is not None and si.numCompletedTasks + si.numFailedTasks > 0
+        ]
+        return JobCounts(len(jobs), len(stages), sum(si.numTasks for si in stages))
+
+    return run
 
 
 @pytest.fixture

@@ -334,3 +334,105 @@ def test_writers_release_blocks_and_restore_conf(spark, tmp_path, monkeypatch):
         with pytest.raises(RuntimeError, match="write failed"):
             check(name, call)
         assert dict(spark.conf.getAll) == conf, name
+
+
+def test_merge_by_pk_one_file_per_written_partition(spark, tmp_path, monkeypatch):
+    """Partitioned table-state writes are optimized writes: after the cold
+    start, a partition-scoped merge and a full rewrite, every partition
+    the write touched holds exactly one parquet file, untouched ones stay
+    byte-identical, and the stored rows are ``merge_dataframes`` of the
+    same inputs."""
+    from etl_java_spark.sinks import writers
+
+    schema = "id int, part string, v string"
+    path = str(tmp_path / "t")
+
+    def table():
+        return spark.read.schema(schema).parquet(path)
+
+    def files_per_dir():
+        out = {}
+        for k in _partition_files(path):
+            out[os.path.dirname(k)] = out.get(os.path.dirname(k), 0) + 1
+        return out
+
+    # each partition's rows start spread over 4 input partitions
+    base = spark.createDataFrame(
+        [(i, f"p{i % 3}", f"v{i}") for i in range(60)], schema
+    ).repartition(4)
+    merge_by_pk(spark, base, path, ["id"], partition_by=["part"])
+    assert files_per_dir() == {"part=p0": 1, "part=p1": 1, "part=p2": 1}
+
+    # an update and an insert in p0, a new partition p3, and an exact
+    # duplicate row; p1 and p2 are untouched
+    batch = spark.createDataFrame(
+        [(0, "p0", "A"), (99, "p0", "B"), (100, "p3", "C"), (100, "p3", "C")], schema
+    ).repartition(4)
+    expected = _rows(merge_dataframes(table(), batch, ["id"]))
+    before = _partition_files(path)
+    merge_by_pk(spark, batch, path, ["id"], partition_by=["part"])
+    assert files_per_dir() == {"part=p0": 1, "part=p1": 1, "part=p2": 1, "part=p3": 1}
+    untouched = {k: v for k, v in before.items() if k.startswith(("part=p1/", "part=p2/"))}
+    assert {k: v for k, v in _partition_files(path).items() if k in untouched} == untouched
+    assert len(untouched) == 2
+    assert _rows(table()) == expected
+
+    monkeypatch.setattr(writers, "MAX_PRUNED_PARTITIONS", 0)
+    batch = spark.createDataFrame([(1, "p1", "D")], schema)
+    expected = _rows(merge_dataframes(table(), batch, ["id"]))
+    merge_by_pk(spark, batch, path, ["id"], partition_by=["part"])
+    assert files_per_dir() == {"part=p0": 1, "part=p1": 1, "part=p2": 1, "part=p3": 1}
+    assert _rows(table()) == expected
+
+
+def test_leaf_data_schema_matches_spark_inference(spark, tmp_path):
+    """The driver-side footer schema of a leaf directory equals the schema
+    Spark infers for it, for files written by pyarrow (no Spark row
+    metadata; a nanosecond timestamp reads as long under nanosAsLong) and
+    by Spark (timestamp, nested struct); an empty directory raises."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType
+
+    from etl_java_spark.sinks.writers import _leaf_data_schema
+
+    by_arrow = tmp_path / "arrow"
+    by_arrow.mkdir()
+    pq.write_table(
+        pa.table({
+            "i": pa.array([1], pa.int32()),
+            "l": pa.array([2], pa.int64()),
+            "d": pa.array([1.5], pa.float64()),
+            "s": pa.array(["x"], pa.string()),
+            "dt": pa.array([datetime.date(2024, 1, 1)], pa.date32()),
+            "dec": pa.array([decimal.Decimal("1.23")], pa.decimal128(10, 2)),
+            "ts": pa.array([1], pa.timestamp("ns")),
+        }),
+        str(by_arrow / "a.parquet"),
+        version="2.6",
+    )
+    by_spark = str(tmp_path / "spark")
+    spark.sql(
+        "SELECT 1 AS id, TIMESTAMP'2024-01-01 00:00:00' AS ts,"
+        " named_struct('a', 1L, 'b', named_struct('c', 'x')) AS nested"
+    ).write.parquet(by_spark)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(str(tmp_path)).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+
+    def leaf(d):
+        return _leaf_data_schema(spark, fs, jvm.org.apache.hadoop.fs.Path(str(d)))
+
+    for d in (by_arrow, by_spark):
+        assert leaf(d) == spark.read.parquet(str(d)).schema, d
+    assert leaf(by_arrow)["ts"].dataType == LongType()
+    with pytest.raises(AnalysisException):
+        leaf(empty)
