@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import _let
+
 # Tiny per-language stopword marker sets for the n-gram heuristic.
 # Deterministic and dependency-free; a production system would plug in a
 # fastText/CLD3 model via pandas_udf (see multimodal.py for the pattern).
@@ -63,16 +65,23 @@ def word_shingles(col, n: int = 3, pattern: str = DEFAULT_TOKEN_PATTERN) -> Colu
     each zipped struct. The obvious transform-over-indices formulation
     (``slice(toks, i+1, n)`` inside the lambda) re-evaluates the token
     split PER ELEMENT — O(tokens^2) per document, measured 2.4x slower
-    at sf0.1. Here the token expression is only referenced per row.
+    at sf0.1. The slices, sizes and the short-document branch name the
+    token array 2n+2 times, and a Filter or Generate (explode) would
+    evaluate the split once per name; it is bound once per row instead
+    (:func:`_let`).
     """
     toks = tokens(col, pattern)
     if n == 1:
         return toks
-    sz = F.size(toks)
-    zipped = F.arrays_zip(*[F.slice(toks, i + 1, sz - (n - 1)) for i in range(n)])
-    return F.when(sz < n, F.array(F.array_join(toks, " "))).otherwise(
-        F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
-    )
+
+    def shingles(toks: Column) -> Column:
+        sz = F.size(toks)
+        zipped = F.arrays_zip(*[F.slice(toks, i + 1, sz - (n - 1)) for i in range(n)])
+        return F.when(sz < n, F.array(F.array_join(toks, " "))).otherwise(
+            F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
+        )
+
+    return _let(toks, shingles)
 
 
 def stopword_ratio(col, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:
@@ -90,16 +99,24 @@ def punct_ratio(col) -> Column:
 
 def quality_score(col, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:
     """Heuristic document quality in [0,1]: length band + low punctuation +
-    sane mean word length. Deterministic, codegen-friendly."""
+    sane mean word length. Deterministic. The token count and the mean
+    word length are each named several times, so each is bound once per
+    row (:func:`_let`): a Filter on the score splits the text once."""
     c = _c(col)
-    n_tok = token_count(c, pattern)
-    mean_wordlen = F.when(n_tok > 0, F.length(F.regexp_replace(c, r"\s+", "")).cast("double") / n_tok).otherwise(
-        F.lit(0.0)
-    )
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), F.lit(0.5)).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio(c) < 0.2, F.lit(0.25)).otherwise(F.lit(0.0))
-    word_ok = F.when((mean_wordlen >= 2.0) & (mean_wordlen <= 12.0), F.lit(0.25)).otherwise(F.lit(0.0))
-    return len_ok + punct_ok + word_ok
+
+    def score(n_tok: Column) -> Column:
+        mean_wordlen = F.when(
+            n_tok > 0, F.length(F.regexp_replace(c, r"\s+", "")).cast("double") / n_tok
+        ).otherwise(F.lit(0.0))
+        len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), F.lit(0.5)).otherwise(F.lit(0.0))
+        punct_ok = F.when(punct_ratio(c) < 0.2, F.lit(0.25)).otherwise(F.lit(0.0))
+
+        def word_ok(m: Column) -> Column:
+            return F.when((m >= 2.0) & (m <= 12.0), F.lit(0.25)).otherwise(F.lit(0.0))
+
+        return _let(mean_wordlen, lambda m: len_ok + punct_ok + word_ok(m))
+
+    return _let(token_count(c, pattern), score)
 
 
 def lang_guess(col, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:

@@ -2,9 +2,11 @@
 
 Charter extension (SURVEY.md §2B): similarity search needs dot/norm/cosine
 over ``array<float>``. All of these compile to Catalyst higher-order
-functions (``zip_with`` + ``aggregate``) — whole-stage codegen, no Python,
-no UDF serialization. Elementwise math is done in DOUBLE so results are
-deterministic and oracle-comparable.
+functions (``zip_with`` + ``aggregate``): no Python, no UDF serialization.
+Their lambdas run interpreted, outside whole-stage codegen, so every pass
+over a vector costs real time; a kernel makes each pass once per row.
+Elementwise math is done in DOUBLE so results are deterministic and
+oracle-comparable.
 """
 
 from __future__ import annotations
@@ -13,6 +15,8 @@ import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from . import _let
 
 
 def _c(col) -> Column:
@@ -32,9 +36,16 @@ def norm(a) -> Column:
 
 def cosine(a, b) -> Column:
     """Cosine similarity; 0.0 when either side has zero norm."""
-    d = dot(a, b)
-    na, nb = norm(a), norm(b)
-    return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
+    return _let(norm(a), lambda na: _let(norm(b), lambda nb: _cosine_normed(a, b, na, nb)))
+
+
+def _cosine_normed(a, b, na, nb) -> Column:
+    """:func:`cosine` of ``a`` and ``b`` given their norms ``na`` and
+    ``nb`` — bitwise the same value. A caller scoring one vector against
+    many computes each norm once per row and pays one dot product per
+    pair."""
+    na, nb = _c(na), _c(nb)
+    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
 
 
 def seeded_band_hashes_udf(seed: int, num_planes: int, bands: int):

@@ -197,12 +197,14 @@ def minhash_signature(
     shingles (empty text) are absent from the result.
     """
     # Explode + k min-aggregates. A pure-projection formulation
-    # (transform over a seed sequence) looks cheaper but Catalyst's
-    # CollapseProject re-inlines the shingle construction into every
-    # hash lambda -> the shingling runs num_hashes times per row
-    # (measured 100x slowdown at sf0.1). The explode structurally
-    # guarantees single evaluation, and the groupBy(id) min-agg is
-    # map-side combinable -> shuffle carries only k longs per doc.
+    # (transform over a seed sequence) looks cheaper, but the shingle
+    # array would then be named inside every hash lambda and built
+    # num_hashes times per row (measured 100x slowdown at sf0.1). The
+    # explode evaluates its generator once per row. A Generate gets no
+    # common-subexpression elimination, though, so a subexpression its
+    # generator names twice runs twice: word_shingles binds its token
+    # array once for that reason. The groupBy(id) min-agg is map-side
+    # combinable -> shuffle carries only k longs per doc.
     #
     # Each shingle STRING is hashed exactly once (__h0, in the same
     # codegen stage as the explode); the k family members rehash the
@@ -480,11 +482,16 @@ def minhash_dedup_pairs(
     if bands is None:
         bands, _ = lsh_band_sizing(threshold, num_hashes)
     rows = num_hashes // bands
-    sigs = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
-    pairs = minhash_candidate_pairs(
-        sigs.filter(F.col("minhash_sig").isNotNull()), id_col, bands, rows,
-        max_bucket_size=max_bucket_size,
-    )
+    # The bucket-size count and the pair join both read the signatures,
+    # and the signature exchange (input plan, shingle explode, partial
+    # min-aggregates) runs once only if both plans are the same: the
+    # pair join's id comparison infers an isnotnull(id) filter, pushed
+    # down to the input, so the same filter is applied here up front. A
+    # doc without an id can never be paired, and so it no longer counts
+    # toward a bucket's size either.
+    sigs = minhash_signature(
+        df.filter(F.col(id_col).isNotNull()), text_col, id_col, num_hashes, shingle_n
+    ).filter(F.col("minhash_sig").isNotNull())
     # The verify stage references the candidate list three times (id
     # semi-join + both sides of the set join); materialize it once —
     # candidates are tiny relative to the corpus. EAGER is load-bearing
@@ -492,7 +499,9 @@ def minhash_dedup_pairs(
     # only the distinct's shuffle files, not materialized blocks, and
     # measured q73 4.2->5.2s / q627 6.5->9.0s; the extra eager job is
     # cheaper than the triple reduce-side re-read.
-    pairs = materialize(pairs)
+    pairs = materialize(
+        minhash_candidate_pairs(sigs, id_col, bands, rows, max_bucket_size=max_bucket_size)
+    )
     return jaccard_verify(df, pairs, text_col, id_col, shingle_n, threshold)
 
 
@@ -658,6 +667,7 @@ def dedup_clusters(
     because the convergence probe below sums labels exactly and a
     fractional or string id would make it stop early with wrong labels.
     """
+    from pyspark.sql import Observation
     from pyspark.sql.types import DecimalType, IntegralType
 
     from ..plans import checkpoints
@@ -687,16 +697,20 @@ def dedup_clusters(
     # propagation can only DECREASE a node's label (the aggregate
     # includes the node's own label) and the id set is fixed after
     # round 0, so sum(labels) is strictly decreasing until the
-    # fixpoint — sum unchanged <=> no label changed. One decimal-exact
-    # aggregate over the just-checkpointed blocks replaces the old
-    # two-sided join + limit probe (half the probe's input reads, no
-    # join). Deterministic on any partitioning (order-free decimal
-    # sum). A fully-lazy variant (ckpt(eager=False) materialized by
-    # the probe) was measured and REVERTED: q219 4.28->4.99s,
-    # q225 4.35->5.01s — the eager per-round ckpt is load-bearing.
-    # count(*) rides in the same aggregate: a NULL sum over a non-empty
-    # label set (NULL ids, decimal overflow) must raise, not converge
-    probe = (F.sum(F.col("cluster_id").cast("decimal(38,0)")), F.count("*"))
+    # fixpoint — sum unchanged <=> no label changed. Deterministic on
+    # any partitioning (order-free decimal sum). The sum rides on the
+    # round's own checkpoint job as an observed metric, so the probe
+    # costs no job. Observation.get returns the metrics of the frame's
+    # first action and waits for it, so the checkpoint must be EAGER;
+    # it is load-bearing anyway — a fully-lazy variant (ckpt(eager=False)
+    # materialized by the probe) was measured and REVERTED: q219
+    # 4.28->4.99s, q225 4.35->5.01s. count(*) rides along: a NULL sum
+    # over a non-empty label set (NULL ids, decimal overflow) must
+    # raise, not converge
+    probe = (
+        F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s"),
+        F.count("*").alias("n"),
+    )
     prev_sum = None
     for _ in range(max_iter):
         # candidate labels: own label + min neighbor label
@@ -704,13 +718,16 @@ def dedup_clusters(
             edges.join(labels, edges.dst == labels.id, "inner")
             .select(F.col("src").alias("id"), F.col("cluster_id"))
         )
+        obs = Observation()
         new_labels = ckpt(
             labels.select("id", "cluster_id")
             .unionByName(neighbor_labels)
             .groupBy("id")
             .agg(F.min("cluster_id").alias("cluster_id"))
+            .observe(obs, *probe)
         )
-        new_sum, n_labels = new_labels.agg(*probe).collect()[0]
+        metrics = obs.get
+        new_sum, n_labels = metrics["s"], metrics["n"]
         labels = new_labels
         if new_sum is None and n_labels:
             checkpoints.release(*held)

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine
+from ..functions.vectors import _cosine_normed, cosine, norm
 from ..plans.checkpoints import make_checkpointer, materialize, release
 
 
@@ -44,8 +44,13 @@ def brute_force_topk(
     from .dedup import _spread
 
     query_id_col = query_id_col or id_col
+    # Each norm is computed once per row, on its own side of the cross
+    # join (the query side inside the broadcast), so a scored pair costs
+    # one dot product; the score is bitwise cosine(__qvec, __cvec).
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+        F.col(query_id_col).alias("query_id"),
+        F.col(vec_col).alias("__qvec"),
+        norm(vec_col).alias("__qnorm"),
     )
     # _spread (r12): the broadcast crossJoin scores |queries| cosines
     # per corpus row BEFORE any shuffle — on a 1-2-split scan that pins
@@ -53,14 +58,14 @@ def brute_force_topk(
     # single-task stage at sf0.1). No-op at real scale (many splits).
     c = _spread(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
-    )
+    ).withColumn("__cnorm", norm("__cvec"))
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",
-            cosine(F.col("__qvec"), F.col("__cvec")).alias("cos_sim"),
+            _cosine_normed("__qvec", "__cvec", "__qnorm", "__cnorm").alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -51,7 +51,9 @@ from ..plans.checkpoints import materialize, release
 REFERENCE_BATCH_SIZE = 1000  # ETLProcess.java:210
 
 
-def _read_state_or_cold_start(spark: SparkSession, path: str) -> DataFrame | None:
+def _read_state_or_cold_start(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
     """Read a writer's persisted parquet state table; ``None`` ONLY on a
     true cold start (PATH_NOT_FOUND error class). Any other read failure
     — transient IO, permissions, corruption — re-raises: the caller is
@@ -59,11 +61,12 @@ def _read_state_or_cold_start(spark: SparkSession, path: str) -> DataFrame | Non
     error as cold start would silently destroy all prior state
     (tombstones, merged history). Mirrors ``read_incremental``'s
     bookmark discipline (sources/readers.py), comparing the error
-    CLASS, not message text."""
+    CLASS, not message text. A given ``schema`` is read with, instead of
+    inferring one (a Spark job over a listing of the whole table)."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     except AnalysisException as ex:
         getter = getattr(ex, "getCondition", None) or getattr(
             ex, "getErrorClass", None
@@ -248,19 +251,19 @@ def _merge_touched_partitions(
     spark: SparkSession,
     updates: DataFrame,
     path: str,
+    fs,
+    root,
     pks: list[str],
     partition_by: list[str],
     touched: list[str],
 ) -> bool:
     """Partition-scoped MERGE: read only the ``touched`` directories that
-    exist, rewrite exactly those (plus the new ones) by dynamic partition
-    overwrite. Returns False, having done nothing, when ``path`` holds no
-    partition directory to take the table's columns from — a cold start,
-    or a root that only the full-rewrite path can judge."""
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    exist under ``root`` (the Hadoop Path of ``path``), rewrite exactly
+    those (plus the new ones) by dynamic partition overwrite. Returns
+    False, having done nothing, when ``path`` holds no partition
+    directory to take the table's columns from — a root that only the
+    full-rewrite path can judge."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     dirs = [p for p in (Path(root, rel) for rel in touched) if fs.exists(p)]
     sample = dirs[0] if dirs else _some_partition_dir(spark, fs, root, partition_by)
     if sample is None:
@@ -336,7 +339,9 @@ def merge_by_pk(
     A batch that touches only new partitions writes them and rewrites
     nothing. Past MAX_PRUNED_PARTITIONS touched partitions, and without
     ``partition_by``, the call is a full read-modify-atomic-rewrite
-    (_rewrite_table); a missing ``path`` is a cold start.
+    (_rewrite_table) that takes its schema from one footer too. A
+    missing ``path`` is a cold start: the batch is written, and no
+    partition values are collected.
 
     Constraint (shared with every partition-pruned MERGE, incl. Delta's
     replaceWhere): an update must not move a PK across partitions — the
@@ -346,21 +351,30 @@ def merge_by_pk(
     pks = list(pks)
     _check_idents(*pks)
     partition_by = list(partition_by or [])
-    if partition_by:
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    # A missing root skips the touched-partition collect (2 jobs): only
+    # the read below decides a cold start, by its error class.
+    exists = fs.exists(root)
+    if partition_by and exists:
         touched = _touched_partition_dirs(spark, updates, partition_by)
         if touched is not None and _merge_touched_partitions(
-            spark, updates, path, pks, partition_by, touched
+            spark, updates, path, fs, root, pks, partition_by, touched
         ):
             return
 
-    existing = _read_state_or_cold_start(spark, path)
+    schema = None
+    if exists:
+        # data columns from one footer (no inference job), partition
+        # columns typed as in updates (see _table_schema)
+        leaf = _some_partition_dir(spark, fs, root, partition_by) if partition_by else None
+        schema = _leaf_data_schema(spark, fs, root if leaf is None else leaf)
+        if partition_by:
+            schema = _table_schema(schema, updates, partition_by)
+    existing = _read_state_or_cold_start(spark, path, schema)
     if existing is None:
         _write_table(updates.dropDuplicates(pks), path, partition_by)
         return
-    if partition_by:
-        # re-read with typed partition columns (see _table_schema)
-        schema = _table_schema(existing.schema, updates, partition_by)
-        existing = spark.read.schema(schema).parquet(path)
     _rewrite_table(spark, merge_dataframes(existing, updates, pks), path, partition_by)
 
 

@@ -206,3 +206,21 @@ def test_hamming_banding_matches_brute_force(spark):
             for r in phash_near_pairs(ph, d).collect()
         }
         assert got == want, d
+
+
+def test_minhash_dedup_pairs_null_ids_take_no_bucket_slot(spark, held_rdds):
+    """A doc without an id can never be paired, and it does not count
+    toward a bucket's size: three copies of one text, one of them
+    without an id, fill a bucket capped at 2 with 2 docs, so their pair
+    is found. The call holds no block beyond its result's own two (the
+    candidate checkpoint and the verify stage's shingle sets)."""
+    from etl_java_spark.operators.dedup import minhash_dedup_pairs
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(1, text), (2, text), (None, text), (3, "an unrelated document entirely")],
+        "doc_id long, text string",
+    )
+    pairs = minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.8, max_bucket_size=2)
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2, 1.0)]
+    assert len(held_rdds()) <= 2

@@ -13,6 +13,9 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from etl_java_spark.operators import dedup, similarity
 from etl_java_spark.sinks import writers
 
 SCHEMA = "id int, part string, v string"
@@ -20,11 +23,13 @@ SCHEMA = "id int, part string, v string"
 #: path -> (jobs, stages). The partition-scoped budget equals
 #: ``sinks.merge.jobs``/``.stages`` of a traced perfbench ``upsert_feed``
 #: merge: the distinct of the touched partition values (2 jobs), then
-#: the merge write (4).
+#: the merge write (4). The full rewrite reads its schema from a footer
+#: (7 with an inference job); the cold start collects no partition
+#: values (5 when it did).
 BUDGETS = {
     "partition_scoped": (6, 6),
-    "full_rewrite": (7, 7),
-    "cold_start": (5, 5),
+    "full_rewrite": (6, 6),
+    "cold_start": (3, 3),
 }
 
 
@@ -57,4 +62,49 @@ def test_merge_by_pk_job_budget(spark, tmp_path, monkeypatch, job_counts, path_n
             monkeypatch.setattr(writers, "MAX_PRUNED_PARTITIONS", 0)
         got = job_counts(lambda: merge(batch))
     jobs, stages = BUDGETS[path_name]
+    assert got.jobs <= jobs and got.stages <= stages, got
+
+
+#: A chain of 6 near-duplicate docs: doc i is the token window
+#: [3i, 3i + 24), so neighbours share 21 of 24 tokens (shingle Jaccard
+#: 19/25 = 0.76) and docs two apart share 16/30 or less.
+CHAIN = [(i, " ".join(f"w{t}" for t in range(3 * i, 3 * i + 24))) for i in range(6)]
+
+#: operator -> (jobs, stages), each with its result collected. MinHash:
+#: one signature exchange read by both the bucket-size count and the
+#: pair join (15 when each planned its own). Clusters: 6 rounds of 5
+#: jobs plus the edge list; the convergence probe rides on each round's
+#: checkpoint job (46 with a probe job pair per round).
+DEDUP_BUDGETS = {
+    "minhash_dedup_pairs": (13, 13),
+    "dedup_clusters": (34, 34),
+    "brute_force_topk": (4, 4),
+}
+
+
+@pytest.mark.parametrize("op", sorted(DEDUP_BUDGETS))
+def test_near_duplicate_job_budget(spark, tmp_path, job_counts, op):
+    """The near-duplicate path of a dedup pass on a 6-doc chain, read
+    from parquet: MinHash pairs, their clusters, and the brute-force
+    top-k over the docs' embeddings each stay within their budgets."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, t, [float(i), 1.0, float(i % 3)]) for i, t in CHAIN],
+        "doc_id long, text string, embedding array<double>",
+    ).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    pairs = [(i, i + 1) for i in range(5)]
+    calls = {
+        "minhash_dedup_pairs": lambda: dedup.minhash_dedup_pairs(
+            docs, "text", "doc_id", threshold=0.7
+        ).collect(),
+        "dedup_clusters": lambda: dedup.dedup_clusters(
+            spark.createDataFrame(pairs, "id_a long, id_b long")
+        ).collect(),
+        "brute_force_topk": lambda: similarity.brute_force_topk(
+            docs, docs.filter(F.col("doc_id") < 2), "embedding", "doc_id", k=2
+        ).collect(),
+    }
+    got = job_counts(calls[op])
+    jobs, stages = DEDUP_BUDGETS[op]
     assert got.jobs <= jobs and got.stages <= stages, got
