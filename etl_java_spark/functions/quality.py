@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import _let
 from .text import DEFAULT_TOKEN_PATTERN, tokens, word_shingles
 
 
@@ -28,48 +29,61 @@ def duplicate_line_ratio(col, sep: str = "\n") -> Column:
 
 def duplicate_ngram_ratio(col, n: int = 3, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:
     """Fraction of word n-grams that are repeats (Gopher: top-n-gram /
-    duplicate-n-gram filters). High values mean boilerplate/spam."""
-    sh = word_shingles(_c(col), n, pattern)
-    total = F.size(sh)
-    uniq = F.size(F.array_distinct(sh))
-    return F.when(total > 0, (total - uniq).cast("double") / total).otherwise(F.lit(0.0))
+    duplicate-n-gram filters). High values mean boilerplate/spam. The
+    shingle array is bound once per row (:func:`_let`)."""
+
+    def ratio(sh: Column) -> Column:
+        total = F.size(sh)
+        uniq = F.size(F.array_distinct(sh))
+        return F.when(total > 0, (total - uniq).cast("double") / total).otherwise(F.lit(0.0))
+
+    return _let(word_shingles(_c(col), n, pattern), ratio)
 
 
 def max_word_repetition(col, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:
     """Highest share of the document taken by a single token.
 
     aggregate over the sorted token array counts the longest run —
-    equivalent to max-frequency/total without a groupBy.
+    equivalent to max-frequency/total without a groupBy. The sorted
+    array is bound once per row (:func:`_let`).
     """
-    toks = F.array_sort(tokens(_c(col), pattern))
-    n = F.size(toks)
     # fold: (current_run, best_run, prev_token)
     acc0 = F.struct(
         F.lit(0).alias("run"), F.lit(0).alias("best"), F.lit(None).cast("string").alias("prev")
     )
-    folded = F.aggregate(
-        toks,
-        acc0,
-        lambda acc, t: F.struct(
-            F.when(acc["prev"].isNull() | (acc["prev"] != t), F.lit(1))
-            .otherwise(acc["run"] + 1)
-            .alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(acc["prev"].isNull() | (acc["prev"] != t), F.lit(1)).otherwise(acc["run"] + 1),
-            ).alias("best"),
-            t.alias("prev"),
-        ),
-    )
-    return F.when(n > 0, folded["best"].cast("double") / n).otherwise(F.lit(0.0))
+
+    def share(toks: Column) -> Column:
+        n = F.size(toks)
+        folded = F.aggregate(
+            toks,
+            acc0,
+            lambda acc, t: F.struct(
+                F.when(acc["prev"].isNull() | (acc["prev"] != t), F.lit(1))
+                .otherwise(acc["run"] + 1)
+                .alias("run"),
+                F.greatest(
+                    acc["best"],
+                    F.when(acc["prev"].isNull() | (acc["prev"] != t), F.lit(1)).otherwise(
+                        acc["run"] + 1
+                    ),
+                ).alias("best"),
+                t.alias("prev"),
+            ),
+        )
+        return F.when(n > 0, folded["best"].cast("double") / n).otherwise(F.lit(0.0))
+
+    return _let(F.array_sort(tokens(_c(col), pattern)), share)
 
 
 def symbol_word_ratio(col, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:
-    """Symbols (#, ..., etc.) per word — C4-style noise signal."""
+    """Symbols (#, ..., etc.) per word — C4-style noise signal. The token
+    count is bound once per row (:func:`_let`)."""
     c = _c(col)
     n_sym = F.length(c) - F.length(F.regexp_replace(c, r"[#@\*\^\|~]|\.{3}", ""))
-    n_tok = F.size(tokens(c, pattern))
-    return F.when(n_tok > 0, n_sym.cast("double") / n_tok).otherwise(F.lit(0.0))
+    return _let(
+        F.size(tokens(c, pattern)),
+        lambda n_tok: F.when(n_tok > 0, n_sym.cast("double") / n_tok).otherwise(F.lit(0.0)),
+    )
 
 
 # --- PII scrubbing ---------------------------------------------------------

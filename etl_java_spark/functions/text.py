@@ -85,10 +85,17 @@ def word_shingles(col, n: int = 3, pattern: str = DEFAULT_TOKEN_PATTERN) -> Colu
 
 
 def stopword_ratio(col, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:
+    """Share of tokens that are stopwords; the token array is bound once
+    per row (:func:`_let`)."""
     stops = _STOPWORDS[0].split()
-    toks = tokens(col, pattern)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(stops)))
-    return F.when(F.size(toks) > 0, n_stop.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
+
+    def ratio(toks: Column) -> Column:
+        n_stop = F.size(F.filter(toks, lambda t: t.isin(stops)))
+        return F.when(F.size(toks) > 0, n_stop.cast("double") / F.size(toks)).otherwise(
+            F.lit(0.0)
+        )
+
+    return _let(tokens(col, pattern), ratio)
 
 
 def punct_ratio(col) -> Column:
@@ -123,22 +130,30 @@ def lang_guess(col, pattern: str = DEFAULT_TOKEN_PATTERN) -> Column:
     """n-gram/stopword language heuristic -> 2-letter code or 'und'.
 
     Scores each candidate language by marker-token hits; ties broken by
-    language-code order for determinism.
+    language-code order for determinism. The token array and then the
+    array of scores are each bound once per row (:func:`_let`).
     """
-    toks = tokens(col, pattern)
+    langs = sorted(_LANG_MARKERS)
 
-    def marker_count(markers):
+    def marker_count(toks, markers):
         # closure factory keeps the lambda unary (a binary lambda would
         # receive the element INDEX as its second argument)
         return F.size(F.filter(toks, lambda t: t.isin(list(markers))))
 
-    scores = [(lang, marker_count(markers)) for lang, markers in sorted(_LANG_MARKERS.items())]
-    best_score = F.greatest(*[s for _, s in scores])
-    result = F.lit("und")
-    # fold right-to-left so earlier (alphabetical) languages win ties
-    for lang, s in reversed(scores):
-        result = F.when((s == best_score) & (best_score > 0), F.lit(lang)).otherwise(result)
-    return result
+    def pick(scores: Column) -> Column:
+        best_score = F.greatest(*[scores[i] for i in range(len(langs))])
+        result = F.lit("und")
+        # fold right-to-left so earlier (alphabetical) languages win ties
+        for i, lang in reversed(list(enumerate(langs))):
+            result = F.when((scores[i] == best_score) & (best_score > 0), F.lit(lang)).otherwise(
+                result
+            )
+        return result
+
+    return _let(
+        tokens(col, pattern),
+        lambda toks: _let(F.array(*[marker_count(toks, _LANG_MARKERS[g]) for g in langs]), pick),
+    )
 
 
 BPE_ISH_PATTERN = (

@@ -26,14 +26,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.transforms import apply_transforms, project, rename_map
 from ..sinks import writers
+from ..sources.readers import _scan_parquet
 
 
 @dataclass
 class ParquetSource:
+    """A parquet file or directory. A file or a flat directory takes its
+    schema from one footer, so building a pipeline runs no Spark job."""
+
     path: str
 
     def load(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return _scan_parquet(spark, self.path)
 
 
 @dataclass

@@ -8,8 +8,8 @@ Reference parity (``/root/reference/src/etl/ETLProcess.java``):
   (left-anti existing vs updates ∪ new) — the standard emulation
   (pyspark_guide "CDC / SCD2"). The batch is deduplicated by one
   shuffle on the PK; the anti-join broadcasts the batch keys when the
-  batch is small; a partitioned write adds one rebalancing shuffle of
-  the written rows (``_write_table``).
+  batch is small; a partitioned write adds one hash-repartitioning
+  shuffle of the written rows (``_write_table``).
 - #14 insert-if-absent on ALL columns (``:444-466``)
   -> ``insert_if_absent``: left-anti join on every column + append. The
   incoming batch is deduplicated first — the reference's behavior was
@@ -26,20 +26,27 @@ Table format: the table-state writers (``merge_by_pk``,
 ``overwrite`` take any format Spark writes. There is no Delta backend:
 delta-spark is not a dependency of this engine.
 
-Cost model: on a hive-partitioned table ``merge_by_pk`` lists, reads
-and rewrites only the partitions a batch touches — O(touched
-partitions) — and needs no eager checkpoint, because dynamic partition
-overwrite swaps the touched directories in only at job commit (details
-in its docstring). Every partitioned table-state write is an optimized
-write: one file per written partition. Full rewrites are static
-overwrites, which delete the table before their job runs:
+Cost model: at table-state sizes a write costs Spark jobs more than
+bytes. On an existing table ``merge_by_pk`` reads its batch from the
+source once, into one eager checkpoint of the PK-deduplicated rows that
+every later step reads. On a hive-partitioned table the checkpoint's
+job also observes the touched partitions, and the merge lists, reads
+and rewrites only those — O(touched partitions) — by dynamic partition
+overwrite, which swaps the touched directories in only at job commit,
+so the output needs no checkpoint.
+A small batch costs 5 jobs (details in its docstring). Every
+partitioned table-state write is an optimized write spread over the
+slots: one file per written partition, each partition value in one of
+``defaultParallelism`` tasks, so one partition larger than the
+advisory size is one large file, not several. Full rewrites are
+static overwrites, which delete the table before their job runs:
 ``_rewrite_table`` materializes their input first and releases it
-after.
+after. Table schemas come from one parquet footer on the driver
+(``readers._footer_schema``), never from an inference job.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..plans.checkpoints import materialize, release
+from ..sources.readers import _footer_schema
 
 REFERENCE_BATCH_SIZE = 1000  # ETLProcess.java:210
 
@@ -109,8 +117,18 @@ def merge_dataframes(
     collect, no per-row work.
     """
     pks = list(pks)
-    kept = existing.join(updates.select(*pks), on=pks, how="left_anti")
-    return kept.unionByName(updates.dropDuplicates(pks).select(*existing.columns))
+    return _upsert(existing, updates, updates.dropDuplicates(pks), pks)
+
+
+def _upsert(
+    existing: DataFrame, keys: DataFrame, rows: DataFrame, pks: list[str]
+) -> DataFrame:
+    """The rows of ``existing`` whose PK is not among ``keys``' PKs, then
+    ``rows`` — which must hold one row per PK. ``merge_by_pk`` passes its
+    deduplicated batch checkpoint as both, so neither side dedups or
+    reads the source again."""
+    kept = existing.join(keys.select(*pks), on=pks, how="left_anti")
+    return kept.unionByName(rows.select(*existing.columns))
 
 
 #: Above this many touched partitions the partition-scoped MERGE falls
@@ -120,31 +138,26 @@ MAX_PRUNED_PARTITIONS = 10_000
 
 
 def _touched_partition_dirs(
-    spark: SparkSession, updates: DataFrame, partition_by: Sequence[str]
+    spark: SparkSession, parts: Sequence, partition_by: Sequence[str]
 ) -> list[str] | None:
-    """Sorted relative directories (``c1=v1/c2=v2``) of the partitions
-    ``updates`` touches; None past MAX_PRUNED_PARTITIONS.
+    """Sorted relative directories (``c1=v1/c2=v2``) of the partition
+    tuples ``parts`` (rows of the partition columns cast to string);
+    None past MAX_PRUNED_PARTITIONS. ``parts`` is held driver-side:
+    bounded by the batch's partition spread, the same contract as
+    Delta's ``replaceWhere``; metadata-sized, not data-sized.
 
-    The distinct partition tuples are collected driver-side as strings —
-    bounded by the batch's partition spread, the same contract as Delta's
-    ``replaceWhere``; metadata-sized, not data-sized. Directory names come
-    from the writer's own rule (``ExternalCatalogUtils.
-    getPartitionPathString``, applied to ``cast(col AS string)`` in the
-    session time zone): escaping, and ``__HIVE_DEFAULT_PARTITION__`` for
-    NULL, match the directories a partitioned write creates.
+    Directory names come from the writer's own rule
+    (``ExternalCatalogUtils.getPartitionPathString``, applied to
+    ``cast(col AS string)`` in the session time zone): escaping, and
+    ``__HIVE_DEFAULT_PARTITION__`` for NULL, match the directories a
+    partitioned write creates.
     """
-    rows = (
-        updates.select(*[F.col(c).cast("string").alias(c) for c in partition_by])
-        .distinct()
-        .limit(MAX_PRUNED_PARTITIONS + 1)
-        .collect()
-    )
-    if len(rows) > MAX_PRUNED_PARTITIONS:
+    if len(parts) > MAX_PRUNED_PARTITIONS:
         return None
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     return sorted(
         "/".join(utils.getPartitionPathString(c, row[c]) for c in partition_by)
-        for row in rows
+        for row in parts
     )
 
 
@@ -169,43 +182,14 @@ def _some_partition_dir(spark: SparkSession, fs, root, partition_by: Sequence[st
     return cur
 
 
-def _leaf_data_schema(spark: SparkSession, fs, leaf) -> StructType:
-    """Data schema of the parquet leaf directory ``leaf`` (a Hadoop
-    Path), read on the driver from one footer — no Spark job.
-
-    Spark's own rule, as its schema inference applies it to the same
-    directory: the first data file in path order (names starting with
-    ``_`` or ``.`` are not data), ``ParquetFileFormat.
-    readSchemaFromFooter`` (the writer's Spark row-metadata key when
-    there is one — pyarrow writes none — else the parquet schema
-    converted under the session's SQLConf, so ``nanosAsLong`` holds),
-    then ``asNullable`` as every file source's data schema is."""
-    first = min(
-        (
-            st for st in fs.listStatus(leaf)
-            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-        ),
-        key=lambda st: st.getPath().toString(),
-        default=None,
-    )
-    if first is None:
-        # No footer to read: Spark's inference judges the directory, and
-        # raises UNABLE_TO_INFER_SCHEMA for an empty one.
-        return spark.read.parquet(leaf.toString()).schema
-    jvm = spark._jvm
-    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
-    conf = spark._jsc.hadoopConfiguration()
-    meta = parquet.ParquetFooterReader.readFooter(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf),
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
-    )
-    converter = parquet.ParquetToSparkSchemaConverter(
-        spark._jsparkSession.sessionState().conf()
-    )
-    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(first.getPath(), meta), converter
-    ).asNullable()
-    return StructType.fromJson(json.loads(schema.json()))
+def _data_schema(spark: SparkSession, leaf: str) -> StructType:
+    """Data schema of the parquet directory ``leaf``: from one footer on
+    the driver (``readers._footer_schema``, no Spark job), else — a
+    directory with nothing to read, or an unreadable footer — from
+    Spark's inference, which raises for it (``UNABLE_TO_INFER_SCHEMA``
+    for an empty directory)."""
+    schema = _footer_schema(spark, leaf)
+    return spark.read.parquet(leaf).schema if schema is None else schema
 
 
 def _table_schema(
@@ -231,14 +215,19 @@ def _write_table(
     """Overwrite the parquet table at ``path`` with ``df`` — the whole
     table, or with ``dynamic`` only the partitions ``df`` holds rows of.
 
-    A partitioned write is an optimized write: ``df`` is rebalanced on
-    the partition columns first, so each partition lands in one task
-    and one file. AQE sizes the tasks to ``advisoryPartitionSizeInBytes``:
-    small partitions share a task, and only a partition larger than that
-    is split over several files. The price is one shuffle of the written
-    rows; unpartitioned writes take no such shuffle."""
+    A partitioned write is an optimized write spread over the slots:
+    ``df`` is hash-repartitioned on the partition columns into
+    ``defaultParallelism`` tasks, so each partition value lands in one
+    task and one file, and the partitions are written by all the slots
+    at once. AQE leaves an explicit partition count alone, so small
+    writes are not coalesced into one task that writes every file in
+    series. The trade-off: a partition larger than
+    ``advisoryPartitionSizeInBytes`` is no longer split across files,
+    and one skewed partition makes one long task. The price is one
+    shuffle of the written rows; unpartitioned writes take no such
+    shuffle."""
     if partition_by:
-        df = df.hint("rebalance", *partition_by)
+        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, *partition_by)
     w = df.write.format("parquet").mode("overwrite")
     if dynamic:
         w = w.option("partitionOverwriteMode", "dynamic")
@@ -249,7 +238,7 @@ def _write_table(
 
 def _merge_touched_partitions(
     spark: SparkSession,
-    updates: DataFrame,
+    batch: DataFrame,
     path: str,
     fs,
     root,
@@ -257,29 +246,29 @@ def _merge_touched_partitions(
     partition_by: list[str],
     touched: list[str],
 ) -> bool:
-    """Partition-scoped MERGE: read only the ``touched`` directories that
-    exist under ``root`` (the Hadoop Path of ``path``), rewrite exactly
-    those (plus the new ones) by dynamic partition overwrite. Returns
-    False, having done nothing, when ``path`` holds no partition
-    directory to take the table's columns from — a root that only the
-    full-rewrite path can judge."""
+    """Partition-scoped MERGE of ``batch`` (one row per PK): read only the
+    ``touched`` directories that exist under ``root`` (the Hadoop Path of
+    ``path``), rewrite exactly those (plus the new ones) by dynamic
+    partition overwrite. Returns False, having done nothing, when
+    ``path`` holds no partition directory to take the table's columns
+    from — a root that only the full-rewrite path can judge."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
     dirs = [p for p in (Path(root, rel) for rel in touched) if fs.exists(p)]
     sample = dirs[0] if dirs else _some_partition_dir(spark, fs, root, partition_by)
     if sample is None:
         return False
-    schema = _table_schema(_leaf_data_schema(spark, fs, sample), updates, partition_by)
+    schema = _table_schema(_data_schema(spark, sample.toString()), batch, partition_by)
     if dirs:
         existing = spark.read.schema(schema).option("basePath", path).parquet(
             *[p.toString() for p in dirs]
         )
     else:
         existing = spark.createDataFrame([], schema)
-    # No checkpoint: dynamic overwrite stages its output under
+    # No checkpoint of the output: dynamic overwrite stages it under
     # .spark-staging-* and swaps the touched directories in only at job
     # commit, after every task has read its source files. A failed job
     # leaves the table as it was.
-    _write_table(merge_dataframes(existing, updates, pks), path, partition_by, dynamic=True)
+    _write_table(_upsert(existing, batch, batch, pks), path, partition_by, dynamic=True)
     spark.catalog.refreshByPath(path)
     return True
 
@@ -318,64 +307,96 @@ def merge_by_pk(
     hive-partitioned table) the merge is PARTITION-SCOPED, and listing,
     reading and writing are all O(touched partitions), not O(table):
 
-    1. one collect of the batch's distinct partition values, turned into
-       directory names by Spark's own writer rule;
+    1. the batch is read from its source ONCE: deduplicated per PK into
+       one eager checkpoint, whose job also observes the set of
+       partition tuples it holds (``Observation``; no job of its own).
+       The partition tuples become directory names by Spark's own
+       writer rule;
     2. one existence check per touched directory — the table root is
        never listed, so no whole-table listing job runs;
     3. the existing touched directories are read with ``basePath`` set
        to the root and an explicit schema: data columns from one
        footer, read on the driver by Spark's own rule (no schema
-       inference job; ``_leaf_data_schema``), partition columns typed
-       as in ``updates``, never inferred;
-    4. the merged frame is rebalanced on the partition columns and
-       written straight through dynamic partition overwrite, so each
-       touched partition is replaced by one file (``_write_table``). No
-       checkpoint is needed: dynamic overwrite stages its output and
-       replaces the touched directories only at job commit, after every
-       task has read its inputs, so a failed job leaves the table
-       unchanged. Untouched partitions' files are not rewritten
-       (byte-identical; see test_sinks).
+       inference job; ``readers._footer_schema``), partition columns
+       typed as in ``updates``, never inferred;
+    4. the merged frame is hash-repartitioned on the partition columns
+       and written straight through dynamic partition overwrite, each
+       touched partition as one file, all slots writing
+       (``_write_table``). The output needs no checkpoint: dynamic
+       overwrite stages it and replaces the touched directories only at
+       job commit, after every task has read its inputs, so a failed
+       job leaves the table unchanged. Untouched partitions' files are
+       not rewritten (byte-identical; see test_sinks). The batch
+       checkpoint is released when the call ends, also on failure.
+
+    Cost on a small batch: 5 Spark jobs — the dedup shuffle and the
+    checkpoint, then the broadcast of the batch keys, the repartition
+    shuffle and the write.
 
     A batch that touches only new partitions writes them and rewrites
     nothing. Past MAX_PRUNED_PARTITIONS touched partitions, and without
     ``partition_by``, the call is a full read-modify-atomic-rewrite
-    (_rewrite_table) that takes its schema from one footer too. A
-    missing ``path`` is a cold start: the batch is written, and no
-    partition values are collected.
+    (_rewrite_table) of the same batch checkpoint, with the table's
+    schema from one footer too. A missing ``path`` is a cold start: the
+    batch is written, and nothing is checkpointed or observed.
+
+    Read-once guarantee: on an existing table every step — the
+    partition set, the anti-join keys, the written rows — reads the one
+    batch checkpoint, so a live source (a JDBC table, files landing)
+    cannot hand the steps different rows. Read twice, a row seen by the
+    keys but not by the rows would delete its existing row, and a row
+    that moved partition between reads would be written without its
+    partition's existing rows, which a dynamic overwrite then deletes.
 
     Constraint (shared with every partition-pruned MERGE, incl. Delta's
     replaceWhere): an update must not move a PK across partitions — the
     stale row in the old partition would survive. Partition columns
     should be PK-derived or immutable per PK.
     """
+    from pyspark.sql import Observation
+
     pks = list(pks)
     _check_idents(*pks)
     partition_by = list(partition_by or [])
     root = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    # A missing root skips the touched-partition collect (2 jobs): only
-    # the read below decides a cold start, by its error class.
+    # A missing root is a cold start, decided only by the read below (by
+    # its error class): nothing is checkpointed for it.
     exists = fs.exists(root)
-    if partition_by and exists:
-        touched = _touched_partition_dirs(spark, updates, partition_by)
-        if touched is not None and _merge_touched_partitions(
-            spark, updates, path, fs, root, pks, partition_by, touched
-        ):
-            return
-
-    schema = None
+    batch = None
     if exists:
-        # data columns from one footer (no inference job), partition
-        # columns typed as in updates (see _table_schema)
-        leaf = _some_partition_dir(spark, fs, root, partition_by) if partition_by else None
-        schema = _leaf_data_schema(spark, fs, root if leaf is None else leaf)
+        batch = updates.dropDuplicates(pks)
         if partition_by:
-            schema = _table_schema(schema, updates, partition_by)
-    existing = _read_state_or_cold_start(spark, path, schema)
-    if existing is None:
-        _write_table(updates.dropDuplicates(pks), path, partition_by)
-        return
-    _rewrite_table(spark, merge_dataframes(existing, updates, pks), path, partition_by)
+            obs = Observation()
+            parts = F.collect_set(
+                F.struct(*[F.col(c).cast("string").alias(c) for c in partition_by])
+            )
+            batch = batch.observe(obs, parts.alias("parts"))
+        batch = materialize(batch)
+    try:
+        if batch is not None and partition_by:
+            touched = _touched_partition_dirs(spark, obs.get["parts"], partition_by)
+            if touched is not None and _merge_touched_partitions(
+                spark, batch, path, fs, root, pks, partition_by, touched
+            ):
+                return
+        schema = None
+        if exists:
+            # data columns from one footer (no inference job), partition
+            # columns typed as in updates (see _table_schema)
+            leaf = _some_partition_dir(spark, fs, root, partition_by) if partition_by else None
+            schema = _data_schema(spark, (root if leaf is None else leaf).toString())
+            if partition_by:
+                schema = _table_schema(schema, updates, partition_by)
+        rows = updates.dropDuplicates(pks) if batch is None else batch
+        existing = _read_state_or_cold_start(spark, path, schema)
+        if existing is None:
+            _write_table(rows, path, partition_by)
+        else:
+            _rewrite_table(spark, _upsert(existing, rows, rows, pks), path, partition_by)
+    finally:
+        if batch is not None:
+            release(batch)
 
 
 def insert_if_absent_dataframes(existing: DataFrame, new: DataFrame) -> DataFrame:

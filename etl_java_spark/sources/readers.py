@@ -15,10 +15,12 @@ Reference parity (SURVEY.md §2A):
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..plans.checkpoints import materialize
 
@@ -88,10 +90,99 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED_CONTEXTS.add(ctx_key)
 
 
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """Data schema of the parquet file or flat directory ``path``, read
+    on the driver from one footer — no Spark job. ``None`` wherever
+    Spark's own read must judge: a glob, a missing path, a directory
+    with subdirectories (partitions), nothing to read, an unreadable
+    footer, or a session that merges schemas.
+
+    Spark's own rule (``ParquetUtils.inferSchema`` without
+    ``mergeSchema``): the files its listing keeps (``HadoopFSUtils.
+    shouldFilterOutPathName``), sorted by path; a ``_common_metadata``
+    summary first, then ``_metadata``, then the first data file; its
+    footer read by ``ParquetFileFormat.readSchemaFromFooter`` (the
+    writer's Spark row metadata when there is one — pyarrow writes none
+    — else the parquet schema converted under the session's SQLConf, so
+    ``nanosAsLong`` holds); then ``asNullable``, as every file source's
+    data schema is."""
+    from py4j.java_gateway import JavaClass
+    from py4j.protocol import Py4JJavaError
+
+    if any(ch in path for ch in "{}[]*?\\") or (
+        spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
+    ):
+        return None
+
+    def jclass(name: str) -> JavaClass:
+        # one reference by full name; ``spark._jvm.a.b.C`` costs a py4j
+        # round trip per package level
+        return JavaClass(name, spark._sc._gateway._gateway_client)
+
+    conf = spark._jsc.hadoopConfiguration()
+    root = jclass("org.apache.hadoop.fs.Path")(path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):
+        return None
+    status = fs.getFileStatus(root)
+    listed = (
+        (st.getPath().toString(), st)
+        for st in ([status] if status.isFile() else fs.listStatus(root))
+    )
+    kept = sorted((p, st) for p, st in listed if _listed_by_spark(p.rsplit("/", 1)[-1]))
+    if any(st.isDirectory() for _, st in kept):
+        return None
+    by_name = {p.rsplit("/", 1)[-1]: st for p, st in kept}
+    first = by_name.get("_common_metadata") or by_name.get("_metadata") or next(
+        (st for name, st in by_name.items() if name not in _SUMMARY_FILES), None
+    )
+    if first is None:
+        return None
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    try:
+        meta = jclass(parquet + "ParquetFooterReader").readFooter(
+            jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(first, conf),
+            jclass("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+        )
+    except Py4JJavaError:
+        return None  # Spark's inference raises its own error for the file
+    converter = jclass(parquet + "ParquetToSparkSchemaConverter")(
+        spark._jsparkSession.sessionState().conf()
+    )
+    schema = jclass(parquet + "ParquetFileFormat").readSchemaFromFooter(
+        jclass("org.apache.parquet.hadoop.Footer")(first.getPath(), meta), converter
+    ).asNullable()
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _listed_by_spark(name: str) -> bool:
+    """Whether Spark's file listing keeps a file or directory of this
+    name: ``HadoopFSUtils.shouldFilterOutPathName``, negated."""
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".") or (
+        name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(_SUMMARY_FILES)
+
+
+def _scan_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` given its data schema from one footer
+    where Spark's inference would read only that footer
+    (:func:`_footer_schema`): the same frame without the inference job.
+    Everything else is read exactly as ``spark.read.parquet`` reads it,
+    errors included."""
+    schema = _footer_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan; Catalyst pushes filters + prunes columns at the footer."""
+    """Columnar scan; Catalyst pushes filters + prunes columns at the
+    footer. A file or a flat shard directory takes its schema from one
+    footer on the driver, so building the frame runs no Spark job."""
     ensure_fixture_confs(spark)
-    return normalize_nanos(spark.read.parquet(path))
+    return normalize_nanos(_scan_parquet(spark, path))
 
 
 def normalize_nanos(df: DataFrame, cols: tuple[str, ...] = ("ts",)) -> DataFrame:
@@ -224,7 +315,7 @@ def load_star_schema(
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
-            out[t] = normalize_nanos(spark.read.parquet(p))
+            out[t] = normalize_nanos(_scan_parquet(spark, p))
     return out
 
 

@@ -1,6 +1,9 @@
-"""Bind-once kernels: ``quality_score``, ``word_shingles`` and ``cosine``
-return exactly what their straightforward formulations return, and an
-executed Filter or Generate over them splits the text once.
+"""Bind-once kernels: ``quality_score``, ``word_shingles``, ``cosine``
+and the follow-up text and quality signals (``stopword_ratio``,
+``lang_guess``, ``duplicate_ngram_ratio``, ``symbol_word_ratio``,
+``max_word_repetition``) return exactly what their straightforward
+formulations return, and an executed Filter or Generate over them splits
+the text once.
 
 The references below are the straightforward formulations, which name
 the token array (or each norm) several times. A Filter or a Generate
@@ -16,6 +19,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from etl_java_spark.functions import quality as QL
 from etl_java_spark.functions import text as TX
 from etl_java_spark.functions import vectors as V
 from etl_java_spark.operators import dedup
@@ -34,6 +38,13 @@ TEXTS = [
     "!!! ??? ,,, ... ;;; ::: --- +++ === ### @@@ %%%",
     "a " * 12,
     "supercalifragilisticexpialidocious " * 11,
+    # stopwords, each language's markers, repeated n-grams, symbols
+    "The cat and the dog of the house is on the mat, and it is big",
+    "el perro y la casa de que la",
+    "der Hund und die Katze das ist",
+    "le chat et les chiens des amis la",
+    "la la la de de",  # a tie between languages
+    "buy now buy now buy now buy now #deal @shop *** ... ~ | ^",
 ]
 
 VECS = [
@@ -73,6 +84,83 @@ def _ref_quality_score(col):
     punct_ok = F.when(TX.punct_ratio(c) < 0.2, F.lit(0.25)).otherwise(F.lit(0.0))
     word_ok = F.when((mean_wordlen >= 2.0) & (mean_wordlen <= 12.0), F.lit(0.25)).otherwise(F.lit(0.0))
     return len_ok + punct_ok + word_ok
+
+
+def _ref_stopword_ratio(col):
+    stops = "the a an and or of to in is are was for on with as by at it this that".split()
+    toks = _ref_tokens(col)
+    n_stop = F.size(F.filter(toks, lambda t: t.isin(stops)))
+    return F.when(F.size(toks) > 0, n_stop.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
+
+
+def _ref_lang_guess(col):
+    toks = _ref_tokens(col)
+    markers = {
+        "en": ("the", "and", "of", "to", "is"),
+        "es": ("el", "la", "de", "que", "y"),
+        "de": ("der", "die", "und", "das", "ist"),
+        "fr": ("le", "la", "et", "les", "des"),
+    }
+
+    def marker_count(ms):
+        return F.size(F.filter(toks, lambda t: t.isin(list(ms))))
+
+    scores = [(lang, marker_count(ms)) for lang, ms in sorted(markers.items())]
+    best_score = F.greatest(*[s for _, s in scores])
+    result = F.lit("und")
+    for lang, s in reversed(scores):
+        result = F.when((s == best_score) & (best_score > 0), F.lit(lang)).otherwise(result)
+    return result
+
+
+def _ref_duplicate_ngram_ratio(col, n=3):
+    sh = _ref_word_shingles(col, n)
+    total = F.size(sh)
+    uniq = F.size(F.array_distinct(sh))
+    return F.when(total > 0, (total - uniq).cast("double") / total).otherwise(F.lit(0.0))
+
+
+def _ref_max_word_repetition(col):
+    toks = F.array_sort(_ref_tokens(col))
+    n = F.size(toks)
+    acc0 = F.struct(
+        F.lit(0).alias("run"), F.lit(0).alias("best"), F.lit(None).cast("string").alias("prev")
+    )
+    folded = F.aggregate(
+        toks,
+        acc0,
+        lambda acc, t: F.struct(
+            F.when(acc["prev"].isNull() | (acc["prev"] != t), F.lit(1))
+            .otherwise(acc["run"] + 1)
+            .alias("run"),
+            F.greatest(
+                acc["best"],
+                F.when(acc["prev"].isNull() | (acc["prev"] != t), F.lit(1)).otherwise(acc["run"] + 1),
+            ).alias("best"),
+            t.alias("prev"),
+        ),
+    )
+    return F.when(n > 0, folded["best"].cast("double") / n).otherwise(F.lit(0.0))
+
+
+def _ref_symbol_word_ratio(col):
+    c = F.col(col)
+    n_sym = F.length(c) - F.length(F.regexp_replace(c, r"[#@\*\^\|~]|\.{3}", ""))
+    n_tok = F.size(_ref_tokens(col))
+    return F.when(n_tok > 0, n_sym.cast("double") / n_tok).otherwise(F.lit(0.0))
+
+
+#: follow-up kernel -> (library kernel, inline reference, a Filter
+#: predicate on its column)
+FOLLOW_UPS = {
+    "stopword_ratio": (TX.stopword_ratio, _ref_stopword_ratio, lambda c: c > 0.2),
+    "lang_guess": (TX.lang_guess, _ref_lang_guess, lambda c: c == "en"),
+    "duplicate_ngram_ratio": (QL.duplicate_ngram_ratio, _ref_duplicate_ngram_ratio,
+                              lambda c: c > 0.1),
+    "symbol_word_ratio": (QL.symbol_word_ratio, _ref_symbol_word_ratio, lambda c: c > 0.1),
+    "max_word_repetition": (QL.max_word_repetition, _ref_max_word_repetition,
+                            lambda c: c > 0.3),
+}
 
 
 def _ref_cosine(a, b):
@@ -192,3 +280,28 @@ def test_filter_and_generate_split_text_once(docs):
     assert _splits_in(docs.filter(_ref_quality_score("text") >= 0.99), "FilterExec") == [6]
     inline = docs.select(F.explode(F.array_distinct(_ref_word_shingles("text"))))
     assert _splits_in(inline, "GenerateExec") == [8]
+
+
+@pytest.mark.parametrize("kernel", sorted(FOLLOW_UPS))
+def test_follow_up_kernels_equal_reference(docs, kernel):
+    """Each follow-up kernel returns bit for bit what its inline form
+    returns — over NULL, empty, whitespace-only and Unicode texts — in a
+    Project, a Filter and a Generate; and the texts give the kernel more
+    than one distinct value."""
+    lib, inline, pred = FOLLOW_UPS[kernel]
+    new, ref = lib("text"), inline("text")
+    _select(docs, "doc_id", new, ref)
+    _filter(docs, "doc_id", pred(new), pred(ref))
+    _explode(docs, "doc_id", F.array(new), F.array(ref))
+    assert len({r.k for r in docs.select(new.alias("k")).collect()}) > 2
+
+
+@pytest.mark.parametrize("kernel", sorted(FOLLOW_UPS))
+def test_follow_up_kernels_filter_splits_text_once(docs, kernel):
+    """An executed Filter on each follow-up kernel splits the text once;
+    the inline form splits it again for every name of the token array
+    (2 to 32 times)."""
+    lib, inline, pred = FOLLOW_UPS[kernel]
+    assert _splits_in(docs.filter(pred(lib("text"))), "FilterExec") == [1]
+    [splits] = _splits_in(docs.filter(pred(inline("text"))), "FilterExec")
+    assert splits > 1

@@ -11,23 +11,28 @@ the failure message but not bounded.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from etl_java_spark.operators import dedup, similarity
+from etl_java_spark.plans.pipeline import ParquetSource, Pipeline
 from etl_java_spark.sinks import writers
+from etl_java_spark.sources import readers
 
 SCHEMA = "id int, part string, v string"
 
 #: path -> (jobs, stages). The partition-scoped budget equals
 #: ``sinks.merge.jobs``/``.stages`` of a traced perfbench ``upsert_feed``
-#: merge: the distinct of the touched partition values (2 jobs), then
-#: the merge write (4). The full rewrite reads its schema from a footer
-#: (7 with an inference job); the cold start collects no partition
-#: values (5 when it did).
+#: merge: the deduplicated batch's checkpoint, which also observes the
+#: touched partition values (2 jobs; 6 in all when a distinct query of
+#: its own collected them), then the merge write (3). The full rewrite
+#: reads its schema from a footer (7 with an inference job); the cold
+#: start checkpoints and observes nothing (5 when it collected values).
 BUDGETS = {
-    "partition_scoped": (6, 6),
+    "partition_scoped": (5, 5),
     "full_rewrite": (6, 6),
     "cold_start": (3, 3),
 }
@@ -63,6 +68,37 @@ def test_merge_by_pk_job_budget(spark, tmp_path, monkeypatch, job_counts, path_n
         got = job_counts(lambda: merge(batch))
     jobs, stages = BUDGETS[path_name]
     assert got.jobs <= jobs and got.stages <= stages, got
+
+
+#: source -> jobs to build the frame. A parquet file or a flat shard
+#: directory takes its schema from one footer on the driver (1 job each
+#: with Spark's schema inference).
+SOURCE_BUDGETS = {
+    "pipeline_parquet_file": 0,
+    "pipeline_parquet_shards": 0,
+    "read_parquet_file": 0,
+    "read_parquet_shards": 0,
+}
+
+
+@pytest.mark.parametrize("source", sorted(SOURCE_BUDGETS))
+def test_parquet_source_job_budget(spark, tmp_path, job_counts, source):
+    """Building ``Pipeline(ParquetSource(...))`` and ``readers.read_parquet``
+    over a single parquet file and over a directory of shards (with the
+    ``_SUCCESS`` and ``.crc`` files a Spark write leaves) runs no job."""
+    shards = str(tmp_path / "shards")
+    spark.createDataFrame(
+        [(i, f"v{i}") for i in range(12)], "id int, v string"
+    ).repartition(3).write.parquet(shards)
+    file = next(os.path.join(shards, n) for n in sorted(os.listdir(shards)) if n.endswith(".parquet"))
+    kind, target = source.rsplit("_", 1)
+    path = file if target == "file" else shards
+    build = {
+        "pipeline_parquet": lambda: Pipeline(ParquetSource(path), select=["id"]).build(spark),
+        "read_parquet": lambda: readers.read_parquet(spark, path),
+    }[kind]
+    got = job_counts(build)
+    assert got.jobs <= SOURCE_BUDGETS[source], got
 
 
 #: A chain of 6 near-duplicate docs: doc i is the token window

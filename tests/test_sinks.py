@@ -385,54 +385,229 @@ def test_merge_by_pk_one_file_per_written_partition(spark, tmp_path, monkeypatch
     assert _rows(table()) == expected
 
 
+#: case -> (partition columns, existing rows (id, v, *partition values),
+#: batch ids, the moving column's value on a row's first evaluation and on
+#: every later one). The batch updates one id and inserts another; the
+#: moving value of later evaluations names a partition with rows of its own.
+_MOVING_BATCHES = {
+    "one_column": (["part"], [(1, "a", "p0"), (2, "b", "p0"), (3, "c", "p1"), (4, "d", "p1")],
+                   [1, 10], "p0", "p1"),
+    "null": (["part"], [(1, "a", None), (2, "b", None), (3, "c", "p1"), (4, "d", "p1")],
+             [1, 10], None, "p1"),
+    "two_columns": (["y", "m"], [(1, "a", 2024, "p0"), (2, "b", 2024, "p0"),
+                                 (3, "c", 2024, "p1"), (4, "d", 2024, "p1")],
+                    [1, 10], "p0", "p1"),
+    "full_rewrite": (["part"], [(1, "a", "p0"), (2, "b", "p0"), (3, "c", "p1"), (4, "d", "p1")],
+                     [1, 10], "p0", "p1"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MOVING_BATCHES))
+def test_merge_by_pk_reads_batch_once(spark, tmp_path, monkeypatch, case):
+    """A batch whose source changes between reads (a live table) is read
+    once: every batch row is evaluated exactly once, and the table equals
+    the merge of that one evaluation. Here the partition column of each
+    batch row names one partition on the row's first evaluation and
+    another after it; a merge that reads the batch again would write
+    rows into a partition it never read, and dynamic overwrite would
+    delete that partition's existing rows."""
+    from etl_java_spark.sinks import writers
+
+    partition_by, existing, ids, first, later = _MOVING_BATCHES[case]
+    moving = partition_by[-1]
+    schema = "id int, v string, " + ", ".join(
+        f"{c} {'int' if c == 'y' else 'string'}" for c in partition_by
+    )
+    path, marks = str(tmp_path / "t"), str(tmp_path / "marks")
+    os.mkdir(marks)
+    merge_by_pk(spark, spark.createDataFrame(existing, schema), path, ["id"],
+                partition_by=partition_by)
+
+    def evaluation(i):
+        # one new file per evaluation of row i: i.0, i.1, ...
+        k = 0
+        while True:
+            try:
+                os.close(os.open(os.path.join(marks, f"{i}.{k}"), os.O_CREAT | os.O_EXCL))
+                return first if k == 0 else later
+            except FileExistsError:
+                k += 1
+
+    moved = F.udf(evaluation, "string").asNondeterministic()
+    batch = spark.createDataFrame([(i, f"new{i}") for i in ids], "id int, v string")
+    for c in partition_by:
+        batch = batch.withColumn(c, moved("id") if c == moving else F.lit(2024))
+    if case == "full_rewrite":
+        monkeypatch.setattr(writers, "MAX_PRUNED_PARTITIONS", 0)
+    merge_by_pk(spark, batch, path, ["id"], partition_by=partition_by)
+
+    static = (2024,) if len(partition_by) == 2 else ()
+    once = [(i, f"new{i}", *static, first) for i in ids]
+    expected = sorted(
+        [r for r in existing if r[0] not in ids] + once, key=lambda r: r[0]
+    )
+    assert sorted(map(tuple, spark.read.schema(schema).parquet(path).collect())) == expected
+    assert sorted(os.listdir(marks)) == sorted(f"{i}.0" for i in ids)
+
+
+def test_merge_by_pk_unpartitioned_reads_batch_once(spark, tmp_path):
+    """On an unpartitioned table too the batch is read once: a batch row
+    that a live source shows only on its first read updates its existing
+    row. Read twice, the anti-join keys saw it and the written rows did
+    not, and the existing row was deleted."""
+    path, marks = str(tmp_path / "t"), str(tmp_path / "marks")
+    os.mkdir(marks)
+    merge_by_pk(spark, spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), path, ["id"])
+
+    def first_read(i):
+        k = 0
+        while True:
+            try:
+                os.close(os.open(os.path.join(marks, f"{i}.{k}"), os.O_CREAT | os.O_EXCL))
+                return k == 0
+            except FileExistsError:
+                k += 1
+
+    live = F.udf(first_read, "boolean").asNondeterministic()
+    batch = spark.createDataFrame([(1, "A")], "id int, v string").filter(live("id"))
+    merge_by_pk(spark, batch, path, ["id"])
+    assert _rows(spark.read.parquet(path)) == [(1, "A"), (2, "b")]
+    assert os.listdir(marks) == ["1.0"]
+
+
+def test_merge_by_pk_empty_batch_changes_nothing(spark, tmp_path):
+    """An empty batch into a partitioned table (its checkpoint observes an
+    empty partition set) returns and leaves every file as it was."""
+    path = str(tmp_path / "t")
+    schema = "id int, v string, part string"
+    merge_by_pk(spark, spark.createDataFrame([(1, "a", "p"), (2, "b", "q")], schema), path,
+                ["id"], partition_by=["part"])
+    before = _partition_files(path)
+    merge_by_pk(spark, spark.createDataFrame([], schema), path, ["id"], partition_by=["part"])
+    assert _partition_files(path) == before
+
+
 def test_leaf_data_schema_matches_spark_inference(spark, tmp_path):
-    """The driver-side footer schema of a leaf directory equals the schema
-    Spark infers for it, for files written by pyarrow (no Spark row
-    metadata; a nanosecond timestamp reads as long under nanosAsLong) and
-    by Spark (timestamp, nested struct); an empty directory raises."""
+    """The driver-side footer schema (``readers._footer_schema``) equals
+    the schema Spark infers, and ``read_parquet`` built on it equals the
+    inferring read, schema and rows: a single file and a flat directory
+    written by pyarrow (no Spark row metadata; decimals, nested and list
+    types, a nanosecond timestamp read as long under nanosAsLong and a
+    TIMESTAMP_NTZ, both normalized by ``normalize_nanos``), a Spark-written
+    shard directory holding ``_SUCCESS`` and ``.crc`` files, and
+    directories whose ``_common_metadata`` / ``_metadata`` summary
+    differs from the data file (the summary wins, as in Spark)."""
     import datetime
     import decimal
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.errors import AnalysisException
-    from pyspark.sql.types import LongType
+    from pyspark.sql.types import LongType, TimestampNTZType
 
-    from etl_java_spark.sinks.writers import _leaf_data_schema
+    from etl_java_spark.sources import readers
 
-    by_arrow = tmp_path / "arrow"
-    by_arrow.mkdir()
-    pq.write_table(
-        pa.table({
-            "i": pa.array([1], pa.int32()),
-            "l": pa.array([2], pa.int64()),
-            "d": pa.array([1.5], pa.float64()),
-            "s": pa.array(["x"], pa.string()),
-            "dt": pa.array([datetime.date(2024, 1, 1)], pa.date32()),
-            "dec": pa.array([decimal.Decimal("1.23")], pa.decimal128(10, 2)),
-            "ts": pa.array([1], pa.timestamp("ns")),
-        }),
-        str(by_arrow / "a.parquet"),
-        version="2.6",
-    )
-    by_spark = str(tmp_path / "spark")
+    def arrow_dir(name, ts_type):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(
+            pa.table({
+                "i": pa.array([1, None], pa.int32()),
+                "l": pa.array([2, 3], pa.int64()),
+                "d": pa.array([1.5, None], pa.float64()),
+                "s": pa.array(["x", "ü"], pa.string()),
+                "dt": pa.array([datetime.date(2024, 1, 1), None], pa.date32()),
+                "dec": pa.array([decimal.Decimal("1.23"), None], pa.decimal128(10, 2)),
+                "big": pa.array([decimal.Decimal("12345678901234567890.5"), None],
+                                pa.decimal128(38, 1)),
+                "st": pa.array([{"a": 1, "b": ["u", "v"]}, None],
+                               pa.struct([("a", pa.int64()), ("b", pa.list_(pa.string()))])),
+                "ts": pa.array([datetime.datetime(2024, 1, 2, 3, 4, 5, 6), None], ts_type),
+            }),
+            str(d / "a.parquet"),
+            version="2.6",
+        )
+        return d
+
+    nanos = arrow_dir("nanos", pa.timestamp("ns"))
+    ntz = arrow_dir("ntz", pa.timestamp("us"))
+    shards = str(tmp_path / "shards")
     spark.sql(
-        "SELECT 1 AS id, TIMESTAMP'2024-01-01 00:00:00' AS ts,"
-        " named_struct('a', 1L, 'b', named_struct('c', 'x')) AS nested"
-    ).write.parquet(by_spark)
-    empty = tmp_path / "empty"
+        "SELECT id, TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,"
+        " CAST(id AS DECIMAL(12, 3)) AS dec,"
+        " named_struct('a', id, 'b', named_struct('c', 'x')) AS nested,"
+        " map('k', id) AS m, array(id, id + 1) AS arr"
+        " FROM range(6)"
+    ).repartition(3).write.parquet(shards)
+    assert {"_SUCCESS"} <= set(os.listdir(shards))
+    assert any(n.endswith(".crc") for n in os.listdir(shards))
+    summaries = {}
+    for name, files in {
+        "common_metadata": ("_common_metadata", "_metadata"),
+        "metadata": ("_metadata",),
+    }.items():
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(pa.table({"x": pa.array([1], pa.int32())}), str(d / "a.parquet"))
+        for f in files:
+            pq.write_metadata(pa.schema([("x", pa.int32()), (f, pa.string())]), str(d / f))
+        summaries[name] = (d, files[0])
+
+    paths = [nanos, nanos / "a.parquet", ntz, ntz / "a.parquet", shards]
+    paths += [d for d, _ in summaries.values()]
+    for p in map(str, paths):
+        inferred = spark.read.parquet(p)
+        assert readers._footer_schema(spark, p) == inferred.schema, p
+        got = readers.read_parquet(spark, p)
+        want = readers.normalize_nanos(inferred)
+        assert got.schema == want.schema, p
+        assert sorted(map(str, got.collect())) == sorted(map(str, want.collect())), p
+    assert readers._footer_schema(spark, str(nanos))["ts"].dataType == LongType()
+    assert readers._footer_schema(spark, str(ntz))["ts"].dataType == TimestampNTZType()
+    for d, summary in summaries.values():
+        assert readers._footer_schema(spark, str(d)).fieldNames() == ["x", summary]
+
+
+def test_footer_schema_leaves_other_reads_to_spark(spark, tmp_path):
+    """Reads the one-footer rule does not cover go to ``spark.read.parquet``
+    unchanged: a missing path still raises PATH_NOT_FOUND (the cold-start
+    test of the table-state writers), an empty directory raises the same
+    error as the inferring read, a partitioned directory and a glob are
+    inferred by Spark, and ``read_parquet_merged`` still merges every
+    footer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from etl_java_spark.plans.pipeline import ParquetSource
+    from etl_java_spark.sources import readers
+
+    def condition(read, path):
+        with pytest.raises(AnalysisException) as e:
+            read(path)
+        return e.value.getCondition()
+
+    missing, empty = str(tmp_path / "missing"), tmp_path / "empty"
     empty.mkdir()
+    scan = [lambda p: readers.read_parquet(spark, p), lambda p: ParquetSource(p).load(spark)]
+    for read in scan:
+        assert condition(read, missing) == "PATH_NOT_FOUND"
+        assert condition(read, str(empty)) == condition(spark.read.parquet, str(empty))
 
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(str(tmp_path)).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-
-    def leaf(d):
-        return _leaf_data_schema(spark, fs, jvm.org.apache.hadoop.fs.Path(str(d)))
-
-    for d in (by_arrow, by_spark):
-        assert leaf(d) == spark.read.parquet(str(d)).schema, d
-    assert leaf(by_arrow)["ts"].dataType == LongType()
-    with pytest.raises(AnalysisException):
-        leaf(empty)
+    table = str(tmp_path / "table")
+    spark.createDataFrame([(1, "007"), (2, "x")], "id int, part string").write.partitionBy(
+        "part"
+    ).parquet(table)
+    gen = tmp_path / "gen"
+    gen.mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(gen / "g1.parquet"))
+    pq.write_table(pa.table({"a": [2], "b": ["new"]}), str(gen / "g2.parquet"))
+    for p in (table, str(gen / "*.parquet")):
+        assert readers._footer_schema(spark, p) is None, p
+        assert readers.read_parquet(spark, p).schema == spark.read.parquet(p).schema, p
+    assert readers.read_parquet_merged(spark, str(gen)).columns == ["a", "b"]
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert readers._footer_schema(spark, str(gen)) is None
+        assert readers.read_parquet(spark, str(gen)).columns == ["a", "b"]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
