@@ -49,7 +49,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -353,8 +353,6 @@ def merge_by_pk(
     stale row in the old partition would survive. Partition columns
     should be PK-derived or immutable per PK.
     """
-    from pyspark.sql import Observation
-
     pks = list(pks)
     _check_idents(*pks)
     partition_by = list(partition_by or [])
