@@ -11,6 +11,16 @@ session IS the engine, so the defaults matter:
 - Session timezone pinned to UTC so results are comparable across
   engines (DuckDB oracle) and clusters.
 - Arrow enabled for the few places we drop to pandas UDFs.
+- The JVM-wide cache of compiled whole-stage-codegen classes
+  (``spark.sql.codegen.cache.maxEntries``) holds 1000 classes, not
+  Spark's default 100. The bound must hold an operation's working set:
+  a near-duplicate pass (profile queries, MinHash pairs, clusters,
+  top-k, write) compiles ~130 distinct classes, so at 100 each class
+  was evicted before the next pass used it again and every pass
+  recompiled all of them (~10 ms each). The cache is Guava-backed and
+  can evict before it reaches its bound, hence the headroom. The conf
+  is static: it can only be set when a session is built, so a session
+  reused through ``getOrCreate`` keeps the bound it was started with.
 """
 
 from __future__ import annotations
@@ -51,6 +61,7 @@ def get_session(
         # nanos timestamp type — read as long and convert (see readers).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -124,9 +124,9 @@ def _upsert(
     existing: DataFrame, keys: DataFrame, rows: DataFrame, pks: list[str]
 ) -> DataFrame:
     """The rows of ``existing`` whose PK is not among ``keys``' PKs, then
-    ``rows`` — which must hold one row per PK. ``merge_by_pk`` passes its
-    deduplicated batch checkpoint as both, so neither side dedups or
-    reads the source again."""
+    ``rows`` — which must hold one row per PK. ``merge_by_pk`` and
+    ``merge_by_pk_evolve`` pass their deduplicated batch checkpoint as
+    both, so neither side dedups or reads the source again."""
     kept = existing.join(keys.select(*pks), on=pks, how="left_anti")
     return kept.unionByName(rows.select(*existing.columns))
 
@@ -753,6 +753,12 @@ def merge_by_pk_evolve(
 
     The evolving half is align_schemas_evolve; storage discipline is
     _rewrite_table's (read-modify-atomic-rewrite + cache refresh).
+
+    Read-once guarantee, as in merge_by_pk: on an existing table the
+    aligned, PK-deduplicated batch is one eager checkpoint that both the
+    anti-join keys and the written rows read, released when the call
+    ends, so a live source cannot delete a row by showing it to one read
+    and not the other.
     """
     pks = list(pks)
     _check_idents(*pks)
@@ -761,4 +767,8 @@ def merge_by_pk_evolve(
         _write_table(updates.dropDuplicates(pks), path)
         return
     ex_w, up_w = align_schemas_evolve(existing, updates)
-    _rewrite_table(spark, merge_dataframes(ex_w, up_w, pks), path)
+    batch = materialize(up_w.dropDuplicates(pks))
+    try:
+        _rewrite_table(spark, _upsert(ex_w, batch, batch, pks), path)
+    finally:
+        release(batch)

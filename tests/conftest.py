@@ -96,6 +96,24 @@ def job_counts(spark):
 
 
 @pytest.fixture
+def codegen_compiles(spark):
+    """Return a function that calls ``fn()`` and returns how many classes
+    the JVM compiled for generated code meanwhile: the change in the
+    count of Spark's ``CodegenMetrics`` compilation-time histogram, which
+    records one value per Janino compile and none for a class served
+    from the codegen cache. In local mode the executors share the
+    driver's JVM, so task-side compiles are counted too."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn):
+        before = metric.getCount()
+        fn()
+        return metric.getCount() - before
+
+    return run
+
+
+@pytest.fixture
 def held_rdds(spark):
     """Return a function giving the ids of the RDDs persisted since the
     fixture was set up (local checkpoints and persisted frames)."""

@@ -12,6 +12,7 @@ the failure message but not bounded.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -144,3 +145,45 @@ def test_near_duplicate_job_budget(spark, tmp_path, job_counts, op):
     got = job_counts(calls[op])
     jobs, stages = DEDUP_BUDGETS[op]
     assert got.jobs <= jobs and got.stages <= stages, got
+
+
+#: 60 chains of 6 near-duplicate docs, built like CHAIN over a vocabulary
+#: of their own, so clusters take several label-propagation rounds.
+CORPUS = [
+    (60 * c + i, " ".join(f"c{c}w{t}" for t in range(3 * i, 3 * i + 24)),
+     [float(i), 1.0 + c, float((c + i) % 7)])
+    for c in range(60)
+    for i in range(6)
+]
+
+
+def test_near_duplicate_chain_reuses_compiled_code(spark, tmp_path, codegen_compiles):
+    """A second near-duplicate pass compiles no generated class: MinHash
+    pairs, their clusters and the brute-force top-k over the same
+    360-doc corpus compile their whole-stage-codegen classes on the first
+    pass and find every one in the session's codegen cache on the second.
+    A cache smaller than the pass's working set evicts classes before
+    the next pass asks for them again, and every pass recompiles."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        CORPUS, "doc_id long, text string, embedding array<double>"
+    ).coalesce(1).write.parquet(path)
+
+    def chain():
+        docs = readers.read_parquet(spark, path)
+        pairs = dedup.minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.7)
+        labels = dedup.dedup_clusters(pairs)
+        kept = docs.join(
+            labels.filter("id != cluster_id").select(F.col("id").alias("doc_id")),
+            "doc_id", "left_anti",
+        )
+        similarity.brute_force_topk(
+            kept, docs.filter(F.col("doc_id") % 60 == 0), "embedding", "doc_id", k=3
+        ).collect()
+
+    # the counter sees a compile: a literal no earlier query used is
+    # inlined into the generated code, so its class cannot be cached
+    nonce = uuid.uuid4().int % 10**9 + 2
+    assert codegen_compiles(lambda: spark.range(3).selectExpr(f"id * {nonce}").collect()) > 0
+    first = codegen_compiles(chain)
+    assert codegen_compiles(chain) == 0, f"recompiled; the first pass compiled {first}"

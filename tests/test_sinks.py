@@ -450,14 +450,11 @@ def test_merge_by_pk_reads_batch_once(spark, tmp_path, monkeypatch, case):
     assert sorted(os.listdir(marks)) == sorted(f"{i}.0" for i in ids)
 
 
-def test_merge_by_pk_unpartitioned_reads_batch_once(spark, tmp_path):
-    """On an unpartitioned table too the batch is read once: a batch row
-    that a live source shows only on its first read updates its existing
-    row. Read twice, the anti-join keys saw it and the written rows did
-    not, and the existing row was deleted."""
-    path, marks = str(tmp_path / "t"), str(tmp_path / "marks")
-    os.mkdir(marks)
-    merge_by_pk(spark, spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), path, ["id"])
+def _first_read_only(marks):
+    """A nondeterministic UDF true on the first evaluation of each id
+    only: a live source that shows a row to one read of the batch and
+    not to the next. Evaluation k of id i leaves the file ``i.k`` in the
+    directory ``marks``."""
 
     def first_read(i):
         k = 0
@@ -468,10 +465,39 @@ def test_merge_by_pk_unpartitioned_reads_batch_once(spark, tmp_path):
             except FileExistsError:
                 k += 1
 
-    live = F.udf(first_read, "boolean").asNondeterministic()
+    return F.udf(first_read, "boolean").asNondeterministic()
+
+
+def test_merge_by_pk_unpartitioned_reads_batch_once(spark, tmp_path):
+    """On an unpartitioned table too the batch is read once: a batch row
+    that a live source shows only on its first read updates its existing
+    row. Read twice, the anti-join keys saw it and the written rows did
+    not, and the existing row was deleted."""
+    path, marks = str(tmp_path / "t"), str(tmp_path / "marks")
+    os.mkdir(marks)
+    merge_by_pk(spark, spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), path, ["id"])
+    live = _first_read_only(marks)
     batch = spark.createDataFrame([(1, "A")], "id int, v string").filter(live("id"))
     merge_by_pk(spark, batch, path, ["id"])
     assert _rows(spark.read.parquet(path)) == [(1, "A"), (2, "b")]
+    assert os.listdir(marks) == ["1.0"]
+
+
+def test_merge_by_pk_evolve_reads_batch_once(spark, tmp_path):
+    """The evolving upsert reads its batch once as well: a batch row that
+    a live source shows only on its first read updates its existing row,
+    and the column it adds reads NULL on the untouched one. Read twice,
+    the anti-join keys saw the row and the written rows did not, and
+    the existing row was deleted."""
+    from etl_java_spark.sinks.writers import merge_by_pk_evolve
+
+    path, marks = str(tmp_path / "t"), str(tmp_path / "marks")
+    os.mkdir(marks)
+    spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string").write.parquet(path)
+    live = _first_read_only(marks)
+    batch = spark.createDataFrame([(1, "A", "x")], "id int, v string, tag string")
+    merge_by_pk_evolve(spark, batch.filter(live("id")), path, ["id"])
+    assert _rows(spark.read.parquet(path)) == [(1, "A", "x"), (2, "b", None)]
     assert os.listdir(marks) == ["1.0"]
 
 

@@ -5,6 +5,12 @@ methodology (count() action, min over reps), so numbers are comparable
 to bench_full.json without paying a 10-minute full-corpus run per
 iteration. Optionally dumps .explain("formatted") per query.
 
+Each query's line also gives the generated classes Janino compiled in
+its first and last rep, and the milliseconds spent compiling them
+(``codegen first=N/Xms last=M/Yms``). The min over reps hides a query
+that recompiles every rep; a last rep that still compiles shows it
+(e.g. a codegen cache smaller than the working set).
+
 Usage:
   python tools/qtime.py [--sf DIR] [--reps N] [--noop] [--explain OUTDIR] q1 [q2 ...]
 
@@ -97,6 +103,14 @@ def main() -> None:
         print(f"    -- {len(fresh)} jobs, sum {tot:.2f}s", file=sys.stderr)
         return hi
 
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def codegen_reading() -> tuple[int, int]:
+        """(classes compiled, nanoseconds spent compiling) since JVM start."""
+        return compiles.getCount(), codegen.compileTime()
+
     hi_job = -1
     for name in names:
         fn = Q.QUERIES[name]
@@ -108,9 +122,10 @@ def main() -> None:
             )
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(plan)
-        times = []
+        times, compiled = [], []
         for r in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{r}")
+            n0, ns0 = codegen_reading()
             t0 = time.time()
             df = fn(spark, args.sf)
             if args.noop:
@@ -119,12 +134,20 @@ def main() -> None:
             else:
                 n_rows = df.count()
             dt = time.time() - t0
+            n1, ns1 = codegen_reading()
             times.append(dt)
-            print(f"  {name} rep{r}: {dt:.2f}s ({n_rows} rows)", file=sys.stderr)
+            compiled.append(f"{n1 - n0}/{(ns1 - ns0) / 1e6:.0f}ms")
+            print(
+                f"  {name} rep{r}: {dt:.2f}s ({n_rows} rows, {compiled[-1]} compiled)",
+                file=sys.stderr,
+            )
             if args.jobs:
                 hi_job = job_report(hi_job)
         spark.sparkContext.setJobDescription(None)
-        print(f"{name}\tmin={min(times):.3f}\tall={[round(t,2) for t in times]}")
+        print(
+            f"{name}\tmin={min(times):.3f}\tall={[round(t,2) for t in times]}"
+            f"\tcodegen first={compiled[0]} last={compiled[-1]}"
+        )
 
 
 if __name__ == "__main__":
