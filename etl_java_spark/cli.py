@@ -59,7 +59,7 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from .operators.transforms import apply_transforms, project, rename_map
+    from .plans.pipeline import shape
     from .session import get_session
     from .sinks import writers
     from .sources import readers
@@ -104,15 +104,12 @@ def main(argv: list[str] | None = None) -> int:
         df = spark.sql(args.query)
 
     # --- shape (reference #6/#7/#8-#12) ---
-    if args.select:
-        df = project(df, args.select.split(","))
-    if args.rename:
-        mapping = dict(r.split("=", 1) for r in args.rename)
-        full = {c: mapping.get(c, c) for c in df.columns}
-        df = rename_map(df, full)
-    if args.transform:
-        specs = [tuple(t.split(":", 2)) for t in args.transform]
-        df = apply_transforms(df, specs)
+    df = shape(
+        df,
+        select=args.select.split(",") if args.select else None,
+        rename=dict(r.split("=", 1) for r in args.rename),
+        transforms=[tuple(t.split(":", 2)) for t in args.transform],
+    )
 
     # --- sink (reference #13-#16) ---
     if args.show:

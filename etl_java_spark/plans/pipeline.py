@@ -29,6 +29,29 @@ from ..sinks import writers
 from ..sources.readers import _scan_parquet
 
 
+def shape(
+    df: DataFrame,
+    select: Sequence[str] | None = None,
+    rename: Mapping[str, str] | None = None,
+    transforms: Sequence[tuple] = (),
+    dest_columns: Sequence[str] | None = None,
+    dest_pks: Sequence[str] | None = None,
+) -> DataFrame:
+    """The pipeline's shaping stages (reference #6-#12), each applied
+    when given: ``project`` to ``select``, ``rename_map`` (columns not in
+    ``rename`` keep their names; ``dest_columns``/``dest_pks`` validate
+    the mapping), then ``apply_transforms``. ``Pipeline.build`` and the
+    CLI both shape their frame here."""
+    if select:
+        df = project(df, select)
+    if rename:
+        full_map = {c: rename.get(c, c) for c in df.columns}
+        df = rename_map(df, full_map, dest_columns, dest_pks)
+    if transforms:
+        df = apply_transforms(df, transforms)
+    return df
+
+
 @dataclass
 class ParquetSource:
     """A parquet file or directory. A file or a flat directory takes its
@@ -91,15 +114,10 @@ class Pipeline:
 
     def build(self, spark: SparkSession) -> DataFrame:
         """Compose the lazy DataFrame without executing (inspect/explain)."""
-        df = self.source.load(spark)
-        if self.select:
-            df = project(df, self.select)
-        if self.rename:
-            full_map = {c: self.rename.get(c, c) for c in df.columns}
-            df = rename_map(df, full_map, self.dest_columns, self.dest_pks)
-        if self.transforms:
-            df = apply_transforms(df, self.transforms)
-        return df
+        return shape(
+            self.source.load(spark), self.select, self.rename, self.transforms,
+            self.dest_columns, self.dest_pks,
+        )
 
     def run(self, spark: SparkSession) -> DataFrame:
         df = self.build(spark)

@@ -20,29 +20,34 @@ Reference parity (``/root/reference/src/etl/ETLProcess.java``):
   atomicity comes from Spark's all-or-nothing job commit protocol rather
   than manual commit/rollback.
 
-Table format: the table-state writers (``merge_by_pk``,
-``merge_by_pk_evolve``, ``insert_if_absent``, ``apply_cdc_by_pk``,
-``read_cdc_state``) read and write parquet only; ``append`` and
-``overwrite`` take any format Spark writes. There is no Delta backend:
-delta-spark is not a dependency of this engine.
+Table format: parquet only, for the table-state writers
+(``merge_by_pk``, ``merge_by_pk_evolve``, ``insert_if_absent``,
+``apply_cdc_by_pk``, ``read_cdc_state``) and for ``append`` and
+``overwrite``. There is no Delta backend: delta-spark is not a
+dependency of this engine.
 
 Cost model: at table-state sizes a write costs Spark jobs more than
-bytes. On an existing table ``merge_by_pk`` reads its batch from the
+bytes. A missing ``path`` is the one cold start (``_exists``): the batch
+is written; an existing table that is empty or unreadable raises
+instead. On an existing table ``merge_by_pk`` reads its batch from the
 source once, into one eager checkpoint of the PK-deduplicated rows that
-every later step reads. On a hive-partitioned table the checkpoint's
-job also observes the touched partitions, and the merge lists, reads
-and rewrites only those — O(touched partitions) — by dynamic partition
-overwrite, which swaps the touched directories in only at job commit,
-so the output needs no checkpoint.
-A small batch costs 5 jobs (details in its docstring). Every
-partitioned table-state write is an optimized write spread over the
-slots: one file per written partition, each partition value in one of
-``defaultParallelism`` tasks, so one partition larger than the
-advisory size is one large file, not several. Full rewrites are
-static overwrites, which delete the table before their job runs:
-``_rewrite_table`` materializes their input first and releases it
-after. Table schemas come from one parquet footer on the driver
-(``readers._footer_schema``), never from an inference job.
+every later step reads. A hive-partitioned table is rewritten only by
+dynamic partition overwrite — the touched partitions, O(touched), or
+every partition past ``MAX_PRUNED_PARTITIONS`` — which swaps the
+written directories in only at job commit, so the output needs no
+checkpoint. A small batch costs 5 jobs (details in its docstring).
+Every partitioned write is an optimized write spread over the slots:
+one file per written partition, each partition value in one of
+``defaultParallelism`` tasks, so one partition larger than the advisory
+size is one large file, not several.
+
+Static overwrites serve unpartitioned tables only, and delete the table
+before their job runs: ``_rewrite_table`` materializes its input first
+and releases it after. So ``merge_by_pk`` without ``partition_by``,
+``merge_by_pk_evolve`` and ``apply_cdc_by_pk`` checkpoint their output;
+the partitioned merge, the cold starts and ``insert_if_absent`` (an
+append) do not. Table schemas come from one parquet footer on the
+driver (``readers._footer_schema``), never from an inference job.
 """
 
 from __future__ import annotations
@@ -54,48 +59,37 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..plans.checkpoints import materialize, release
-from ..sources.readers import _footer_schema
+from ..sources.readers import _SUMMARY_FILES, _footer_schema, _listed_by_spark
 
 REFERENCE_BATCH_SIZE = 1000  # ETLProcess.java:210
 
 
-def _read_state_or_cold_start(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame | None:
-    """Read a writer's persisted parquet state table; ``None`` ONLY on a
-    true cold start (PATH_NOT_FOUND error class). Any other read failure
-    — transient IO, permissions, corruption — re-raises: the caller is
-    about to ``mode("overwrite")`` the path, and misreading such an
-    error as cold start would silently destroy all prior state
-    (tombstones, merged history). Mirrors ``read_incremental``'s
-    bookmark discipline (sources/readers.py), comparing the error
-    CLASS, not message text. A given ``schema`` is read with, instead of
-    inferring one (a Spark job over a listing of the whole table)."""
-    from pyspark.errors import AnalysisException
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether anything exists at ``path``. The table-state writers' one
+    cold-start rule: a missing path is a cold start; anything else is
+    read, and raises when it cannot be."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return root.getFileSystem(spark._jsc.hadoopConfiguration()).exists(root)
 
-    try:
-        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
-    except AnalysisException as ex:
-        getter = getattr(ex, "getCondition", None) or getattr(
-            ex, "getErrorClass", None
-        )
-        if (getter() if getter else None) != "PATH_NOT_FOUND":
-            raise
+
+def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
+    """The unpartitioned parquet table at ``path``, read with its data
+    schema from one footer (``_data_schema``, no inference job); ``None``
+    ONLY when ``path`` does not exist. An existing path that cannot be
+    read — empty, corrupt, unreadable — raises: the caller is about to
+    overwrite it, and taking it for a cold start would silently destroy
+    all prior state (tombstones, merged history)."""
+    if not _exists(spark, path):
         return None
+    return spark.read.schema(_data_schema(spark, path)).parquet(path)
 
 
-def append(df: DataFrame, path: str, fmt: str = "parquet", partition_by: Sequence[str] | None = None) -> None:
-    w = df.write.mode("append").format(fmt)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
+def append(df: DataFrame, path: str) -> None:
+    df.write.format("parquet").mode("append").save(path)
 
 
-def overwrite(df: DataFrame, path: str, fmt: str = "parquet", partition_by: Sequence[str] | None = None) -> None:
-    w = df.write.mode("overwrite").format(fmt)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
+def overwrite(df: DataFrame, path: str) -> None:
+    _write_table(df, path)
 
 
 def merge_dataframes(
@@ -131,9 +125,10 @@ def _upsert(
     return kept.unionByName(rows.select(*existing.columns))
 
 
-#: Above this many touched partitions the partition-scoped MERGE falls
-#: back to a full rewrite: the per-partition existence checks and file
-#: churn stop paying for themselves once most of the table is touched.
+#: Above this many touched partitions the partitioned MERGE reads the
+#: whole table instead of the touched directories (still a dynamic
+#: overwrite): per-directory existence checks and reads stop paying for
+#: themselves once most of the table is touched.
 MAX_PRUNED_PARTITIONS = 10_000
 
 
@@ -236,51 +231,60 @@ def _write_table(
     w.save(path)
 
 
-def _merge_touched_partitions(
+def _merge_partitions(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
-    fs,
-    root,
     pks: list[str],
     partition_by: list[str],
-    touched: list[str],
-) -> bool:
-    """Partition-scoped MERGE of ``batch`` (one row per PK): read only the
-    ``touched`` directories that exist under ``root`` (the Hadoop Path of
-    ``path``), rewrite exactly those (plus the new ones) by dynamic
-    partition overwrite. Returns False, having done nothing, when
-    ``path`` holds no partition directory to take the table's columns
-    from — a root that only the full-rewrite path can judge."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    dirs = [p for p in (Path(root, rel) for rel in touched) if fs.exists(p)]
-    sample = dirs[0] if dirs else _some_partition_dir(spark, fs, root, partition_by)
-    if sample is None:
-        return False
-    schema = _table_schema(_data_schema(spark, sample.toString()), batch, partition_by)
-    if dirs:
-        existing = spark.read.schema(schema).option("basePath", path).parquet(
-            *[p.toString() for p in dirs]
-        )
-    else:
-        existing = spark.createDataFrame([], schema)
-    # No checkpoint of the output: dynamic overwrite stages it under
-    # .spark-staging-* and swaps the touched directories in only at job
-    # commit, after every task has read its source files. A failed job
-    # leaves the table as it was.
-    _write_table(_upsert(existing, batch, batch, pks), path, partition_by, dynamic=True)
-    spark.catalog.refreshByPath(path)
-    return True
-
-
-def _rewrite_table(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] | None = None,
+    parts: Sequence,
 ) -> None:
-    """Overwrite the parquet table at ``path`` with ``df``, which may
-    read ``path`` itself.
+    """MERGE ``batch`` (one row per PK, holding the partition tuples
+    ``parts``) into the partitioned table at ``path`` by dynamic partition
+    overwrite: read the touched directories that exist — the whole table
+    past MAX_PRUNED_PARTITIONS — and rewrite exactly the partitions the
+    merged rows fall in. The table's data columns come from one leaf
+    partition directory. A root holding no partition directory is a
+    table with no rows when Spark's listing keeps no data file in it,
+    and the batch is written as a cold start; otherwise it is not a
+    table partitioned on ``partition_by``, and ValueError is raised."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    touched = _touched_partition_dirs(spark, parts, partition_by)
+    if touched is None:
+        dirs = [root]
+        sample = _some_partition_dir(spark, fs, root, partition_by)
+    else:
+        dirs = [p for p in (Path(root, rel) for rel in touched) if fs.exists(p)]
+        sample = dirs[0] if dirs else _some_partition_dir(spark, fs, root, partition_by)
+    if sample is None:
+        names = [st.getPath().getName() for st in fs.listStatus(root)]
+        if any(_listed_by_spark(n) and not n.startswith(_SUMMARY_FILES) for n in names):
+            raise ValueError(
+                f"{path} holds no partition directory of {partition_by}: "
+                "it is not a table partitioned on them"
+            )
+        _write_table(batch, path, partition_by)
+    else:
+        schema = _table_schema(_data_schema(spark, sample.toString()), batch, partition_by)
+        if dirs:
+            existing = spark.read.schema(schema).option("basePath", path).parquet(
+                *[p.toString() for p in dirs]
+            )
+        else:
+            existing = spark.createDataFrame([], schema)
+        # No checkpoint of the output: dynamic overwrite stages it under
+        # .spark-staging-* and swaps the written directories in only at
+        # job commit, after every task has read its source files. A
+        # failed job leaves the table as it was.
+        _write_table(_upsert(existing, batch, batch, pks), path, partition_by, dynamic=True)
+    spark.catalog.refreshByPath(path)
+
+
+def _rewrite_table(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Overwrite the unpartitioned parquet table at ``path`` with ``df``,
+    which may read ``path`` itself.
 
     A static overwrite deletes ``path`` before its job runs, so ``df`` is
     materialized first (plans/checkpoints policy). It is released once
@@ -288,7 +292,7 @@ def _rewrite_table(
     dropped from the shared FileStatusCache."""
     local = materialize(df)
     try:
-        _write_table(local, path, partition_by)
+        _write_table(local, path)
     finally:
         release(local)
     spark.catalog.refreshByPath(path)
@@ -303,9 +307,16 @@ def merge_by_pk(
 ) -> None:
     """Upsert ``updates`` into the parquet table at ``path`` keyed on pks.
 
-    Emulated MERGE (merge_dataframes + rewrite). With ``partition_by`` (a
-    hive-partitioned table) the merge is PARTITION-SCOPED, and listing,
-    reading and writing are all O(touched partitions), not O(table):
+    Emulated MERGE (merge_dataframes + rewrite) by one of three paths. A
+    missing ``path`` is a cold start, decided before anything is
+    checkpointed: the PK-deduplicated batch is written. Without
+    ``partition_by`` the table is rewritten whole (``_rewrite_table``,
+    a static overwrite that checkpoints its output), its schema from
+    one footer. With ``partition_by`` (a hive-partitioned table) the
+    merge is a dynamic partition overwrite, PARTITION-SCOPED: listing,
+    reading and writing are all O(touched partitions), not O(table) —
+    past MAX_PRUNED_PARTITIONS touched partitions it reads the whole
+    table and rewrites every partition the same way:
 
     1. the batch is read from its source ONCE: deduplicated per PK into
        one eager checkpoint, whose job also observes the set of
@@ -316,14 +327,15 @@ def merge_by_pk(
        never listed, so no whole-table listing job runs;
     3. the existing touched directories are read with ``basePath`` set
        to the root and an explicit schema: data columns from one
-       footer, read on the driver by Spark's own rule (no schema
-       inference job; ``readers._footer_schema``), partition columns
-       typed as in ``updates``, never inferred;
+       footer of a leaf partition directory, read on the driver by
+       Spark's own rule (no schema inference job;
+       ``readers._footer_schema``), partition columns typed as in
+       ``updates``, never inferred;
     4. the merged frame is hash-repartitioned on the partition columns
        and written straight through dynamic partition overwrite, each
-       touched partition as one file, all slots writing
+       written partition as one file, all slots writing
        (``_write_table``). The output needs no checkpoint: dynamic
-       overwrite stages it and replaces the touched directories only at
+       overwrite stages it and replaces the written directories only at
        job commit, after every task has read its inputs, so a failed
        job leaves the table unchanged. Untouched partitions' files are
        not rewritten (byte-identical; see test_sinks). The batch
@@ -331,14 +343,12 @@ def merge_by_pk(
 
     Cost on a small batch: 5 Spark jobs — the dedup shuffle and the
     checkpoint, then the broadcast of the batch keys, the repartition
-    shuffle and the write.
-
-    A batch that touches only new partitions writes them and rewrites
-    nothing. Past MAX_PRUNED_PARTITIONS touched partitions, and without
-    ``partition_by``, the call is a full read-modify-atomic-rewrite
-    (_rewrite_table) of the same batch checkpoint, with the table's
-    schema from one footer too. A missing ``path`` is a cold start: the
-    batch is written, and nothing is checkpointed or observed.
+    shuffle and the write. A batch that touches only new partitions
+    writes them and rewrites nothing. An existing root that holds no
+    partition directory and no data file (an empty partitioned cold
+    start leaves one) takes the batch as a cold start; one that holds
+    data files but no partition directory raises ``ValueError`` and is
+    left as it was. An existing ``path`` that cannot be read raises.
 
     Read-once guarantee: on an existing table every step — the
     partition set, the anti-join keys, the written rows — reads the one
@@ -356,45 +366,29 @@ def merge_by_pk(
     pks = list(pks)
     _check_idents(*pks)
     partition_by = list(partition_by or [])
-    root = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    # A missing root is a cold start, decided only by the read below (by
-    # its error class): nothing is checkpointed for it.
-    exists = fs.exists(root)
-    batch = None
-    if exists:
-        batch = updates.dropDuplicates(pks)
-        if partition_by:
-            obs = Observation()
-            parts = F.collect_set(
-                F.struct(*[F.col(c).cast("string").alias(c) for c in partition_by])
-            )
-            batch = batch.observe(obs, parts.alias("parts"))
-        batch = materialize(batch)
+    if partition_by:
+        cold = not _exists(spark, path)
+    else:
+        existing = _read_state(spark, path)
+        cold = existing is None
+    if cold:
+        _write_table(updates.dropDuplicates(pks), path, partition_by)
+        return
+    batch = updates.dropDuplicates(pks)
+    if partition_by:
+        obs = Observation()
+        parts = F.collect_set(
+            F.struct(*[F.col(c).cast("string").alias(c) for c in partition_by])
+        )
+        batch = batch.observe(obs, parts.alias("parts"))
+    batch = materialize(batch)
     try:
-        if batch is not None and partition_by:
-            touched = _touched_partition_dirs(spark, obs.get["parts"], partition_by)
-            if touched is not None and _merge_touched_partitions(
-                spark, batch, path, fs, root, pks, partition_by, touched
-            ):
-                return
-        schema = None
-        if exists:
-            # data columns from one footer (no inference job), partition
-            # columns typed as in updates (see _table_schema)
-            leaf = _some_partition_dir(spark, fs, root, partition_by) if partition_by else None
-            schema = _data_schema(spark, (root if leaf is None else leaf).toString())
-            if partition_by:
-                schema = _table_schema(schema, updates, partition_by)
-        rows = updates.dropDuplicates(pks) if batch is None else batch
-        existing = _read_state_or_cold_start(spark, path, schema)
-        if existing is None:
-            _write_table(rows, path, partition_by)
+        if partition_by:
+            _merge_partitions(spark, batch, path, pks, partition_by, obs.get["parts"])
         else:
-            _rewrite_table(spark, _upsert(existing, rows, rows, pks), path, partition_by)
+            _rewrite_table(spark, _upsert(existing, batch, batch, pks), path)
     finally:
-        if batch is not None:
-            release(batch)
+        release(batch)
 
 
 def insert_if_absent_dataframes(existing: DataFrame, new: DataFrame) -> DataFrame:
@@ -412,14 +406,14 @@ def insert_if_absent_dataframes(existing: DataFrame, new: DataFrame) -> DataFram
 
 
 def insert_if_absent(spark: SparkSession, new: DataFrame, path: str) -> None:
-    existing = _read_state_or_cold_start(spark, path)
+    existing = _read_state(spark, path)
     if existing is None:
         _write_table(new.dropDuplicates(), path)
         return
     # An append deletes nothing, so the rows to add need no checkpoint:
     # the job reads the existing files it listed at planning time and
     # its new files appear only at job commit.
-    insert_if_absent_dataframes(existing, new).write.format("parquet").mode("append").save(path)
+    append(insert_if_absent_dataframes(existing, new), path)
 
 
 def write_jdbc(
@@ -650,7 +644,7 @@ def apply_cdc_by_pk(
     this writer does not do yet."""
     pks = list(pks)
     _check_idents(*pks)
-    state = _read_state_or_cold_start(spark, path)
+    state = _read_state(spark, path)
     _rewrite_table(spark, apply_cdc_dataframes(state, changes, pks, op_col, seq_col), path)
 
 
@@ -762,7 +756,7 @@ def merge_by_pk_evolve(
     """
     pks = list(pks)
     _check_idents(*pks)
-    existing = _read_state_or_cold_start(spark, path)
+    existing = _read_state(spark, path)
     if existing is None:
         _write_table(updates.dropDuplicates(pks), path)
         return

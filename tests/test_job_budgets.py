@@ -30,11 +30,12 @@ SCHEMA = "id int, part string, v string"
 #: merge: the deduplicated batch's checkpoint, which also observes the
 #: touched partition values (2 jobs; 6 in all when a distinct query of
 #: its own collected them), then the merge write (3). The full rewrite
-#: reads its schema from a footer (7 with an inference job); the cold
-#: start checkpoints and observes nothing (5 when it collected values).
+#: is the same dynamic overwrite over the whole table (6 when it was a
+#: static overwrite that checkpointed its output); the cold start
+#: checkpoints and observes nothing (5 when it collected values).
 BUDGETS = {
     "partition_scoped": (5, 5),
-    "full_rewrite": (6, 6),
+    "full_rewrite": (5, 5),
     "cold_start": (3, 3),
 }
 
@@ -42,7 +43,7 @@ BUDGETS = {
 @pytest.mark.parametrize("path_name", sorted(BUDGETS))
 def test_merge_by_pk_job_budget(spark, tmp_path, monkeypatch, job_counts, path_name):
     """``merge_by_pk`` of a parquet batch into a table partitioned on one
-    column: the partition-scoped merge, its full-rewrite fallback (past
+    column: the partition-scoped merge, its whole-table form (past
     MAX_PRUNED_PARTITIONS) and the cold start each stay within their job
     and stage budgets."""
     base, batch, path = (str(tmp_path / n) for n in ("base", "batch", "t"))
@@ -68,6 +69,49 @@ def test_merge_by_pk_job_budget(spark, tmp_path, monkeypatch, job_counts, path_n
             monkeypatch.setattr(writers, "MAX_PRUNED_PARTITIONS", 0)
         got = job_counts(lambda: merge(batch))
     jobs, stages = BUDGETS[path_name]
+    assert got.jobs <= jobs and got.stages <= stages, got
+
+
+CDC_SCHEMA = "id int, op string, seq long, v string"
+
+#: writer -> (jobs, stages) of a batch into an existing unpartitioned
+#: table. Each reads the table with its schema from one footer, so none
+#: runs a schema inference job (one more each for ``merge_by_pk_evolve``,
+#: ``apply_cdc_by_pk`` and ``insert_if_absent`` when they inferred it).
+#: ``merge_by_pk`` (the path of every library caller) and
+#: ``merge_by_pk_evolve``: the deduplicated batch's checkpoint (2), then
+#: ``_rewrite_table``'s checkpoint of the merged rows and its write (3).
+#: ``apply_cdc_by_pk``: the reconcile's checkpoint and its write.
+#: ``insert_if_absent``: one append, which checkpoints nothing.
+UNPARTITIONED_BUDGETS = {
+    "merge_by_pk": (5, 5),
+    "merge_by_pk_evolve": (5, 5),
+    "apply_cdc_by_pk": (5, 5),
+    "insert_if_absent": (3, 3),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(UNPARTITIONED_BUDGETS))
+def test_unpartitioned_writer_job_budget(spark, tmp_path, job_counts, writer):
+    """Each table-state writer of an unpartitioned table, given a parquet
+    batch of updates, inserts and a delete for a table it made from a
+    40-row cold start, stays within its job and stage budgets."""
+    base, batch, path = (str(tmp_path / n) for n in ("base", "batch", "t"))
+    spark.createDataFrame(
+        [(i, "U", 1, f"v{i}") for i in range(40)], CDC_SCHEMA
+    ).repartition(4).write.parquet(base)
+    spark.createDataFrame(
+        [(0, "U", 2, "A"), (1, "U", 2, "B"), (2, "D", 2, None), (100, "I", 2, "C")], CDC_SCHEMA
+    ).coalesce(1).write.parquet(batch)
+    call = {
+        "merge_by_pk": lambda df: writers.merge_by_pk(spark, df, path, ["id"]),
+        "merge_by_pk_evolve": lambda df: writers.merge_by_pk_evolve(spark, df, path, ["id"]),
+        "apply_cdc_by_pk": lambda df: writers.apply_cdc_by_pk(spark, df, path, ["id"]),
+        "insert_if_absent": lambda df: writers.insert_if_absent(spark, df, path),
+    }[writer]
+    call(spark.read.schema(CDC_SCHEMA).parquet(base))
+    got = job_counts(lambda: call(spark.read.schema(CDC_SCHEMA).parquet(batch)))
+    jobs, stages = UNPARTITIONED_BUDGETS[writer]
     assert got.jobs <= jobs and got.stages <= stages, got
 
 

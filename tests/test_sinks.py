@@ -336,6 +336,39 @@ def test_writers_release_blocks_and_restore_conf(spark, tmp_path, monkeypatch):
         assert dict(spark.conf.getAll) == conf, name
 
 
+def test_unpartitioned_rewrites_release_blocks_when_the_write_fails(spark, tmp_path, monkeypatch):
+    """The static overwrites of unpartitioned tables (``_rewrite_table``
+    behind ``merge_by_pk`` without ``partition_by``, ``merge_by_pk_evolve``
+    and ``apply_cdc_by_pk``) release every checkpoint they took when their
+    write raises, and leave the table's files as they were."""
+    from pyspark.sql import DataFrameWriter
+
+    from etl_java_spark.sinks import writers
+
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    cdc = spark.createDataFrame([(1, "U", 1, "a")], "id int, op string, seq long, v string")
+    calls = {
+        "merge": lambda p: merge_by_pk(spark, rows, p, ["id"]),
+        "evolve": lambda p: writers.merge_by_pk_evolve(spark, rows, p, ["id"]),
+        "cdc": lambda p: writers.apply_cdc_by_pk(spark, cdc, p, ["id"]),
+    }
+    for name, call in calls.items():
+        call(str(tmp_path / name))
+    before = {name: _partition_files(str(tmp_path / name)) for name in calls}
+    jsc = spark.sparkContext._jsc
+    n = jsc.getPersistentRDDs().size()
+
+    def boom(self, *a, **k):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "save", boom)
+    for name, call in calls.items():
+        with pytest.raises(RuntimeError, match="write failed"):
+            call(str(tmp_path / name))
+        assert jsc.getPersistentRDDs().size() == n, name
+        assert _partition_files(str(tmp_path / name)) == before[name], name
+
+
 def test_merge_by_pk_one_file_per_written_partition(spark, tmp_path, monkeypatch):
     """Partitioned table-state writes are optimized writes: after the cold
     start, a partition-scoped merge and a full rewrite, every partition
@@ -511,6 +544,48 @@ def test_merge_by_pk_empty_batch_changes_nothing(spark, tmp_path):
     before = _partition_files(path)
     merge_by_pk(spark, spark.createDataFrame([], schema), path, ["id"], partition_by=["part"])
     assert _partition_files(path) == before
+
+
+def test_merge_by_pk_after_empty_partitioned_cold_start(spark, tmp_path):
+    """An empty batch into a missing partitioned table leaves a root with
+    no partition directory and no data file: a table with no rows. The
+    next merge stores its batch there as a cold start would, instead of
+    failing to infer a schema from the empty root on every later merge."""
+    path = str(tmp_path / "t")
+    schema = "id int, v string, part string"
+    merge_by_pk(spark, spark.createDataFrame([], schema), path, ["id"], partition_by=["part"])
+    assert os.path.isdir(path) and _stored(path) == {}
+    batch = spark.createDataFrame([(1, "a", "p"), (2, "b", "q"), (2, "b", "q")], schema)
+    merge_by_pk(spark, batch, path, ["id"], partition_by=["part"])
+    assert _stored(path) == {"part=p": [(1, "a")], "part=q": [(2, "b")]}
+    merge_by_pk(spark, spark.createDataFrame([(2, "B", "q")], schema), path, ["id"],
+                partition_by=["part"])
+    assert _stored(path) == {"part=p": [(1, "a")], "part=q": [(2, "B")]}
+
+
+def test_merge_by_pk_partitioned_into_flat_table_raises(spark, tmp_path):
+    """A table with data files at its root and no partition directory is
+    not partitioned on ``partition_by``: a partitioned merge into it
+    raises ValueError and leaves every file as it was, instead of laying
+    the table out again by partition."""
+    import hashlib
+
+    path = str(tmp_path / "t")
+    schema = "id int, v string, part string"
+    merge_by_pk(spark, spark.createDataFrame([(1, "a", "p")], schema), path, ["id"])
+
+    def files():
+        return {
+            n: hashlib.md5(open(os.path.join(path, n), "rb").read()).hexdigest()
+            for n in os.listdir(path)
+        }
+
+    before = files()
+    with pytest.raises(ValueError, match="partition"):
+        merge_by_pk(spark, spark.createDataFrame([(2, "b", "q")], schema), path, ["id"],
+                    partition_by=["part"])
+    assert files() == before
+    assert _rows(spark.read.parquet(path)) == [(1, "a", "p")]
 
 
 def test_leaf_data_schema_matches_spark_inference(spark, tmp_path):
