@@ -50,7 +50,7 @@ def copurchase_lift(
     # Four consumers (basket count, item counts, both pair-join sides):
     # materialize the deduped/capped fact once instead of re-shuffling it
     # per consumer.
-    it = it.persist()
+    it = materialize(it)
     n_baskets = it.agg(F.countDistinct("__b").alias("__nb"))
     item_counts = it.groupBy("__i").agg(F.count("*").alias("__ni"))
     a, b = it.alias("a"), it.alias("b")

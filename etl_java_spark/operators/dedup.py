@@ -143,17 +143,17 @@ def _shared_shingle_counts(
     Shingles in more than ``max_shingle_freq`` docs are dropped from the
     join (see :func:`_drop_hot_keys`); their contribution to
     ``__common`` is lost, the sizes still count them."""
-    # Materialized once (inv + sizes both read it), and the inverted
-    # index is EXPLICITLY hash-partitioned on the shingle: the pair
-    # self-join's CPU cost is the fan-out of the equi-join output, far
-    # larger than its input bytes, so AQE's size-based coalesce would
-    # otherwise funnel the whole join through 1-2 tasks (measured 4x on
-    # a 5k-doc corpus). A user-specified repartition is exempt from
-    # coalescing and both join sides reuse it — no extra shuffle.
+    # The inverted index is EXPLICITLY hash-partitioned on the shingle:
+    # the pair self-join's CPU cost is the fan-out of the equi-join
+    # output, far larger than its input bytes, so AQE's size-based
+    # coalesce would otherwise funnel the whole join through 1-2 tasks
+    # (measured 4x on a 5k-doc corpus). A user-specified repartition is
+    # exempt from coalescing and both join sides reuse it — no extra
+    # shuffle.
     sets_df = df.select(
         F.col(id_col),
         F.array_distinct(word_shingles(text_col, shingle_n, token_pattern)).alias("__set"),
-    ).filter(F.size("__set") > 0).persist()
+    ).filter(F.size("__set") > 0)
     par = df.sparkSession.sparkContext.defaultParallelism
     inv = sets_df.select(F.col(id_col), F.explode("__set").alias("__sh"))
     inv = _drop_hot_keys(inv, ["__sh"], max_shingle_freq).repartition(par, "__sh")
@@ -411,14 +411,8 @@ def jaccard_verify(
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    # Materialize the candidate shingle sets ONCE: both sides of the pair
-    # join reference this frame, and exchange reuse across the two rename
-    # chains is not guaranteed. Candidates are orders of magnitude smaller
-    # than the corpus, so the checkpoint is cheap at any scale.
-    sets_df = (
-        df.join(cand_ids, on=id_col, how="left_semi")
-        .select(F.col(id_col), F.array_distinct(word_shingles(text_col, shingle_n)).alias("__set"))
-        .persist()
+    sets_df = df.join(cand_ids, on=id_col, how="left_semi").select(
+        F.col(id_col), F.array_distinct(word_shingles(text_col, shingle_n)).alias("__set")
     )
     j = (
         pairs.join(sets_df.withColumnRenamed(id_col, "id_a").withColumnRenamed("__set", "set_a"), "id_a")

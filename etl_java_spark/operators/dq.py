@@ -826,13 +826,8 @@ def t_closeness(
     qs = [F.col(c) for c in quasi_cols]
     sv = F.col(sensitive_col)
     # ONE raw-data aggregation; every margin (categories, global counts,
-    # total, group sizes) reduces from the categorical-bounded cell
-    # table, materialized once
-    cells = (
-        df.groupBy(*qs, sv.alias("__sv"))
-        .agg(F.count("*").alias("__cgj"))
-        .persist()
-    )
+    # total, group sizes) reduces from the categorical-bounded cell table
+    cells = df.groupBy(*qs, sv.alias("__sv")).agg(F.count("*").alias("__cgj"))
     catg = (
         cells.groupBy("__sv")
         .agg(F.sum("__cgj").alias("__cj"))

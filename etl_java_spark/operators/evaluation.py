@@ -345,9 +345,6 @@ def conformal_coverage(
         F.sum("__cal").cast("long").alias("__nc"),
         F.sum(F.lit(1) - F.col("__cal")).cast("long").alias("__nt"),
     )
-    # three consumers (cumulative, totals, coverage) — materialize the
-    # distinct-score table once instead of re-scanning the raw data
-    per = per.persist()
     w = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, 0)
     cum = per.select(
         "__s", "__nc", "__nt", F.sum("__nc").over(w).alias("__cum")
@@ -495,9 +492,6 @@ def mutual_information(df: DataFrame, x_col, y_col) -> DataFrame:
     cells = df.groupBy(x.alias("__x"), y.alias("__y")).agg(
         F.count("*").alias("__c")
     )
-    # four consumers (margins x2, total, join) over a categorical-
-    # bounded table — materialize once, never re-scan the raw data
-    cells = cells.persist()
     mx = cells.groupBy("__x").agg(F.sum("__c").alias("__nx"))
     my = cells.groupBy("__y").agg(F.sum("__c").alias("__ny"))
     tot = cells.agg(F.sum("__c").alias("__n"))
@@ -522,7 +516,6 @@ def mutual_information(df: DataFrame, x_col, y_col) -> DataFrame:
             * F.log(F.col("__ny").cast("double") / nd)
         ).alias("__ty"),
     )
-    terms = terms.persist()  # 3 consumers, cell-bounded
     # entropies fold over DISTINCT margin terms (one per x / per y),
     # MI over all cells — each in sorted order
     mi_fold = F.aggregate(
@@ -1487,12 +1480,8 @@ def spearman_corr(
     the doubling cancels. Returns one row: (n_rows, rho) with rho
     rounded to 12.
     """
-    # pinned: base feeds both rank maps AND the join-back — without the
-    # checkpoint the source scans three times
-    base = (
-        df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
-        .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
-        .persist()
+    base = df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y")).filter(
+        F.col("x").isNotNull() & F.col("y").isNotNull()
     )
 
     def rank_map(col: str, out: str) -> DataFrame:

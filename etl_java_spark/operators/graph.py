@@ -31,45 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.checkpoints import make_checkpointer, materialize, release
+from ..plans.checkpoints import make_checkpointer, materialize, pin, release
 
 
 def out_degrees(edges: DataFrame, src: str = "src") -> DataFrame:
     """(src, outdeg) — one map-side-combinable count shuffle."""
     return edges.groupBy(src).agg(F.count("*").alias("outdeg"))
-
-
-def _pin(df: DataFrame, *keys: str) -> DataFrame:
-    """Materialize a STATIC per-round join side hash-partitioned on its
-    round-join key and keep it cached (the q389 LPA discipline — guide
-    §2.4, operations keyed the same way share one exchange):
-    InMemoryTableScan preserves the user-specified repartition's
-    outputPartitioning, so every round's equi-join on ``keys`` reads
-    the table with NO per-round Exchange. A checkpoint can NOT do this
-    — LogicalRDD surfaces UnknownPartitioning under AQE, re-exchanging
-    the big side every round. Fault tolerance is lineage recompute
-    (fine for a once-built static table; per-round STATE keeps its
-    checkpoint treatment). Costs one extra build-time shuffle of the
-    table, repaid after the first round. Callers ``release()`` it when
-    iteration ends — safe because every returned frame is
-    checkpoint-materialized first.
-
-    Scope (r13): used by PAGERANK ONLY. r12 extended the pin family-
-    wide; the r13 quiet-box paired A/B (3 reps, controls in-session,
-    corroborating both r12 full-bench records and the driver's run)
-    kept it only where it wins: pagerank 3.94s pinned vs 5.46s
-    per-round-ckpt at sf0.1, but eigenvector 5.26 vs 3.93, hits 6.09
-    vs 4.43, katz 2.86 vs 2.92 (flat warm, +27% in the full bench),
-    ppr 4.04 vs 4.04 (flat warm, +15% in the full bench) — those four
-    went back to ckpt'd static sides + per-round materialization. At
-    100 TB (rank vector too big to broadcast) the pin argument still
-    holds for all five — but the measured local numbers decide the
-    default, and pagerank is the only operator where they agree with
-    the theory. Callers that pin again must bring a paired A/B.
-    """
-    p = df.repartition(*[F.col(k) for k in keys]).persist()
-    p.count()
-    return p
 
 
 def _canonical_und(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -129,7 +96,7 @@ def pagerank(
     # Static per-round join sides PINNED on their round-join keys (r12,
     # guide §2.4): the edge table reads exchange-free in every round's
     # rank join, the node set in every round's left join-back.
-    nodes = _pin(
+    nodes = pin(
         e.select(F.col("e_src").alias("node"))
         .unionByName(e.select(F.col("e_dst").alias("node")))
         .distinct(),
@@ -137,7 +104,7 @@ def pagerank(
     )
     deg = e.groupBy("e_src").agg(F.count("*").alias("outdeg"))
     # (src, dst, outdeg) — static over iterations, pinned on the join key
-    ed = _pin(e.join(deg, "e_src"), "e_src")
+    ed = pin(e.join(deg, "e_src"), "e_src")
     ranks = nodes.withColumn("rank", F.lit(1.0))
     for it in range(iterations):
         contribs = (
@@ -273,7 +240,7 @@ def personalized_pagerank(
     # Static sides ckpt'd once, rounds materialized per iteration — NOT
     # pinned (r13 revert of the r12 family-wide pin): the full bench
     # had ppr +15% with the pin while the warm A/B was flat (4.04s
-    # both ways); see _pin's scope note for the family-wide numbers.
+    # both ways); see pin's scope note for the family-wide numbers.
     base = ckpt(
         nodes.join(seed_flag, "node", "left").select(
             "node", F.coalesce(F.col("seed"), F.lit(0.0)).alias("seed")
@@ -624,7 +591,7 @@ def hits(
 
     NOT pinned (r13 revert of the r12 twin-pin): 6.09s pinned vs
     4.43s per-round-ckpt in the quiet-box A/B, and the twin pin
-    doubled edge-cache storage — see _pin's scope note.
+    doubled edge-cache storage — see pin's scope note.
     """
     if iterations < 1:
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
@@ -909,22 +876,11 @@ def label_propagation(
     """
     held: list[DataFrame] = []
     ckpt = make_checkpointer(held)
-    # The (large) edge list is hash-partitioned on the per-round join
-    # key ONCE and persisted: InMemoryTableScan keeps the cached plan's
-    # outputPartitioning, so every sweep's edge-vs-label sort-merge
-    # join reads it exchange-free — one edge shuffle total across all
-    # ``rounds`` sweeps instead of one per sweep. (A checkpoint would
-    # NOT work here: LogicalRDD surfaces UnknownPartitioning under AQE,
-    # re-exchanging per round. Fault tolerance is lineage recompute —
-    # fine for this once-built table; only the per-round labels need
-    # lineage capping, which keeps the ckpt treatment below.)
-    ed = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .distinct()
-        .repartition("s")
-        .persist()
-    )
-    ed.count()  # eager: materialize the one edge shuffle up front
+    # The (large) edge list is pinned on the per-round join key ONCE:
+    # every sweep's edge-vs-label sort-merge join reads it exchange-free
+    # — one edge shuffle total across all ``rounds`` sweeps instead of
+    # one per sweep.
+    ed = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct(), "s")
     nodes = (
         ed.select(F.col("s").alias("node"))
         .unionByName(ed.select(F.col("d").alias("node")))
@@ -1124,7 +1080,7 @@ def katz_centrality(
 
     NOT pinned (r13 revert of the r12 family-wide pin): +27% in the
     full bench, flat warm (2.86s pinned vs 2.92s per-round-ckpt) —
-    see _pin's scope note.
+    see pin's scope note.
     """
     held: list[DataFrame] = []
     ckpt = make_checkpointer(held)
@@ -1269,7 +1225,7 @@ def eigenvector_centrality(
     Returns (node, raw_score, score).
 
     NOT pinned (r13 revert of the r12 family-wide pin): 5.26s pinned
-    vs 3.93s per-sweep-ckpt in the quiet-box A/B — see _pin's note.
+    vs 3.93s per-sweep-ckpt in the quiet-box A/B — see pin's note.
     """
     if iterations < 1:
         raise ValueError(

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
+
 __all__ = [
     "association_rules",
     "item_cosine_neighbors",
@@ -54,22 +56,15 @@ _D38 = "decimal(38,0)"
 def _baskets(tx: DataFrame, basket_col: str, item_col: str) -> DataFrame:
     """Distinct (basket, item) membership — presence, not quantity.
 
-    Persisted (r12/r13): three consumers (item counts, the pruned
-    pair join, the basket total) each re-ran the caller's fact join +
+    Materialized (r12): three consumers (item counts, the pruned pair
+    join, the basket total) each re-ran the caller's fact join +
     distinct — the per-job profile showed the same ~0.7s upstream job
-    twice per query. The first consuming action materializes it once.
-    persist() rather than localCheckpoint (r13, advisor): lineage is
-    kept, so an executor loss recomputes instead of failing the job,
-    and the blocks are LRU-evictable instead of accumulating across a
-    long session. No unpersist: the result is returned lazily, so the
-    consumer's action runs after this function exits.
+    twice per query.
     """
-    return (
+    return materialize(
         tx.select(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
 
 
@@ -79,12 +74,11 @@ def _pair_counts(
     """A-priori-pruned co-occurrence: returns (pair counts with
     item_a < item_b, per-item basket counts). The support prune runs
     BEFORE the within-basket self-join (the level-1 A-priori cut)."""
-    # metadata-sized; persisted because it feeds the prune semi-join
-    # AND two marginal broadcasts (r12; persist over localCheckpoint
-    # r13 — see _baskets)
-    item_n = b.groupBy("item").agg(
-        F.count("*").cast("long").alias("item_n")
-    ).persist()
+    # metadata-sized; materialized because it feeds the prune semi-join
+    # AND two marginal broadcasts (r12)
+    item_n = materialize(
+        b.groupBy("item").agg(F.count("*").cast("long").alias("item_n"))
+    )
     frequent = b.join(
         F.broadcast(
             item_n.filter(F.col("item_n") >= int(min_item_n)).select("item")

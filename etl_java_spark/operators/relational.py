@@ -24,6 +24,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.checkpoints import materialize
 from .dedup import _pair_join
 
 
@@ -1308,12 +1309,9 @@ def abc_xyz_analysis(
             F.sum("q").cast("long").alias("q"),
         )
     )
-    # item-grain; persisted (r12): the revenue total and the ranked
+    # item-grain; materialized (r12): the revenue total and the ranked
     # window otherwise each re-run the (item, period) aggregate over
     # the full input (profile: two ~1.2s twin jobs per query).
-    # persist() over localCheckpoint (r13, advisor): keeps lineage so
-    # an executor loss recomputes instead of failing, and blocks are
-    # evictable (no unpersist possible — returned lazily).
     items = per.groupBy("item").agg(
         F.sum("rev").cast("long").alias("rev"),
         F.count("*").cast("long").alias("n_p"),
@@ -1321,7 +1319,7 @@ def abc_xyz_analysis(
         F.sum((F.col("q").cast(d38) * F.col("q")).cast(d38))
         .cast(d38)
         .alias("sq2"),
-    ).persist()
+    ).transform(materialize)
     tot = items.agg(F.sum("rev").cast("long").alias("rev_tot"))
     w = Window.orderBy(F.col("rev").desc(), F.col("item"))
     ranked = (

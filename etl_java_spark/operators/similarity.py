@@ -1026,7 +1026,7 @@ def confident_label_noise(
     Returns (given_label, suggested_label, n).
     """
     cvec = _fixed_order_centroids(df, vec_col, id_col, label_col)
-    scored = (
+    scored = materialize(
         df.select(
             F.col(id_col), F.col(label_col).alias("given_label"), F.col(vec_col)
         )
@@ -1037,7 +1037,6 @@ def confident_label_noise(
             F.col("__lab").alias("cand_label"),
             cosine(F.col(vec_col), F.col("__cvec")).alias("__cos"),
         )
-        .persist()
     )
     thresholds = (
         scored.filter(F.col("given_label") == F.col("cand_label"))

@@ -1,9 +1,10 @@
 """Materialization has one owner (etl_java_spark/plans/checkpoints.py).
 
 Spark-free: scans the package source with ``ast``. Every other module
-materializes through ``materialize``/``make_checkpointer`` and releases
-through ``release``, and the local-vs-reliable choice is the session's
-``spark.checkpoint.dir``, not a per-operator option."""
+materializes through ``materialize``/``make_checkpointer``, caches only
+through ``pin`` and releases through ``release``, and the
+local-vs-reliable choice is the session's ``spark.checkpoint.dir``, not a
+per-operator option."""
 
 from __future__ import annotations
 
@@ -28,9 +29,10 @@ def test_only_the_checkpoints_module_materializes_or_releases():
         for node in ast.walk(tree)
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
-        and node.func.attr in {"localCheckpoint", "checkpoint", "unpersist"}
+        and node.func.attr
+        in {"localCheckpoint", "checkpoint", "persist", "cache", "unpersist"}
     ]
-    assert not bad, "materialize/release through plans/checkpoints.py:\n" + "\n".join(bad)
+    assert not bad, "materialize/pin/release through plans/checkpoints.py:\n" + "\n".join(bad)
 
 
 def test_no_public_function_declares_checkpoint_dir():

@@ -153,21 +153,26 @@ CHAIN = [(i, " ".join(f"w{t}" for t in range(3 * i, 3 * i + 24))) for i in range
 
 #: operator -> (jobs, stages), each with its result collected. MinHash:
 #: one signature exchange read by both the bucket-size count and the
-#: pair join (15 when each planned its own). Clusters: 6 rounds of 5
-#: jobs plus the edge list; the convergence probe rides on each round's
-#: checkpoint job (46 with a probe job pair per round).
+#: pair join (15 when each planned its own), and the verify's shingle
+#: sets planned inside its one query (13 when they were persisted).
+#: Clusters: 6 rounds of 5 jobs plus the edge list; the convergence
+#: probe rides on each round's checkpoint job (46 with a probe job pair
+#: per round). N-gram Jaccard: one query over the shingle sets (17 when
+#: they were persisted).
 DEDUP_BUDGETS = {
-    "minhash_dedup_pairs": (13, 13),
+    "minhash_dedup_pairs": (10, 10),
     "dedup_clusters": (34, 34),
     "brute_force_topk": (4, 4),
+    "ngram_jaccard_pairs": (7, 7),
 }
 
 
 @pytest.mark.parametrize("op", sorted(DEDUP_BUDGETS))
 def test_near_duplicate_job_budget(spark, tmp_path, job_counts, op):
     """The near-duplicate path of a dedup pass on a 6-doc chain, read
-    from parquet: MinHash pairs, their clusters, and the brute-force
-    top-k over the docs' embeddings each stay within their budgets."""
+    from parquet: MinHash pairs, their clusters, the brute-force top-k
+    over the docs' embeddings and the all-pairs n-gram Jaccard each stay
+    within their budgets."""
     path = str(tmp_path / "docs")
     spark.createDataFrame(
         [(i, t, [float(i), 1.0, float(i % 3)]) for i, t in CHAIN],
@@ -184,6 +189,9 @@ def test_near_duplicate_job_budget(spark, tmp_path, job_counts, op):
         ).collect(),
         "brute_force_topk": lambda: similarity.brute_force_topk(
             docs, docs.filter(F.col("doc_id") < 2), "embedding", "doc_id", k=2
+        ).collect(),
+        "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(
+            docs, "text", "doc_id", threshold=0.7
         ).collect(),
     }
     got = job_counts(calls[op])

@@ -444,14 +444,14 @@ def test_pagerank_round_reads_pinned_edges(spark):
 
     from pyspark.sql import functions as F
 
-    from etl_java_spark.operators.graph import _pin
+    from etl_java_spark.plans.checkpoints import pin
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
     )
     e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
     deg = e.groupBy("e_src").agg(F.count("*").alias("outdeg"))
-    ed = _pin(e.join(deg, "e_src"), "e_src")
+    ed = pin(e.join(deg, "e_src"), "e_src")
     try:
         ranks = (
             ed.select(F.col("e_src").alias("node"))
